@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .functions.ckpt import ckpt
 from .operators import behavior_model as bm
 from .operators import session_analysis as sa
 from .operators.area_products import area_top3_products
@@ -62,28 +63,26 @@ def _users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_session_module(
-    spark: SparkSession, sf_dir: str, params: TaskParams,
-    cache_shared: bool = False,
+    spark: SparkSession, sf_dir: str, params: TaskParams
 ) -> dict[str, DataFrame]:
     """Module 1 (UserVisitSessionAnalyzeSpark.main:57-238) — all five
     output tables from one shared filtered-session frame.
 
-    `cache_shared=True` persists the sessionized frame
-    (MEMORY_AND_DISK) so the five outputs pay the events scan + the
-    user-window shuffle ONCE instead of five times — the reference
-    does the same with `sessionid2detailRDD.persist`
-    (UserVisitSessionAnalyzeSpark.java:186).  Leave it off when the
-    outputs are run far apart or the frame outsizes cluster memory;
-    the caller owns unpersist."""
-    actions = _actions_in_range(spark, sf_dir, params)
-    if cache_shared:
-        from pyspark import StorageLevel
-
-        actions = actions.persist(StorageLevel.MEMORY_AND_DISK)
+    Every frame with more than one consumer goes through a lazy
+    `ckpt`, so the events scan and each shuffle behind it run ONCE
+    however many outputs read it — the reference's
+    `sessionid2detailRDD.persist` (UserVisitSessionAnalyzeSpark.java:186):
+    * `actions` (ranged, sessionized) — session_stats, top10_categories,
+      session_detail, top10_category_sessions;
+    * `filtered` — session_aggr_stat, session_random_extract;
+    * `chosen` — its own output table and session_detail;
+    * `top_cats` — its own output table and top10_category_sessions.
+    `sessions` has one consumer and stays a plain plan."""
+    actions = ckpt(_actions_in_range(spark, sf_dir, params))
     sessions = sa.session_stats(actions)
-    filtered = sa.filter_sessions(sessions, _users(spark, sf_dir), params)
-    chosen = sa.session_random_extract(filtered, total=params.extract_count)
-    top_cats = sa.top10_categories(actions)
+    filtered = ckpt(sa.filter_sessions(sessions, _users(spark, sf_dir), params))
+    chosen = ckpt(sa.session_random_extract(filtered, total=params.extract_count))
+    top_cats = ckpt(sa.top10_categories(actions))
     return {
         "session_aggr_stat": sa.session_aggr_stat(filtered),
         "session_random_extract": chosen,
@@ -157,20 +156,13 @@ def run_task(
     task_json: str,
     sf_dir: str,
     modules: tuple[str, ...] = ("session", "page", "area"),
-    cache_shared: bool = False,
 ) -> dict[str, DataFrame]:
     """The spark-submit entry: reference-format task_param JSON in,
-    every requested module's output tables out.  `cache_shared`
-    persists module 1's shared session frame across its five
-    outputs (see run_session_module)."""
+    every requested module's output tables out."""
     params = TaskParams.from_task_json(task_json)
     out: dict[str, DataFrame] = {}
     for name in modules:
-        fn = MODULES[name]
-        if name == "session":
-            out.update(fn(spark, sf_dir, params, cache_shared=cache_shared))
-        else:
-            out.update(fn(spark, sf_dir, params))
+        out.update(MODULES[name](spark, sf_dir, params))
     return out
 
 

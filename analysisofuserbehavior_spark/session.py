@@ -267,8 +267,23 @@ def streaming_checkpoint_location(spark: SparkSession, path: str) -> str:
     if enabled == "true":
         return path
     import tempfile
+    from urllib.parse import unquote, urlparse
 
-    norm = os.path.abspath(path.removeprefix("file:"))
+    url = urlparse(path)
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        local = unquote(url.path)
+    elif not url.scheme and not url.netloc:
+        local = path
+    else:
+        raise ValueError(
+            f"streaming checkpoint {path!r} (scheme {url.scheme!r}, "
+            f"authority {url.netloc!r}) is not a local path, but this "
+            "session runs with checkpoint-file checksums DISABLED — only "
+            "local ephemeral scratch may skip them.  Set "
+            "SPARK_GRAFT_CKPT_CHECKSUM=true (before session creation) "
+            "for durable checkpoints."
+        )
+    norm = os.path.abspath(local)
     bases = [*_SCRATCH_DIRS, "/dev/shm", tempfile.gettempdir()]
     env_scratch = os.environ.get("SPARK_GRAFT_SCRATCH")
     if env_scratch:

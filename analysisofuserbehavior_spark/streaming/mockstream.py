@@ -6,10 +6,10 @@ Reference: util/MockRealTimeData.java:35-51 — a thread emitting one
 fixed 5-entry list, city from a fixed 2-city-per-province map,
 userid in [0,1000), adid in [0,10).
 
-The rebuild rides Structured Streaming's rate source instead of an
-external producer thread: the rate source supplies a monotonically
-increasing row index (`value`) and an event timestamp at the
-configured rows-per-second, and every randomised pick is replaced by
+The rebuild rides Structured Streaming's rate-micro-batch source
+instead of an external producer thread: the source supplies a
+monotonically increasing row index (`value`) and an event timestamp
+fixed per batch, and every randomised pick is replaced by
 a DETERMINISTIC hash of that index (xxhash64 with a distinct seed per
 field).  That keeps the generator purely declarative — no Python
 callback per row, no driver-side thread — and makes tests
@@ -68,22 +68,6 @@ def ad_click_wire_rows(raw: DataFrame) -> DataFrame:
             _pick(F.col("value"), 4, 10).cast("string"),
         ).alias("value")
     )
-
-
-def mock_ad_click_stream(
-    spark: SparkSession, rows_per_second: int = 10, num_partitions: int = 1
-) -> DataFrame:
-    """The unbounded generator: rate source at the reference's ~10
-    rows/s cadence (Thread.sleep(100), MockRealTimeData.java:46) →
-    wire strings.  Pipe into `parse_ad_click_wire` for the typed
-    stream the ad module consumes."""
-    raw = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .option("numPartitions", num_partitions)
-        .load()
-    )
-    return ad_click_wire_rows(raw)
 
 
 def mock_ad_click_micro_batches(

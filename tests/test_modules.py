@@ -47,11 +47,19 @@ def test_run_task_produces_reference_output_tables(spark, sf_dir):
 
 
 def test_run_task_date_filter_pushes_to_scan(spark, sf_dir):
-    from analysisofuserbehavior_spark import plans
+    """The task's date range reaches the parquet scan of the frame
+    run_session_module checkpoints, and none of the five outputs scans
+    events itself: they all read that one checkpointed scan."""
+    from analysisofuserbehavior_spark import modules, plans
+    from analysisofuserbehavior_spark.params import TaskParams
 
-    out = run_task(spark, TASK_JSON, sf_dir, modules=("session",))
-    pushed = " ".join(plans.pushed_filters(out["session_aggr_stat"]))
+    params = TaskParams.from_task_json(TASK_JSON)
+    shared = modules._actions_in_range(spark, sf_dir, params)
+    pushed = " ".join(plans.pushed_filters(shared))
     assert "GreaterThanOrEqual(ts," in pushed, pushed
+    out = run_task(spark, TASK_JSON, sf_dir, modules=("session",))
+    for name, df in out.items():
+        assert "events.parquet" not in plans.formatted_plan(df), name
 
 
 def test_run_active_module(spark, sf_dir):
@@ -105,18 +113,35 @@ def test_run_page_module_range_pushes_to_scan(spark, sf_dir):
     assert "GreaterThanOrEqual(ts," in pushed, pushed
 
 
-def test_run_task_cache_shared_is_result_invariant(spark, sf_dir):
-    """cache_shared only changes WHERE the shared session frame
-    lives (persisted vs recomputed per output) — never the results."""
-    cold = run_task(spark, TASK_JSON, sf_dir, modules=("session",))
-    hot = run_task(spark, TASK_JSON, sf_dir, modules=("session",), cache_shared=True)
-    try:
-        for name in cold:
-            a = sorted(map(tuple, cold[name].collect()))
-            b = sorted(map(tuple, hot[name].collect()))
-            assert a == b, name
-    finally:
-        spark.catalog.clearCache()
+def test_run_task_session_outputs_match_uncheckpointed_plans(spark, sf_dir):
+    """Checkpointing module 1's shared frames changes only how often
+    they are computed, never the results: the five outputs equal the
+    same session_analysis calls composed over plain plans.  The outputs
+    are sunk in reverse order, so each checkpointed frame is first
+    materialized by a downstream consumer rather than by its own
+    output table."""
+    from analysisofuserbehavior_spark import modules
+    from analysisofuserbehavior_spark.operators import session_analysis as sa
+    from analysisofuserbehavior_spark.params import TaskParams
+
+    params = TaskParams.from_task_json(TASK_JSON)
+    actions = modules._actions_in_range(spark, sf_dir, params)
+    sessions = sa.session_stats(actions)
+    filtered = sa.filter_sessions(sessions, modules._users(spark, sf_dir), params)
+    chosen = sa.session_random_extract(filtered, total=params.extract_count)
+    top_cats = sa.top10_categories(actions)
+    plain = {
+        "session_aggr_stat": sa.session_aggr_stat(filtered),
+        "session_random_extract": chosen,
+        "session_detail": sa.session_detail(actions, chosen),
+        "top10_category": top_cats,
+        "top10_session": sa.top10_category_sessions(actions, top_cats),
+    }
+    out = run_task(spark, TASK_JSON, sf_dir, modules=("session",))
+    assert list(out) == list(plain)
+    for name in reversed(list(out)):
+        got = sorted(map(tuple, out[name].collect()))
+        assert got == sorted(map(tuple, plain[name].collect())), name
 
 
 def test_shared_scan_results_identical(spark, sf_dir):

@@ -6,6 +6,7 @@ tools/stress_containment_skew.py runs the 10× version)."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 from analysisofuserbehavior_spark.operators.dedup import dedup_contained_docs
 
@@ -122,3 +123,32 @@ def test_checkpoint_guard_couples_checksums_to_ephemeral_paths(spark, tmp_path):
         )
     finally:
         spark.conf.set(key, "false")
+
+
+@pytest.mark.parametrize(
+    "uri, refusal",
+    [
+        ("file:{tmp}/c", None),
+        ("file://{tmp}/c", None),
+        ("file://localhost{tmp}/c", None),
+        ("file:/srv/warehouse/stream_ckpt", "not under an ephemeral"),
+        ("file://otherhost{tmp}/c", "authority 'otherhost'"),
+        ("hdfs://namenode:8020{tmp}/c", "scheme 'hdfs'"),
+        ("s3a://bucket/ckpt", "scheme 's3a'"),
+    ],
+)
+def test_checkpoint_guard_parses_uris(spark, uri, refusal):
+    """Checkpoint locations given as URIs: a `file:` URI with an empty
+    or `localhost` authority is judged by its path; any other scheme
+    or authority is not local ephemeral scratch, and the refusal names
+    it instead of testing a mangled local path."""
+    import tempfile
+
+    from analysisofuserbehavior_spark.session import streaming_checkpoint_location
+
+    path = uri.format(tmp=tempfile.gettempdir())
+    if refusal is None:
+        assert streaming_checkpoint_location(spark, path) == path
+    else:
+        with pytest.raises(ValueError, match=refusal):
+            streaming_checkpoint_location(spark, path)

@@ -359,7 +359,7 @@ def test_mock_wire_rows_match_reference_universe(spark):
     12,18-22,42): city always belongs to the picked province, userid
     in [0,1000), adid in [0,10), and the string round-trips through
     parse_ad_click_wire losslessly.  Batch frame stands in for the
-    rate source (identical expressions, no stream needed)."""
+    rate-micro-batch source (identical expressions, no stream needed)."""
     from analysisofuserbehavior_spark.streaming.ad_stream import parse_ad_click_wire
     from analysisofuserbehavior_spark.streaming.mockstream import (
         PROVINCE_CITIES,
