@@ -51,7 +51,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import qround
-from ..functions.ckpt import ckpt
+from ..functions.ckpt import ckpt, loop_scope
 
 SENTINEL = "\x1f"
 
@@ -132,25 +132,15 @@ def bpe_learn_merges(
     `min_count` prunes the Zipf tail from the vocab working set (see
     _word_vocab)."""
     words = ckpt(_word_vocab(docs, min_count))
-    # Loop-scoped shuffle sizing (round 12; same rationale as the CC
-    # fixpoint in dedup.py): each iteration is one pair-count shuffle
-    # over the |vocab|-row frame plus a 1-row argmax — with the
-    # session's core-count partitions AND adaptive re-planning, every
+    # Loop-scoped shuffle sizing (functions/ckpt.py::loop_scope): each
+    # iteration is one pair-count shuffle over the |vocab|-row frame
+    # plus a 1-row argmax — at the session's width with AQE on, every
     # iteration paid ~4 driver job rounds of pure latency for frames
-    # AQE has nothing to adapt on.  Width derives from the measured
-    # vocab size (the count is ~free — it also forces the lazy
-    # checkpoint ONCE, outside the timed iterations), so a 10⁸-word
-    # 100 TB vocab still gets wide shuffles.  Session confs restored
-    # in the finally.
+    # AQE has nothing to adapt on.  The count is ~free — it also
+    # forces the lazy checkpoint ONCE, outside the timed iterations.
     n_words = words.count()
-    conf = spark.conf
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    loop_parts = max(1, min(int(old_parts), 1 + n_words // 65_536))
     merges: list[tuple] = []
-    try:
-        conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        conf.set("spark.sql.adaptive.enabled", "false")
+    with loop_scope(spark, n_words):
         for rank in range(1, num_merges + 1):
             top = (
                 _pair_counts(words)
@@ -174,9 +164,6 @@ def bpe_learn_merges(
                     "cnt",
                 )
             )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_parts)
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
     # one-slice parallelize — see registry._small_df: avoids
     # defaultParallelism near-empty pickled partitions on every scan
     return spark.createDataFrame(

@@ -52,26 +52,26 @@ def clean_corpus(
 ) -> DataFrame:
     """Survivor docs with their stats: (doc_id, n_tokens, quality_score).
 
-    Stage outputs are lineage-truncated (`_ckpt_pairs`): the survivor
+    Stage outputs are lineage-truncated (`ckpt`): the survivor
     frames feed multiple downstream branches (the near-dup pair
     generator derives shingles, signatures AND sizes from its input;
     the final select joins stats back), and re-derived branches
     recompute — uncheckpointed, this plan scanned the corpus 13× at
     sf0.01; truncated, once per stage."""
-    from .text_analysis import _ckpt_pairs
+    from ..functions.ckpt import ckpt
 
-    stats = _ckpt_pairs(text_stats(docs))
+    stats = ckpt(text_stats(docs))
     quality_ids = stats.where(
         (F.col("quality_score") >= min_quality) & (F.col("n_tokens") >= min_tokens)
     ).select("doc_id")
-    survivors = _ckpt_pairs(docs.join(quality_ids, "doc_id", "left_semi"))
+    survivors = ckpt(docs.join(quality_ids, "doc_id", "left_semi"))
 
     exact_keep = (
         survivors.groupBy(F.md5(F.col("text")).alias("h"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    survivors = _ckpt_pairs(survivors.join(exact_keep, "doc_id", "left_semi"))
+    survivors = ckpt(survivors.join(exact_keep, "doc_id", "left_semi"))
 
     pair_fn = minhash_lsh_pairs if method == "minhash" else ngram_jaccard_pairs
     near_drop = (
@@ -188,7 +188,7 @@ def corpus_pipeline_e2e(
     shuffles beyond the stages' own; the survivor handoffs are
     left-semi equi joins on doc_id (AQE-eligible, broadcastable when
     a stage prunes hard).  Each stage's survivor frame is
-    lineage-truncated (`_ckpt_pairs` — lazy localCheckpoint, or a
+    lineage-truncated (`ckpt` — lazy localCheckpoint, or a
     reliable checkpoint under SPARK_GRAFT_PAIR_CKPT=reliable):
     downstream stages consume each survivor set through SEVERAL
     branches (canonical dedup re-derives its input for scoring and
@@ -210,10 +210,11 @@ def corpus_pipeline_e2e(
         step = stride
     from .dedup import exact_dedup_canonical
     from .packing import chunk_documents, pack_sequences
-    from .text_analysis import _ckpt_pairs, remove_dup_spans
+    from ..functions.ckpt import ckpt
+    from .text_analysis import remove_dup_spans
 
     gate = quality_gate_report(docs)
-    accepted = _ckpt_pairs(
+    accepted = ckpt(
         docs.join(
             gate.where(F.col("accepted")).select("doc_id"), "doc_id", "left_semi"
         )
@@ -221,8 +222,8 @@ def corpus_pipeline_e2e(
     keepers = exact_dedup_canonical(accepted).select(
         F.col("keep_id").alias("doc_id")
     )
-    kept = _ckpt_pairs(accepted.join(keepers, "doc_id", "left_semi"))
-    scrubbed = _ckpt_pairs(remove_dup_spans(kept).where(F.length("text") > 0))
+    kept = ckpt(accepted.join(keepers, "doc_id", "left_semi"))
+    scrubbed = ckpt(remove_dup_spans(kept).where(F.length("text") > 0))
     chunks = chunk_documents(
         scrubbed.select("doc_id", "text"), chunk_tokens=chunk_tokens, step=step
     )

@@ -644,11 +644,7 @@ class ClusterConvergenceError(RuntimeError):
     budget covers ~2^10-deep chains already."""
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    max_iterations: int = 16,
-    reliable_checkpoint_dir: str | None = None,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, max_iterations: int = 16) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id)
     with cluster_id = the MIN doc_id reachable through any chain of
     pairs.  Upgrades greedy pair-dropping to true transitive dup
@@ -673,31 +669,22 @@ def dedup_clusters(
     labels — a silently-unconverged result would let near-dup chains
     straddle a leakage-safe train/eval split downstream.
 
-    `reliable_checkpoint_dir` switches lineage truncation from
-    executor-local blocks (localCheckpoint — fast, but a lost
-    executor mid-loop kills the job because truncated lineage can't
-    recompute) to durable storage checkpoints — the right setting on
-    a long multi-round run over a real cluster; results are identical
+    Lineage truncation goes through `functions.ckpt.ckpt`, so on a
+    long multi-round run over a real cluster
+    SPARK_GRAFT_PAIR_CKPT=reliable (with a session checkpoint dir)
+    moves the round checkpoints to durable storage — a lost executor
+    mid-loop then no longer kills the job; results are identical
     (equality pytest-pinned)."""
+    from ..functions.ckpt import ckpt, loop_scope
+
     spark = pairs.sparkSession
-    if reliable_checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(reliable_checkpoint_dir)
-
-        def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-            return df.checkpoint(eager=eager)
-
-    else:
-
-        def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-            return df.localCheckpoint(eager=eager)
-
     # truncate the caller's pair pipeline BEFORE the symmetrization
     # union: its two branches (forward + flipped) are re-derived
     # subtrees, so without this the entire candidate-generation +
     # exact-verification pipeline executes twice (profiled at sf0.1
     # on the LSH feed: two identical ~27 s-executor-time stages, the
     # two heaviest stages of the whole query)
-    edges = ckpt(pairs.select("doc_a", "doc_b"))
+    edges = ckpt(pairs.select("doc_a", "doc_b"), eager=True)
     # undirected: propagate both ways
     sym = edges.unionByName(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -710,44 +697,18 @@ def dedup_clusters(
     # lineage MUST be truncated every round: without a checkpoint the
     # plan nests one level per iteration and analysis time explodes
     # exponentially (a 12-round run never finished planning)
-    sym = ckpt(sym)
-    labels = ckpt(labels)
-    # Size the loop's shuffle width to the LABEL frame, not the
-    # session default: each round is ~3 shuffles on a |nodes|-row
-    # frame, and with the session's 32 partitions a few-thousand-node
-    # graph pays rounds×shuffles×32 near-empty tasks of pure
-    # scheduling overhead (the round-8 bench profile: ~8 s of the
-    # 14 s query was this loop).  One partition per ~64k nodes keeps
-    # tasks meaningfully sized at cluster scale while collapsing the
-    # gate-scale loop to single-task rounds; the count is free — the
-    # eager checkpoint above already materialized `labels`.  The
-    # session conf is restored in the finally below (queries in this
-    # engine execute serially per session).
+    sym = ckpt(sym, eager=True)
+    labels = ckpt(labels, eager=True)
+    # Size the loop to the LABEL frame, not the session default
+    # (functions/ckpt.py::loop_scope); the count is free — the eager
+    # checkpoint above already materialized `labels`.
     n_nodes = labels.count()
-    conf = spark.conf
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), 1 + n_nodes // 65_536))
-    # AQE is scoped OFF for the loop body (restored below): adaptive
-    # re-planning materializes every shuffle as its own stage-job, so
-    # each round paid 6-8 driver round-trips for frames whose width
-    # the loop has ALREADY right-sized explicitly (loop_parts) — with
-    # a fixed |nodes|-row frame there is nothing for AQE to adapt,
-    # only per-job scheduling latency to pay: profiled 125 jobs /
-    # 12.3 s wall for embedding_dedup_clusters_lsh at sf0.1, almost
-    # all loop-round latency.  On a real cluster the same argument
-    # holds per round; the surrounding query keeps AQE for everything
-    # outside the loop.
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    try:
-        conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        conf.set("spark.sql.adaptive.enabled", "false")
-        if loop_parts < int(old_parts):
-            sym = ckpt(sym.repartition(loop_parts, "doc_b"))
-            labels = ckpt(labels.repartition(loop_parts, "doc_id"))
-        fixpoint = _cc_fixpoint_loop(sym, labels, max_iterations, ckpt)
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_parts)
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with loop_scope(spark, n_nodes) as loop_parts:
+        if loop_parts < session_parts:
+            sym = ckpt(sym.repartition(loop_parts, "doc_b"), eager=True)
+            labels = ckpt(labels.repartition(loop_parts, "doc_id"), eager=True)
+        fixpoint = _cc_fixpoint_loop(sym, labels, max_iterations)
     if fixpoint is None:
         raise ClusterConvergenceError(
             f"dedup_clusters did not reach the connected-components "
@@ -759,11 +720,13 @@ def dedup_clusters(
 
 
 def _cc_fixpoint_loop(
-    sym: DataFrame, labels: DataFrame, max_iterations: int, ckpt
+    sym: DataFrame, labels: DataFrame, max_iterations: int
 ) -> DataFrame | None:
     """Min-label + pointer-jump rounds until no label changes;
     returns the converged label frame, or None if the iteration
     budget ran out first."""
+    from ..functions.ckpt import ckpt
+
     for _ in range(max_iterations):
         neighbor_min = (
             sym.join(labels, sym.doc_b == labels.doc_id)

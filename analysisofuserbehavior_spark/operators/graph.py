@@ -5,10 +5,10 @@ from operators/page_flow.py, weights = transition counts).  The
 loop body is pure DataFrame algebra — join rank onto edges, weighted
 contribution sum, re-anchor on the node frame — so each iteration is
 one shuffle on `dst` plus a broadcast of the (tiny) rank-carrying
-node frame when AQE sizes it under the threshold; `localCheckpoint`
-truncates lineage every round exactly as
-operators/dedup.py::dedup_clusters does (at cluster scale swap for
-reliable `checkpoint` — same note as there).
+node frame when AQE sizes it under the threshold; `ckpt`
+(functions/ckpt.py) truncates lineage every round exactly as
+operators/dedup.py::dedup_clusters does, so every loop here honors
+the SPARK_GRAFT_PAIR_CKPT local|reliable lifecycle knob.
 
 Simplified-PageRank contract (mirrored expression-for-expression by
 the unrolled-CTE oracle): dangling-node mass is NOT redistributed —
@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import qround
+from ..functions.ckpt import ckpt
 
 
 def pagerank(
@@ -38,9 +39,7 @@ def pagerank(
     # references trans and nodes, and without this the upstream
     # edge derivation (for the page graph: a full events scan + the
     # session window) re-executes once per iteration — measured 5×
-    # the scan cost at 5 iterations.  localCheckpoint materializes
-    # them eagerly; at cluster scale use reliable checkpoint (same
-    # trade as dedup_clusters).
+    # the scan cost at 5 iterations.  Both are materialized eagerly.
     trans = (
         edges.join(out_w, src)
         .select(
@@ -48,13 +47,13 @@ def pagerank(
             F.col(dst).alias("_t"),
             (F.col(weight).cast("double") / F.col("_w_out")).alias("_p"),
         )
-        .localCheckpoint()
+        .transform(ckpt, eager=True)
     )
     nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint()
+        .transform(ckpt, eager=True)
     )
     n_nodes = nodes.agg(F.count(F.lit(1)).cast("double").alias("_n"))
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
@@ -83,7 +82,7 @@ def pagerank(
                     "rank"
                 ),
             )
-            .localCheckpoint(eager=False)
+            .transform(ckpt)
         )
     return ranks.select("node", qround(F.col("rank"), 6).alias("rank")).orderBy("node")
 
@@ -126,13 +125,19 @@ def bfs_depths(
     O(|E|) across all rounds, and no per-path state ever exists (the
     recursive-CTE oracle enumerates paths and relies on per-step
     dedup — fine for DuckDB on test SFs, but the path-free frontier
-    form is what survives a cyclic 100 TB graph).  `localCheckpoint`
-    pins each frontier so iteration plans don't re-derive the
-    upstream scan (same trade as pagerank/dedup_clusters; reliable
-    checkpoint at cluster scale).  The loop exits early on an empty
-    frontier — `max_depth` bounds rounds, it doesn't pad output."""
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).distinct().localCheckpoint()
-    visited = source.select("node").withColumn("depth", F.lit(0).cast("bigint")).localCheckpoint()
+    form is what survives a cyclic 100 TB graph).  `ckpt` pins each
+    frontier so iteration plans don't re-derive the upstream scan
+    (same trade as pagerank/dedup_clusters).  The loop exits early on
+    an empty frontier — `max_depth` bounds rounds, it doesn't pad
+    output."""
+    e = ckpt(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).distinct(),
+        eager=True,
+    )
+    visited = ckpt(
+        source.select("node").withColumn("depth", F.lit(0).cast("bigint")),
+        eager=True,
+    )
     frontier = visited
     # one job per round (round 13, same protocol as the CC fixpoint):
     # the frontier checkpoint is LAZY and the emptiness check a full
@@ -149,11 +154,11 @@ def bfs_depths(
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("depth", F.lit(d).cast("bigint"))
-            .localCheckpoint(eager=False)
+            .transform(ckpt)
         )
         if nxt.count() == 0:
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+        visited = ckpt(visited.unionByName(nxt))
         frontier = nxt
     return visited.orderBy("node")
 
@@ -176,8 +181,6 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # and oriented three more (both wedge sides + the closing join):
     # truncate each, or every branch re-derives the edge list from
     # the raw events (11 scans at sf0.01 before truncation)
-    from ..functions.ckpt import ckpt
-
     und = ckpt(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -248,9 +251,8 @@ def label_propagation(
     with map-side combine, then a per-node top-1 window over the
     ≤deg(node) label-sum rows.  The window partitions by NODE, so a
     hot label (giant community) never funnels through one task; the
-    label frame is |V| rows and `localCheckpoint` truncates the
-    iterative lineage exactly as pagerank does (reliable checkpoint
-    at cluster scale)."""
+    label frame is |V| rows and `ckpt` truncates the iterative
+    lineage exactly as pagerank does."""
     from pyspark.sql import Window
 
     both = (
@@ -262,13 +264,13 @@ def label_propagation(
                 F.col(dst).alias("_u"), F.col(src).alias("_v"), F.col(weight).alias("_w")
             )
         )
-        .localCheckpoint()
+        .transform(ckpt, eager=True)
     )
     labels = (
         both.select(F.col("_u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
+        .transform(ckpt, eager=True)
     )
     w_top = Window.partitionBy("_u").orderBy(F.desc("_lw"), F.asc("label"))
     for _ in range(rounds):
@@ -281,6 +283,6 @@ def label_propagation(
             neigh.withColumn("_rn", F.row_number().over(w_top))
             .where(F.col("_rn") == 1)
             .select(F.col("_u").alias("node"), "label")
-            .localCheckpoint(eager=False)
+            .transform(ckpt)
         )
     return labels.select("node", F.col("label").alias("community")).orderBy("node")

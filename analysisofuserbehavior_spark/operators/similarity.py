@@ -298,14 +298,16 @@ def kmeans_centroids(
     is a posexplode + avg keyed by (cluster, position) — one shuffle
     of |corpus|·dim scalars per round, which at 100 TB you would run
     on a sample (centroid quality needs only a representative
-    fraction, not the full corpus).  localCheckpoint truncates the
-    iterative lineage each round.
+    fraction, not the full corpus).  `ckpt` truncates the iterative
+    lineage each round.
 
     Returns (cluster_id, c_vec, c_norm).  Centroids are float means,
     so cross-engine SQL replay is NOT bit-stable (summation order);
     IVF built on k-means therefore carries a recall-floor test
     instead of a hash oracle — the default first-k seeding stays the
     oracle-replayable path."""
+    from ..functions.ckpt import ckpt
+
     v = _with_vec(embeddings, "vec_id", "v", "nv")
     cents = v.where(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cluster_id"),
@@ -332,7 +334,7 @@ def kmeans_centroids(
                 F.transform("pv", lambda s: s["val"]).alias("c_vec"),
             )
             .withColumn("c_norm", norm(F.col("c_vec")))
-            .localCheckpoint()
+            .transform(ckpt, eager=True)
         )
     return cents
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions import qround
+from ..functions.ckpt import ckpt
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 
@@ -43,28 +44,6 @@ def _spread_docs(docs: DataFrame, light: bool = False) -> DataFrame:
         docs.select("doc_id", "text"),
         min_bytes=LIGHT_WORK if light else None,
     )
-
-
-def _ckpt_pairs(df: DataFrame) -> DataFrame:
-    """Materialize a (doc, token/shingle) pair frame exactly once —
-    the LM family's alias of `functions.ckpt.ckpt` (see that module
-    for the full rationale: compute-once guarantee for re-derived
-    branches, AQE OptimizeSkewedJoin eligibility for truncated
-    aggregate outputs, exact post-materialization stats, and the
-    SPARK_GRAFT_PAIR_CKPT local|reliable lifecycle knob).
-
-    Why the LM family checkpoints BOTH its frames: the pair frame has
-    multiple consumers (corpus totals groupBy + the join-back), and
-    the totals frame feeds a join whose skew split AQE silently drops
-    if an aggregate sits between the shuffle and the join's sort.
-    The resulting checkpoint + groupBy partial agg + join-back shape
-    has no single-task hot key — unlike the key-partitioned window
-    sums it replaced, where a Zipf-head key ("the", a universal
-    boilerplate shingle) serializes onto one WindowExec task that AQE
-    cannot split."""
-    from ..functions.ckpt import ckpt
-
-    return ckpt(df)
 
 
 def quality_score_raw(toks: Column) -> Column:
@@ -274,9 +253,9 @@ def unigram_surprisal(docs: DataFrame) -> DataFrame:
     The cheap stand-in for a KenLM-style perplexity filter (the
     CCNet/Gopher quality signal): documents dominated by rare tokens
     score high, boilerplate scores low.  Scale design: the
-    explode+aggregate pair frame is built ONCE (localCheckpoint — see
-    `_ckpt_pairs` for why lineage truncation, not window sums, is the
-    scale-safe way to reuse it); corpus counts c(t) are a
+    explode+aggregate pair frame is built ONCE (`ckpt` — see the
+    comment in `bigram_surprisal` for why lineage truncation, not
+    window sums, is the scale-safe way to reuse it); corpus counts c(t) are a
     map-side-combined groupBy over that frame joined back onto it
     (AQE-skew eligible — no Zipf-head single-task window partition);
     the global total T = Σ c(t) = Σ |d| is a 1-row aggregate over a
@@ -284,12 +263,12 @@ def unigram_surprisal(docs: DataFrame) -> DataFrame:
     size(tokens)) — the only second scan, and a cheap one.  The two
     log2 calls and the final division are mirrored verbatim in the
     oracle; quantized 6 dp before output."""
-    pairs = _ckpt_pairs(
+    pairs = ckpt(
         _spread_docs(docs).select("doc_id", F.explode(_tokens()).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    counts = _ckpt_pairs(pairs.groupBy("token").agg(F.sum("tf").alias("c")))
+    counts = ckpt(pairs.groupBy("token").agg(F.sum("tf").alias("c")))
     with_c = pairs.join(counts, "token")
     total = docs.agg(
         F.sum(F.size(_tokens()).cast("bigint")).cast("double").alias("t_total")
@@ -325,9 +304,9 @@ def bigram_surprisal(docs: DataFrame) -> DataFrame:
     perplexity filter: word-salad documents (plausible unigrams,
     improbable transitions) score high here while passing the unigram
     screen.  Scale design — ONE corpus scan: the map-side-combined
-    (doc, bigram) → tf shuffle is localCheckpointed (`_ckpt_pairs`:
-    why lineage truncation beats both re-derived branches and
-    key-partitioned windows); the LM totals are then pure
+    (doc, bigram) → tf shuffle is checkpointed (`ckpt`; the comment
+    below says why lineage truncation beats both re-derived branches
+    and key-partitioned windows); the LM totals are then pure
     aggregations — c(w1 w2) is a groupBy over the pair frame, and the
     left-context total c(w1·) = Σ_w2 c(w1 w2) is derived from that
     distinct-bigram frame (vocab²-bounded, tiny next to the pair
@@ -345,20 +324,29 @@ def bigram_surprisal(docs: DataFrame) -> DataFrame:
             " ", F.element_at(F.col("_t"), i + 1), F.element_at(F.col("_t"), i + 2)
         ),
     )
-    pairs = _ckpt_pairs(
+    # Why the LM family checkpoints BOTH its frames: the pair frame
+    # has multiple consumers (corpus totals groupBy + the join-back),
+    # and the totals frame feeds a join whose skew split AQE silently
+    # drops if an aggregate sits between the shuffle and the join's
+    # sort.  The resulting checkpoint + groupBy partial agg +
+    # join-back shape has no single-task hot key — unlike the
+    # key-partitioned window sums it replaced, where a Zipf-head key
+    # ("the", a universal boilerplate shingle) serializes onto one
+    # WindowExec task that AQE cannot split.
+    pairs = ckpt(
         _spread_docs(docs).select("doc_id", toks.alias("_t"))
         .where(F.size("_t") >= 2)
         .select("doc_id", F.explode(grams).alias("bigram"))
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    counts = _ckpt_pairs(
+    counts = ckpt(
         pairs.groupBy("bigram")
         .agg(F.sum("tf").alias("c"))
         .withColumn("w1", F.split(F.col("bigram"), " ").getItem(0))
     )
     left = counts.groupBy("w1").agg(F.sum("c").alias("c_left"))
-    lm = _ckpt_pairs(counts.join(left, "w1").select("bigram", "c", "c_left"))
+    lm = ckpt(counts.join(left, "w1").select("bigram", "c", "c_left"))
     with_lm = pairs.join(lm, "bigram")
     scored = with_lm.groupBy("doc_id").agg(
         F.sum("tf").cast("bigint").alias("n_bigrams"),
@@ -404,7 +392,7 @@ def backoff_surprisal(docs: DataFrame, min_count: int = 2) -> DataFrame:
     backoff keeps singleton trigrams from all scoring alike.
 
     Scale design — ONE corpus scan, same shape as the rest of the
-    de-skewed family (`_ckpt_pairs`): the (doc, trigram) → tf pair
+    de-skewed family (`bigram_surprisal`): the (doc, trigram) → tf pair
     frame is checkpointed; ALL four LM statistics derive from the
     distinct-trigram counts frame (vocab³-bounded, tiny next to the
     pair frame) by splitting the trigram string and re-aggregating —
@@ -426,7 +414,7 @@ def backoff_surprisal(docs: DataFrame, min_count: int = 2) -> DataFrame:
             F.element_at(F.col("_t"), i + 3),
         ),
     )
-    pairs = _ckpt_pairs(
+    pairs = ckpt(
         _spread_docs(docs).select("doc_id", toks.alias("_t"))
         .where(F.size("_t") >= 3)
         .select("doc_id", F.explode(grams).alias("trigram"))
@@ -434,7 +422,7 @@ def backoff_surprisal(docs: DataFrame, min_count: int = 2) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     w = F.split(F.col("trigram"), " ")
-    c3 = _ckpt_pairs(
+    c3 = ckpt(
         pairs.groupBy("trigram")
         .agg(F.sum("tf").alias("c"))
         .select(
@@ -448,7 +436,7 @@ def backoff_surprisal(docs: DataFrame, min_count: int = 2) -> DataFrame:
     ctx = c3.groupBy("w1", "w2").agg(F.sum("c").alias("ctx3"))
     suf = c3.groupBy("w2", "w3").agg(F.sum("c").alias("suf2"))
     mid = c3.groupBy("w2").agg(F.sum("c").alias("mid1"))
-    lm = _ckpt_pairs(
+    lm = ckpt(
         c3.join(ctx, ["w1", "w2"])
         .join(suf, ["w2", "w3"])
         .join(mid, ["w2"])
@@ -494,7 +482,7 @@ def dup_ngram_coverage(docs: DataFrame, n: int = 3, min_df: int = 10) -> DataFra
 
     Scale design — ONE corpus scan: positional shingles keep
     multiplicity ((doc, shingle) → position count tf, one combined
-    shuffle), localCheckpointed (`_ckpt_pairs`: lineage truncation is
+    shuffle), checkpointed (`ckpt`: lineage truncation is
     what lets two branches reuse one exchange — Spark does not reuse
     re-derived aggregate branches' exchanges, measured); document
     frequency is a map-side-combined groupBy(shingle) count over that
@@ -513,14 +501,14 @@ def dup_ngram_coverage(docs: DataFrame, n: int = 3, min_df: int = 10) -> DataFra
             " ", *[F.element_at(F.col("_t"), i + j + 1) for j in range(n)]
         ),
     )
-    pairs = _ckpt_pairs(
+    pairs = ckpt(
         _spread_docs(docs).select("doc_id", toks.alias("_t"))
         .where(F.size("_t") >= n)
         .select("doc_id", F.explode(sh).alias("shingle"))
         .groupBy("doc_id", "shingle")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfs = _ckpt_pairs(pairs.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")))
+    dfs = ckpt(pairs.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")))
     with_df = pairs.join(dfs, "shingle")
     per_doc = with_df.groupBy("doc_id").agg(
         F.sum("tf").cast("bigint").alias("n_ngrams"),
@@ -548,7 +536,7 @@ def remove_dup_spans(docs: DataFrame, n: int = 3, min_df: int = 10) -> DataFrame
 
     Scale design, one corpus scan: positional n-gram starts
     ((doc, pos, shingle), multiplicity preserved) are
-    localCheckpointed (`_ckpt_pairs`) so both consumers read one
+    checkpointed (`ckpt`) so both consumers read one
     materialized frame → per-shingle distinct-doc frequency via two
     stacked map-side-combined aggregations (groupBy(shingle, doc)
     collapses occurrences, groupBy(shingle) counts docs — exact df,
@@ -566,7 +554,7 @@ def remove_dup_spans(docs: DataFrame, n: int = 3, min_df: int = 10) -> DataFrame
     # lambda re-splits the whole text per shingle element (O(n²) on
     # long docs — the _shingle_array pitfall; a 100k-token doc hangs)
     tok_base = _spread_docs(docs).select("doc_id", toks.alias("_t")).where(F.size("_t") >= n)
-    starts = _ckpt_pairs(
+    starts = ckpt(
         tok_base.select(
             "doc_id",
             F.posexplode(
@@ -580,7 +568,7 @@ def remove_dup_spans(docs: DataFrame, n: int = 3, min_df: int = 10) -> DataFrame
             ).alias("pos", "shingle"),
         )
     )
-    heavy = _ckpt_pairs(
+    heavy = ckpt(
         starts.groupBy("shingle", "doc_id")
         .agg(F.count(F.lit(1)).alias("_occ"))
         .groupBy("shingle")
@@ -762,13 +750,13 @@ def collocations_pmi(
             F.element_at(F.col("_t"), i + 2).alias("tok_b"),
         ),
     )
-    pair_occ = _ckpt_pairs(
+    pair_occ = ckpt(
         _spread_docs(docs, light=True).select(toks.alias("_t"))
         .where(F.size("_t") >= 2)
         .select(F.explode(grams).alias("g"))
         .select("g.tok_a", "g.tok_b")
     )
-    uni_occ = _ckpt_pairs(_spread_docs(docs).select(F.explode(toks).alias("tok")))
+    uni_occ = ckpt(_spread_docs(docs).select(F.explode(toks).alias("tok")))
     c_xy = pair_occ.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("c_xy"))
     c_w = uni_occ.groupBy("tok").agg(F.count(F.lit(1)).alias("c_w"))
     n_tok = uni_occ.agg(F.count(F.lit(1)).cast("double").alias("_n"))
@@ -830,7 +818,7 @@ def countmin_token_freq(
     token-count aggregate every LM query uses; the audit join
     broadcasts the top·depth probe rows.  At 100 TB you'd keep the
     4·1024-cell frame as the mergeable per-shard sketch state."""
-    occ = _ckpt_pairs(
+    occ = ckpt(
         _spread_docs(docs, light=True).select(F.explode(_tokens()).alias("tok"))
     )
     rows = list(range(depth))

@@ -9,7 +9,6 @@ this registry for the driver harness.
 from __future__ import annotations
 
 from collections.abc import Callable
-from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -17,7 +16,7 @@ from .operators import behavior_model as bm
 from .operators import session_analysis as sa
 from .functions import qround
 from .params import TaskParams
-from .session import scratch_dir, streaming_checkpoint_location
+from .session import scoped_conf, scratch_dir, streaming_checkpoint_location
 from .sources import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -126,25 +125,13 @@ def _small_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     )
 
 
-@_contextmanager
-def _stream_parts(spark: SparkSession, n: int = 8):
-    """Scope shuffle.partitions for a bounded foreachBatch run — the
-    state-capacity knob run_to_completion and BlacklistLoop.run apply
-    (streaming/ad_stream.py): per-batch aggregates over
-    dimension-sized state at the session's core-count width pay 32
-    near-empty tasks of scheduling overhead per aggregate per batch.
-    Results are partition-invariant; the prior value (or unset) is
-    restored on exit."""
-    parts_key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(parts_key, None)
-    spark.conf.set(parts_key, str(n))
-    try:
-        yield
-    finally:
-        if prev is not None:
-            spark.conf.set(parts_key, prev)
-        else:
-            spark.conf.unset(parts_key)
+# Bounded foreachBatch/stream runs scope shuffle.partitions to this
+# state-capacity width (the knob run_to_completion and
+# BlacklistLoop.run apply, streaming/ad_stream.py): per-batch
+# aggregates over dimension-sized state at the session's core-count
+# width pay 32 near-empty tasks of scheduling overhead per aggregate
+# per batch.  Results are partition-invariant.
+_STREAM_PARTS = {"spark.sql.shuffle.partitions": "8"}
 
 
 def _two_phase_replay_dir(work: str, phases: list[DataFrame]) -> str:
@@ -2350,7 +2337,7 @@ def q_streaming_user_click_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
             epoch_id,
         )
 
-    with _stream_parts(spark):
+    with scoped_conf(spark, _STREAM_PARTS):
         q = (
             read_event_stream(spark, f"{sf_dir}/events.parquet")
             .writeStream.foreachBatch(per_batch)
@@ -2433,7 +2420,7 @@ def q_streaming_upsert_crash_recovery(spark: SparkSession, sf_dir: str) -> DataF
         )
 
     sink.fail_after_stage_epoch = 1  # die mid-protocol on the 2nd batch
-    with _stream_parts(spark):
+    with scoped_conf(spark, _STREAM_PARTS):
         q1 = run()
         crashed = False
         try:
@@ -2509,7 +2496,7 @@ def q_streaming_scd2_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFra
         )
 
     sink.fail_after_stage_epoch = 1  # die mid-protocol on the CDC batch
-    with _stream_parts(spark):
+    with scoped_conf(spark, _STREAM_PARTS):
         q1 = run()
         crashed = False
         try:
@@ -2614,18 +2601,10 @@ def q_streaming_late_event_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executor time at sf0.1), vs 8 for identical results — the knob
     # is state capacity, not core count, and results are
     # partition-invariant (order-insensitive hash gate).
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key, None)
-    spark.conf.set(parts_key, "8")
-    try:
+    with scoped_conf(spark, _STREAM_PARTS):
         run()
         _os.replace(held, p2)  # phase 2 appears; same checkpoint
         run()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set(parts_key, prev_parts)
-        else:
-            spark.conf.unset(parts_key)
     # writer-fixed schema (the streaming sink above): declaring it
     # skips the read's schema-inference job
     rows = spark.read.schema("hour_start string, n bigint").parquet(out_dir).collect()
@@ -3534,7 +3513,7 @@ def q_scd2_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document — the classic distributed
     text-scoring pipeline: (doc,term) tf out of one explode+agg
-    shuffle, localCheckpointed (text_analysis._ckpt_pairs — lineage
+    shuffle, checkpointed (functions.ckpt.ckpt — lineage
     truncation lets the df branch and the join-back reuse one
     exchange; a key-partitioned window count would put a Zipf-head
     term's total on a single task); per-term document frequency is a
@@ -3546,16 +3525,17 @@ def q_doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort) and order by the QUANTIZED score (6 dp HALF_UP, mirrored
     in the oracle) + term so cross-engine float ULPs cannot flip
     ranks."""
-    from .operators.text_analysis import _ckpt_pairs, _spread_docs
+    from .functions.ckpt import ckpt
+    from .operators.text_analysis import _spread_docs
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _ckpt_pairs(
+    pairs = ckpt(
         _spread_docs(docs)
         .select("doc_id", F.explode(F.split("text", " ")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfs = _ckpt_pairs(pairs.groupBy("term").agg(F.count(F.lit(1)).alias("df")))
+    dfs = ckpt(pairs.groupBy("term").agg(F.count(F.lit(1)).alias("df")))
     with_df = pairs.join(dfs, "term")
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("_n"))
     scored = (
@@ -5478,6 +5458,7 @@ def q_streaming_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from datetime import datetime, timedelta
 
+    from .functions.ckpt import ckpt
     from .operators.text_analysis import cm_bucket
 
     width, depth, n_targets = 256, 4, 20
@@ -5535,7 +5516,7 @@ def q_streaming_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    with _stream_parts(spark):
+    with scoped_conf(spark, _STREAM_PARTS):
         q = (
             stream.writeStream.foreachBatch(sketch_batch)
             .option(
@@ -5593,7 +5574,7 @@ def q_streaming_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id")
         # materialize BEFORE the work dir (the sketch store) is removed
-        .localCheckpoint()
+        .transform(ckpt, eager=True)
     )
     shutil.rmtree(work, ignore_errors=True)
     return out
@@ -5611,6 +5592,7 @@ def q_page_reachability_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps it |E|·deg²-bounded; unbounded reachability at 100 TB stays
     on the path-free frontier form (operators/graph.py::bfs_depths,
     the gated page_bfs_depths)."""
+    from .functions.ckpt import ckpt
     from .operators.page_flow import page_splits
 
     splits = page_splits(_actions(spark, sf_dir), flow_col="page_id")
@@ -5625,7 +5607,7 @@ def q_page_reachability_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         # view once per recursion level, and unpinned each level would
         # re-run the events scan + session window behind it (the
         # pagerank loop-invariant rule applied to WITH RECURSIVE)
-        .localCheckpoint()
+        .transform(ckpt, eager=True)
     ).createOrReplaceTempView("page_edges_rcte")
     return spark.sql(
         """

@@ -18,6 +18,8 @@ set here once:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -240,6 +242,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(
+    spark: SparkSession, overrides: Mapping[str, str | int | None]
+) -> Iterator[None]:
+    """Override session confs for the body only — the engine's one
+    way to change a runtime conf temporarily.
+
+    Each non-None value is set on entry (None means "leave this key
+    alone", so callers can pass an optional knob straight through).
+    On exit — normal or by exception — each overridden key gets its
+    prior session value back, or is unset when it had none, so a
+    bounded run never leaks its width into later queries."""
+    prior: dict[str, str | None] = {}
+    try:
+        for key, value in overrides.items():
+            if value is None:
+                continue
+            prior[key] = spark.conf.get(key, None)
+            spark.conf.set(key, str(value))
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def streaming_checkpoint_location(spark: SparkSession, path: str) -> str:

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import os
 
-from ..session import streaming_checkpoint_location as _ckpt_loc
+from ..session import scoped_conf, streaming_checkpoint_location as _ckpt_loc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -252,19 +252,21 @@ def run_to_completion(
     executor-sized; at gate/bench SFs 8 is right-sized.  None keeps
     the session's current setting."""
     spark = agg.sparkSession
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    parts_key = "spark.sql.shuffle.partitions"
     if state_provider == "rocksdb":
         state_provider = (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         )
-    prev = spark.conf.get(conf_key, None) if state_provider else None
-    prev_parts = spark.conf.get(parts_key, None)
-    if state_provider:
-        spark.conf.set(conf_key, state_provider)
-    if state_partitions is not None:
-        spark.conf.set(parts_key, str(state_partitions))
-    try:
+    # both confs come back on exit, even when neither had a prior
+    # value — leaving the bounded-run override of 8 in place would
+    # shrink every subsequent batch query's parallelism session-wide
+    # (round-12 ADVICE)
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": state_provider,
+            "spark.sql.shuffle.partitions": state_partitions,
+        },
+    ):
         q = (
             agg.writeStream.outputMode(mode)
             .format("memory")
@@ -296,21 +298,6 @@ def run_to_completion(
                 any("rocksdb" in k.lower() for k in op.get("customMetrics", {}))
                 for op in state_ops
             ), "query did not execute on the RocksDB state store"
-    finally:
-        if state_provider:
-            if prev is not None:
-                spark.conf.set(conf_key, prev)
-            else:
-                spark.conf.unset(conf_key)
-        if state_partitions is not None:
-            # restore even when there was no prior value — leaving the
-            # bounded-run override of 8 in place would shrink every
-            # subsequent batch query's parallelism session-wide
-            # (round-12 ADVICE; same pattern as the provider conf)
-            if prev_parts is not None:
-                spark.conf.set(parts_key, prev_parts)
-            else:
-                spark.conf.unset(parts_key)
     return spark.table(query_name)
 
 
@@ -485,29 +472,18 @@ class BlacklistLoop:
         # ad_blacklist_feedback: 32-task stages at < 0.4 s total CPU).
         # Capacity knob, not a core-count constant — raise it when
         # per-batch state outgrows executor-sized partitions; results
-        # are partition-invariant.  Conf restored in the finally.
+        # are partition-invariant.  Conf restored on exit.
         spark = stream.sparkSession
-        parts_key = "spark.sql.shuffle.partitions"
-        prev_parts = spark.conf.get(parts_key, None)
-        if state_partitions is not None:
-            spark.conf.set(parts_key, str(state_partitions))
-        try:
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": state_partitions}
+        ):
             q = (
                 stream.writeStream.foreachBatch(self.process_batch)
-                .option(
-                    "checkpointLocation",
-                    _ckpt_loc(stream.sparkSession, checkpoint_dir),
-                )
+                .option("checkpointLocation", _ckpt_loc(spark, checkpoint_dir))
                 .trigger(availableNow=True)
                 .start()
             )
             q.awaitTermination()
-        finally:
-            if state_partitions is not None:
-                if prev_parts is not None:
-                    spark.conf.set(parts_key, prev_parts)
-                else:
-                    spark.conf.unset(parts_key)
 
 
 def run_ad_module(

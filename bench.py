@@ -526,6 +526,37 @@ _STDOUT_ANCHORS = (
 )
 
 
+def _fit_stdout_line(
+    line_obj: dict, timings: dict[str, float], limit: int = 1750
+) -> str:
+    """Fill line_obj["queries"] — anchors first (stable cross-round
+    set, slowest first), then the slowest of the rest — while the
+    compact JSON line fits a `limit`-char stdout-tail capture;
+    return that line.  `queries_shown` and `anchors_shown`
+    count what made it, so a line whose anchors alone overflow says
+    so instead of silently dropping the tail of the anchor set."""
+    anchored = sorted(
+        ((n, timings[n]) for n in _STDOUT_ANCHORS if n in timings),
+        key=lambda kv: -kv[1],
+    )
+    others = sorted(
+        ((n, s) for n, s in timings.items() if n not in _STDOUT_ANCHORS),
+        key=lambda kv: -kv[1],
+    )
+    ranked = anchored + others
+
+    def line(n: int) -> str:
+        line_obj["queries"] = dict(ranked[:n])
+        line_obj["queries_shown"] = n
+        line_obj["anchors_shown"] = min(n, len(anchored))
+        return json.dumps(line_obj, separators=(",", ":"))
+
+    n = 0
+    while n < len(ranked) and len(line(n + 1)) <= limit:
+        n += 1
+    return line(n)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -642,15 +673,15 @@ def main() -> None:
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
         f.write("\n")
-    kept: dict[str, float] = {}
     line_obj = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": kept,
+        "queries": {},
         "sf": sf_val,
         "queries_measured": len(timings),
         "queries_shown": 0,
+        "anchors_shown": 0,
         "detail": detail_name,
         # host-weather stamp so cross-round totals can be read
         # (VERDICT r10 #1): plan-heaviness lives in exec_metrics
@@ -659,24 +690,7 @@ def main() -> None:
         "loadavg": [noise["loadavg_start"], noise["loadavg_end"]],
         "cpu_canary_sec": noise["cpu_canary_sec"],
     }
-    compact = lambda: json.dumps(line_obj, separators=(",", ":"))
-    # anchors first (stable cross-round set), then the slowest of the
-    # rest while the line fits the driver's stdout-tail capture
-    anchored = [
-        (n, timings[n]) for n in _STDOUT_ANCHORS if n in timings
-    ]
-    anchored.sort(key=lambda kv: -kv[1])
-    others = sorted(
-        ((n, s) for n, s in timings.items() if n not in _STDOUT_ANCHORS),
-        key=lambda kv: -kv[1],
-    )
-    for name, sec in anchored + others:
-        kept[name] = sec
-        if len(compact()) > 1750:
-            del kept[name]
-            break
-    line_obj["queries_shown"] = len(kept)
-    print(compact())
+    print(_fit_stdout_line(line_obj, timings))
     spark.stop()
 
 

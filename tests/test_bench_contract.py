@@ -66,6 +66,33 @@ def test_bench_emits_one_valid_json_line():
     assert len(rec["loadavg"]) == 2
 
 
+def test_stdout_line_reports_truncated_anchor_set():
+    """When the anchors alone overflow the 1750-char stdout line the
+    trim must say how many made it (`anchors_shown`), keep the
+    slowest anchors, and show no non-anchor entry at all."""
+    import bench
+
+    anchors = bench._STDOUT_ANCHORS
+    timings = {n: 1000.0 + i + 0.123456 for i, n in enumerate(anchors)}
+    timings.update({f"extra_query_{i}": 5000.0 + i for i in range(10)})
+    line = bench._fit_stdout_line(
+        {"metric": "headline_queries_total", "queries": {}}, timings
+    )
+    rec = json.loads(line)
+    assert len(line) <= 1750
+    assert 0 < rec["anchors_shown"] < len(anchors)  # anchors overflowed
+    assert rec["queries_shown"] == rec["anchors_shown"] == len(rec["queries"])
+    assert set(rec["queries"]) <= set(anchors)
+    slowest = sorted(anchors, key=lambda n: -timings[n])
+    assert list(rec["queries"]) == slowest[: rec["anchors_shown"]]
+    # a roomy line shows every anchor, then the non-anchors
+    rec = json.loads(
+        bench._fit_stdout_line({"queries": {}}, timings, limit=10**6)
+    )
+    assert rec["anchors_shown"] == len(anchors)
+    assert rec["queries_shown"] == len(timings)
+
+
 # shuffle_write_bytes budgets for the 5 heaviest BENCH_r10 entries at
 # sf0.01 / local[8] (measured this round, ×~1.5 headroom).  Shuffle
 # bytes are PLAN-determined — same data, same plan, same bytes — so a

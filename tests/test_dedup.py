@@ -285,20 +285,20 @@ def test_incremental_neardup_is_cross_side_only(spark):
     assert admitted == [10, 11]
 
 
-def test_dedup_clusters_reliable_checkpoint_equals_local(spark, tmp_path):
-    """Durable-storage checkpointing is a fault-tolerance knob only —
+def test_dedup_clusters_reliable_checkpoint_equals_local(
+    spark, tmp_path, monkeypatch
+):
+    """Durable-storage checkpointing (SPARK_GRAFT_PAIR_CKPT=reliable
+    plus a session checkpoint dir) is a fault-tolerance knob only —
     labels are identical to the localCheckpoint path."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8), (10, 11), (11, 12), (12, 13)],
         "doc_a long, doc_b long",
     )
     local = {tuple(r) for r in dedup.dedup_clusters(pairs).collect()}
-    durable = {
-        tuple(r)
-        for r in dedup.dedup_clusters(
-            pairs, reliable_checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
-    }
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_CKPT", "reliable")
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    durable = {tuple(r) for r in dedup.dedup_clusters(pairs).collect()}
     assert durable == local
     assert {r for r in durable if r[0] in (10, 11, 12, 13)} == {
         (10, 10), (11, 10), (12, 10), (13, 10)

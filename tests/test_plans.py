@@ -426,7 +426,7 @@ def test_lm_family_single_build_no_key_partitioned_windows(
 ):
     """Round-6 de-skew of the text-quality family: each operator
     builds its (doc, token/shingle) pair frame ONCE — captured here
-    pre-localCheckpoint to pin exactly one Generate and one corpus
+    pre-checkpoint to pin exactly one Generate and one corpus
     scan in the build lineage — and computes corpus totals with
     map-side-combined groupBy + join-back onto the truncated frame.
     NO window may be partitioned by a raw token/shingle/term key: a
@@ -436,16 +436,20 @@ def test_lm_family_single_build_no_key_partitioned_windows(
     windows allowed downstream are doc_id-partitioned ranking windows
     (bounded by doc length); the only parquet rescan allowed is the
     no-explode 1-row total / raw-text rebuild join."""
+    from analysisofuserbehavior_spark.functions import ckpt as ckpt_mod
     from analysisofuserbehavior_spark.operators import text_analysis as ta
 
     captured: list = []
-    real_ckpt = ta._ckpt_pairs
+    real_ckpt = ckpt_mod.ckpt
 
-    def capturing(df):
+    def capturing(df, eager=False):
         captured.append(df)
-        return real_ckpt(df)
+        return real_ckpt(df, eager=eager)
 
-    monkeypatch.setattr(ta, "_ckpt_pairs", capturing)
+    # text_analysis binds `ckpt` at import; the registry's
+    # doc_tfidf_top_terms imports it from the module at call time
+    monkeypatch.setattr(ta, "ckpt", capturing)
+    monkeypatch.setattr(ckpt_mod, "ckpt", capturing)
     for name in (
         "unigram_surprisal",
         "bigram_surprisal",

@@ -1,11 +1,18 @@
 """Session-scoped hygiene contracts (round-12 ADVICE): the JVM tmpdir
 is per-process, sweep-registered, and self-healing after a crashed
 sibling; run_to_completion restores shuffle.partitions even when no
-prior value existed."""
+prior value existed; scoped session confs come back on the error path
+too; and the package keeps ONE entry point each for lineage
+truncation (functions/ckpt.py) and temporary conf overrides
+(session.scoped_conf)."""
 
 from __future__ import annotations
 
 import os
+import re
+from pathlib import Path
+
+import pytest
 
 from analysisofuserbehavior_spark import session as S
 
@@ -74,3 +81,64 @@ def test_dataframe_debugging_default_off_and_env_overridable(spark):
     import os
 
     assert os.environ.get("SPARK_GRAFT_DF_DEBUG", "false") == "false"
+
+
+def test_dedup_clusters_restores_loop_confs_on_convergence_error(spark):
+    """dedup_clusters narrows shuffle width and turns AQE off for its
+    loop; a budget-exhausted run must still hand both confs back."""
+    from analysisofuserbehavior_spark.operators.dedup import (
+        ClusterConvergenceError,
+        dedup_clusters,
+    )
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    # 64-deep path: one round of propagation + pointer jumping cannot
+    # collapse it
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(ClusterConvergenceError):
+        dedup_clusters(pairs, max_iterations=1).collect()
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_scoped_conf_unsets_unknown_key_when_body_raises(spark):
+    key = "spark.graft.test.scopedConfProbe"
+    parts = "spark.sql.shuffle.partitions"
+    parts_before = spark.conf.get(parts)
+    assert spark.conf.get(key, None) is None
+    with pytest.raises(RuntimeError, match="body failed"):
+        with S.scoped_conf(spark, {key: "on", parts: 3, "spark.graft.none": None}):
+            assert spark.conf.get(key) == "on"
+            assert spark.conf.get(parts) == "3"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(key, None) is None
+    assert spark.conf.get(parts) == parts_before
+    assert spark.conf.get("spark.graft.none", None) is None  # None = untouched
+
+
+_PKG = Path(__file__).resolve().parent.parent / "analysisofuserbehavior_spark"
+
+
+@pytest.mark.parametrize(
+    ("pattern", "owner"),
+    [
+        (r"\.localCheckpoint\(|\.checkpoint\(|setCheckpointDir", "functions/ckpt.py"),
+        (r"\bconf\.(set|unset)\(", "session.py"),
+    ],
+    ids=["lineage_truncation", "conf_override"],
+)
+def test_one_entry_point_per_mechanism(pattern, owner):
+    """Lineage truncation goes through functions.ckpt.ckpt and
+    temporary conf overrides through session.scoped_conf — a second
+    copy of either silently escapes the SPARK_GRAFT_PAIR_CKPT knob or
+    the restore-on-error contract."""
+    offenders = [
+        f"{path.relative_to(_PKG)}:{n}: {line.strip()}"
+        for path in sorted(_PKG.rglob("*.py"))
+        if path.relative_to(_PKG).as_posix() != owner
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(pattern, line)
+    ]
+    assert not offenders, offenders

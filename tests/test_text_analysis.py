@@ -272,11 +272,19 @@ def test_pair_ckpt_reliable_mode_same_results(spark, tmp_path, monkeypatch):
     """SPARK_GRAFT_PAIR_CKPT=reliable swaps localCheckpoint (executor
     blocks — lost with an executor) for a reliable checkpoint to the
     configured dir (survives executor loss at cluster scale).  Both
-    truncate lineage identically, so every LM-family result must be
+    truncate lineage identically, so every result must be
     bit-identical; with no checkpoint dir set the mode must refuse
-    with a clear message instead of Py4J-erroring mid-job."""
+    with a clear message instead of Py4J-erroring mid-job.  The knob
+    covers the LM family AND every iterative loop (pagerank, LPA, BFS,
+    k-means) — all truncate through functions.ckpt.ckpt."""
     import pytest
 
+    from analysisofuserbehavior_spark.operators.graph import (
+        bfs_depths,
+        label_propagation,
+        pagerank,
+    )
+    from analysisofuserbehavior_spark.operators.similarity import kmeans_centroids
     from analysisofuserbehavior_spark.operators.text_analysis import (
         backoff_surprisal,
         bigram_surprisal,
@@ -286,8 +294,28 @@ def test_pair_ckpt_reliable_mode_same_results(spark, tmp_path, monkeypatch):
         [(1, "a b c a b c a b c"), (2, "x y z q"), (3, "q b c")],
         "doc_id long, text string",
     )
-    base_bg = sorted(map(tuple, bigram_surprisal(docs).collect()))
-    base_bo = sorted(map(tuple, backoff_surprisal(docs).collect()))
+    edges = spark.createDataFrame(
+        [(0, 1, 2), (1, 2, 1), (2, 0, 1), (2, 3, 3), (3, 4, 1), (5, 6, 1)],
+        "src long, dst long, weight long",
+    )
+    source = spark.createDataFrame([(0,)], "node long")
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0 + i % 2]) for i in range(12)],
+        "vec_id long, embedding array<float>",
+    )
+    cases = {
+        "bigram_surprisal": lambda: bigram_surprisal(docs),
+        "backoff_surprisal": lambda: backoff_surprisal(docs),
+        "pagerank": lambda: pagerank(edges),
+        "label_propagation": lambda: label_propagation(edges),
+        "bfs_depths": lambda: bfs_depths(edges, source),
+        "kmeans_centroids": lambda: kmeans_centroids(emb, k=3, iters=2),
+    }
+
+    def rows(name):
+        return sorted(tuple(r) for r in cases[name]().collect())
+
+    base = {name: rows(name) for name in cases}
 
     monkeypatch.setenv("SPARK_GRAFT_PAIR_CKPT", "reliable")
     # another test in the shared session may have set a checkpoint
@@ -295,11 +323,12 @@ def test_pair_ckpt_reliable_mode_same_results(spark, tmp_path, monkeypatch):
     getattr(spark._jsc.sc(), "checkpointDir_$eq")(
         spark._jvm.scala.Option.empty()
     )
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        bigram_surprisal(docs).collect()
+    for name in cases:
+        with pytest.raises(ValueError, match="setCheckpointDir"):
+            rows(name)
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    assert sorted(map(tuple, bigram_surprisal(docs).collect())) == base_bg
-    assert sorted(map(tuple, backoff_surprisal(docs).collect())) == base_bo
+    for name in cases:
+        assert rows(name) == base[name], name
 
     monkeypatch.setenv("SPARK_GRAFT_PAIR_CKPT", "bogus")
     with pytest.raises(ValueError, match="local.*reliable"):
