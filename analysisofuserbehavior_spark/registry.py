@@ -16,8 +16,9 @@ from .operators import behavior_model as bm
 from .operators import session_analysis as sa
 from .functions import qround
 from .params import TaskParams
-from .session import scoped_conf, scratch_dir, streaming_checkpoint_location
+from .session import scratch_dir, streaming_checkpoint_location
 from .sources import load_table
+from .streaming.ad_stream import state_scope
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -123,15 +124,6 @@ def _small_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
-
-
-# Bounded foreachBatch/stream runs scope shuffle.partitions to this
-# state-capacity width (the knob run_to_completion and
-# BlacklistLoop.run apply, streaming/ad_stream.py): per-batch
-# aggregates over dimension-sized state at the session's core-count
-# width pay 32 near-empty tasks of scheduling overhead per aggregate
-# per batch.  Results are partition-invariant.
-_STREAM_PARTS = {"spark.sql.shuffle.partitions": "8"}
 
 
 def _two_phase_replay_dir(work: str, phases: list[DataFrame]) -> str:
@@ -2337,7 +2329,7 @@ def q_streaming_user_click_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
             epoch_id,
         )
 
-    with scoped_conf(spark, _STREAM_PARTS):
+    with state_scope(spark):
         q = (
             read_event_stream(spark, f"{sf_dir}/events.parquet")
             .writeStream.foreachBatch(per_batch)
@@ -2420,7 +2412,7 @@ def q_streaming_upsert_crash_recovery(spark: SparkSession, sf_dir: str) -> DataF
         )
 
     sink.fail_after_stage_epoch = 1  # die mid-protocol on the 2nd batch
-    with scoped_conf(spark, _STREAM_PARTS):
+    with state_scope(spark):
         q1 = run()
         crashed = False
         try:
@@ -2496,7 +2488,7 @@ def q_streaming_scd2_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFra
         )
 
     sink.fail_after_stage_epoch = 1  # die mid-protocol on the CDC batch
-    with scoped_conf(spark, _STREAM_PARTS):
+    with state_scope(spark):
         q1 = run()
         crashed = False
         try:
@@ -2593,15 +2585,9 @@ def q_streaming_late_event_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _audit.physical_section(q._jsq.explainInternal(True)),  # noqa: SLF001
             )
 
-    # right-size the STATE partition count for this bounded run the
-    # way run_to_completion does (streaming/ad_stream.py): the first
-    # run's shuffle.partitions is what the checkpoint pins for every
-    # state store; 32 instances × per-batch open/commit overhead is a
-    # fixed multi-second floor for KB of state (measured 57 s total
-    # executor time at sf0.1), vs 8 for identical results — the knob
-    # is state capacity, not core count, and results are
-    # partition-invariant (order-insensitive hash gate).
-    with scoped_conf(spark, _STREAM_PARTS):
+    # both runs under one scope: the first run's width is what the
+    # checkpoint pins for every state store
+    with state_scope(spark):
         run()
         _os.replace(held, p2)  # phase 2 appears; same checkpoint
         run()
@@ -4379,15 +4365,15 @@ def q_streaming_funnel_within_window(spark: SparkSession, sf_dir: str) -> DataFr
         .parquet(in_dir)
     )
     name = "sfunnel_" + sf_dir.strip("/").split("/")[-1].replace(".", "_")
-    # state_partitions=None: keep the SESSION width.  The 8-partition
-    # capacity knob is right for dimension-sized state (its per-store
-    # open/commit overhead dominates); the funnel's state is USER-sized
-    # (~|users| keys) and each key pays ~0.5 ms of python-boundary
-    # transport (per-key state JSON + pandas slicing, measured via the
-    # stage profile: 18.4 s exec / 3.4 s cpu at 8 partitions), so the
-    # state stage scales with width — A/B at sf0.1 local[32]:
-    # 4.35 s -> 3.15 s.  Session width follows $SPARK_GRAFT_CPUS, so
-    # the driver's lower-core runs keep their own right size.
+    # state_partitions=None: keep the SESSION width.  `state_scope`'s
+    # default cap of 8 is right for dimension-sized state (its
+    # per-store open/commit overhead dominates); the funnel's state is
+    # USER-sized (~|users| keys) and each key pays ~0.5 ms of
+    # python-boundary transport (per-key state JSON + pandas slicing,
+    # measured via the stage profile: 18.4 s exec / 3.4 s cpu at 8
+    # partitions), so the state stage scales with width — A/B at
+    # sf0.1 local[32]: 4.35 s -> 3.15 s.  Session width follows
+    # $SPARK_GRAFT_CPUS, so lower-core runs keep their own right size.
     updates = run_to_completion(
         funnel_levels_stream(stream), name, mode="update", state_partitions=None
     )
@@ -5516,7 +5502,7 @@ def q_streaming_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    with scoped_conf(spark, _STREAM_PARTS):
+    with state_scope(spark):
         q = (
             stream.writeStream.foreachBatch(sketch_batch)
             .option(

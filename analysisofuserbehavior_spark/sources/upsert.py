@@ -137,7 +137,7 @@ def _footer_max_epoch(path: str) -> int | None:
 
 
 def _load_state_epoch(
-    spark: SparkSession, schema: T.StructType, table_dir: str
+    spark: SparkSession, schema: T.StructType | str, table_dir: str
 ) -> tuple[DataFrame, int | None]:
     """`_load_state` that also returns max(applied_epoch) of the
     returned state (None = empty/no epochs), so per-batch sinks don't
@@ -147,7 +147,9 @@ def _load_state_epoch(
     return df, (None if epoch is None or epoch < 0 else epoch)
 
 
-def _load_state(spark: SparkSession, schema: T.StructType, table_dir: str) -> DataFrame:
+def _load_state(
+    spark: SparkSession, schema: T.StructType | str, table_dir: str
+) -> DataFrame:
     """Crash-safe state read for the staged-overwrite sinks.
 
     Distinguishes 'no table yet' (→ empty state) from a FAILED read
@@ -166,7 +168,7 @@ def _load_state(spark: SparkSession, schema: T.StructType, table_dir: str) -> Da
 
 
 def _load_state_impl(
-    spark: SparkSession, schema: T.StructType, table_dir: str
+    spark: SparkSession, schema: T.StructType | str, table_dir: str
 ) -> tuple[DataFrame, int | None]:
     epochs: dict[str, int] = {}
     uncommitted: list[str] = []
@@ -216,16 +218,22 @@ def _load_state_impl(
     # the very first batch crashed mid-staging write — no durable
     # history exists yet, so an empty state loses nothing and lets
     # the replayed epoch 0 recover without operator intervention.
-    # one-slice parallelize: bare createDataFrame spreads the empty
-    # frame over defaultParallelism phantom partitions that every
-    # first-batch union/aggregate scans as near-empty tasks, each
-    # paying a Python-worker round-trip (profiled ~0.2 s/task via
-    # ad_blacklist_feedback; .coalesce(1) is WORSE — its one merged
-    # task pays all 32 handshakes serially, measured 4-5 s/action)
-    return (
-        spark.createDataFrame(spark.sparkContext.parallelize([], 1), schema),
-        None,
+    return _empty_state(spark, schema), None
+
+
+def _empty_state(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """Zero-row frame with exactly the declared schema (names, types,
+    nullability), built JVM-side as an empty local relation: no Python
+    RDD, so no Python worker and no task ever reads it, and the
+    optimizer folds it out of the first batch's union."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    jspark = spark._jsparkSession  # noqa: SLF001 - py4j bridge is the API here
+    jdf = jspark.createDataFrame(
+        spark.sparkContext._jvm.java.util.ArrayList(),  # noqa: SLF001
+        jspark.parseDataType(schema.json()),
     )
+    return DataFrame(jdf, spark)
 
 
 class ParquetUpsertSink:

@@ -35,12 +35,15 @@ derives the same keys once, with the shared behavior-model columns.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from ..session import scoped_conf, streaming_checkpoint_location as _ckpt_loc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..functions import day_col, json_long
+from ..functions.ckpt import ckpt
 
 # Kafka JSON wire contract: `ts` travels as epoch-nanos long (the
 # producer-side encoding; converted to a timestamp on parse).
@@ -220,6 +223,50 @@ def sliding_click_trend(
     )
 
 
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+@contextmanager
+def state_scope(
+    spark: SparkSession, partitions: int | None = 8, provider: str | None = None
+) -> Iterator[None]:
+    """Scope the state width (and optionally the state-store provider)
+    of the bounded streams started in the body — the engine's one
+    stream-width policy.
+
+    Width is `min(partitions, session width)`, the session width being
+    its shuffle.partitions on entry.  Every state-store instance pays
+    a fixed ~0.1-0.5 s open/commit per micro-batch regardless of data
+    volume, and a symmetric hash join keeps FOUR stores per partition
+    (SCALING.md round 14): at a 32-core session's width a
+    dimension-sized state pays that floor 32 times per operator per
+    batch, and partitions beyond the task slots only add waves of it.
+    At gate/bench SFs 8 partitions hold the state comfortably; the
+    width a stream starts with is what its checkpoint pins forever,
+    so raise `partitions` when per-partition state outgrows an
+    executor.  Results are partition-invariant.  `partitions=None`
+    keeps the session width.
+
+    `provider` ("rocksdb" or a full provider class) pins the
+    state-store provider.  Both confs come back on exit, even when
+    neither had a prior value (`scoped_conf`)."""
+    key = "spark.sql.shuffle.partitions"
+    if partitions is not None:
+        partitions = min(partitions, int(spark.conf.get(key)))
+    with scoped_conf(
+        spark,
+        {
+            key: partitions,
+            "spark.sql.streaming.stateStore.providerClass": (
+                _ROCKSDB_PROVIDER if provider == "rocksdb" else provider
+            ),
+        },
+    ):
+        yield
+
+
 def run_to_completion(
     agg: DataFrame,
     query_name: str,
@@ -231,42 +278,17 @@ def run_to_completion(
     memory sink and return the final result as a batch DataFrame.
 
     `state_provider` ("rocksdb" or a full provider class) pins the
-    state-store provider for THIS query (set before start, restored
-    after) and asserts from the finished query's progress that the
-    stateful operators really executed on it — the 100 TB shape,
-    where HDFS-backed in-memory state caps at executor heap and
-    RocksDB spills keyed state to local disk with changelog
-    checkpointing.
+    state-store provider for THIS query and asserts from the finished
+    query's progress that the stateful operators really executed on
+    it — the 100 TB shape, where HDFS-backed in-memory state caps at
+    executor heap and RocksDB spills keyed state to local disk with
+    changelog checkpointing.
 
-    `state_partitions` right-sizes the STATE partition count for this
-    bounded run (shuffle.partitions at stream start is what the
-    checkpoint pins forever — it is a capacity knob sized to state
-    volume, not to core count).  Profiled on the stream-stream join
-    at sf0.1 (SCALING.md round 14): every state-store instance pays a
-    ~0.1-0.5 s per-micro-batch open/commit overhead regardless of
-    data volume, and a symmetric hash join keeps FOUR stores per
-    partition — 32 partitions ⇒ 128 instances ⇒ a fixed multi-second
-    floor per batch, vs ~32 instances at 8 partitions for identical
-    results (results are partition-invariant; only the overhead
-    moves).  At 100 TB you'd raise it to keep per-partition state
-    executor-sized; at gate/bench SFs 8 is right-sized.  None keeps
-    the session's current setting."""
+    `state_partitions` is the state width, capped at the session
+    width (`state_scope`, the one stream-width policy); None keeps
+    the session's width.  Both confs are restored on exit."""
     spark = agg.sparkSession
-    if state_provider == "rocksdb":
-        state_provider = (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        )
-    # both confs come back on exit, even when neither had a prior
-    # value — leaving the bounded-run override of 8 in place would
-    # shrink every subsequent batch query's parallelism session-wide
-    # (round-12 ADVICE)
-    with scoped_conf(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass": state_provider,
-            "spark.sql.shuffle.partitions": state_partitions,
-        },
-    ):
+    with state_scope(spark, state_partitions, state_provider):
         q = (
             agg.writeStream.outputMode(mode)
             .format("memory")
@@ -284,7 +306,7 @@ def run_to_completion(
                 query_name,
                 _audit.physical_section(q._jsq.explainInternal(True)),  # noqa: SLF001
             )
-        if state_provider and "RocksDB" in state_provider:
+        if state_provider and "rocksdb" in state_provider.lower():
             import json
 
             progresses = [
@@ -310,8 +332,19 @@ def province_top3_per_batch(
     its `WHERE rank>=3` bug (:840) fixed to `<=3`).  foreachBatch
     receives a BATCH DataFrame, so the full SQL surface (window
     functions included) applies; results land partitioned by epoch
-    for idempotent replay."""
-    udim = users.select("user_id", F.col("area").alias("province"))
+    for idempotent replay.
+
+    The user dimension is a SNAPSHOT taken at query start: it is
+    materialized once (`ckpt(..., eager=True)`) before the stream
+    starts, and every batch broadcasts those blocks instead of
+    re-deriving the customer ⋈ nation ⋈ region chain (three serial
+    broadcast jobs per batch).  A caller that needs dimension changes
+    to show up restarts the query.  Under SPARK_GRAFT_PAIR_CKPT=
+    reliable the session needs a checkpoint dir, as at every `ckpt`
+    site."""
+    udim = ckpt(
+        users.select("user_id", F.col("area").alias("province")), eager=True
+    )
 
     def run_batch(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
@@ -464,19 +497,14 @@ class BlacklistLoop:
         checkpoint_dir: str,
         state_partitions: int | None = 8,
     ) -> None:
-        # right-size the per-batch aggregate width exactly like
-        # run_to_completion's state knob: the delta/totals groupBys
-        # run per micro-batch over dimension-sized state, and at the
-        # session's core-count width each batch paid 32 near-empty
-        # tasks of scheduling overhead per aggregate (profiled via
+        # the per-batch delta/totals aggregates run over dimension-
+        # sized state: at the session's core-count width each batch
+        # paid 32 near-empty tasks per aggregate (profiled via
         # ad_blacklist_feedback: 32-task stages at < 0.4 s total CPU).
-        # Capacity knob, not a core-count constant — raise it when
-        # per-batch state outgrows executor-sized partitions; results
-        # are partition-invariant.  Conf restored on exit.
+        # `state_scope` is the one stream-width policy:
+        # min(state_partitions, session width), conf restored on exit.
         spark = stream.sparkSession
-        with scoped_conf(
-            spark, {"spark.sql.shuffle.partitions": state_partitions}
-        ):
+        with state_scope(spark, state_partitions):
             q = (
                 stream.writeStream.foreachBatch(self.process_batch)
                 .option("checkpointLocation", _ckpt_loc(spark, checkpoint_dir))

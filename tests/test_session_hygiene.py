@@ -3,11 +3,13 @@ is per-process, sweep-registered, and self-healing after a crashed
 sibling; run_to_completion restores shuffle.partitions even when no
 prior value existed; scoped session confs come back on the error path
 too; and the package keeps ONE entry point each for lineage
-truncation (functions/ckpt.py) and temporary conf overrides
-(session.scoped_conf)."""
+truncation (functions/ckpt.py), temporary conf overrides
+(session.scoped_conf) and bounded-stream width
+(streaming.ad_stream.state_scope)."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 from pathlib import Path
@@ -37,9 +39,34 @@ def test_jvm_tmpdir_is_per_process_and_sweep_registered(tmp_path, monkeypatch):
 
 
 def test_stream_run_restores_unset_shuffle_partitions(spark, tmp_path):
+    """run_to_completion's state width is min(state_partitions,
+    session width) — the state operators' progress reports it — and
+    the session's width comes back afterwards."""
+    import time
+
     from pyspark.sql import functions as F
+    from pyspark.sql.streaming import StreamingQueryListener
 
     from analysisofuserbehavior_spark.streaming.ad_stream import run_to_completion
+
+    class Widths(StreamingQueryListener):
+        def __init__(self):
+            self.by_name: dict[str, set[int]] = {}
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            self.by_name.setdefault(p.name, set()).update(
+                op.numShufflePartitions for op in p.stateOperators
+            )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
@@ -47,12 +74,25 @@ def test_stream_run_restores_unset_shuffle_partitions(spark, tmp_path):
     spark.range(10).select(
         F.col("id").alias("user_id"), F.lit(1).alias("n")
     ).write.parquet(src)
-    stream = (
-        spark.readStream.schema("user_id long, n int").parquet(src)
-        .groupBy("user_id").agg(F.sum("n").alias("total"))
-    )
-    out = run_to_completion(stream, "t_restore_parts", state_partitions=4)
-    assert out.count() == 10
+    widths = Widths()
+    spark.streams.addListener(widths)
+    try:
+        for session_parts, want in ((4, 4), (16, 8)):
+            stream = (
+                spark.readStream.schema("user_id long, n int").parquet(src)
+                .groupBy("user_id").agg(F.sum("n").alias("total"))
+            )
+            name = f"t_restore_parts_{session_parts}"
+            with S.scoped_conf(spark, {key: session_parts}):
+                out = run_to_completion(stream, name, state_partitions=8)
+                assert out.count() == 10
+                assert spark.conf.get(key) == str(session_parts)
+            deadline = time.monotonic() + 30
+            while not widths.by_name.get(name) and time.monotonic() < deadline:
+                time.sleep(0.1)  # the listener bus delivers asynchronously
+            assert widths.by_name.get(name) == {want}
+    finally:
+        spark.streams.removeListener(widths)
     assert spark.conf.get(key) == before
 
 
@@ -121,24 +161,49 @@ def test_scoped_conf_unsets_unknown_key_when_body_raises(spark):
 _PKG = Path(__file__).resolve().parent.parent / "analysisofuserbehavior_spark"
 
 
+def _owned_lines(owner: str) -> tuple[str, range | None]:
+    """(file, line span) an owner may use a mechanism in: a whole file
+    (`path`) or one function in it (`path::name`)."""
+    path, _, func = owner.partition("::")
+    if not func:
+        return path, None
+    tree = ast.parse((_PKG / path).read_text())
+    fn = next(
+        n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == func
+    )
+    return path, range(fn.lineno, fn.end_lineno + 1)
+
+
 @pytest.mark.parametrize(
-    ("pattern", "owner"),
+    ("pattern", "scope", "owner"),
     [
-        (r"\.localCheckpoint\(|\.checkpoint\(|setCheckpointDir", "functions/ckpt.py"),
-        (r"\bconf\.(set|unset)\(", "session.py"),
+        (
+            r"\.localCheckpoint\(|\.checkpoint\(|setCheckpointDir",
+            ("",),
+            "functions/ckpt.py",
+        ),
+        (r"\bconf\.(set|unset)\(", ("",), "session.py"),
+        (
+            r"[\"']spark\.sql\.shuffle\.partitions[\"']",
+            ("registry.py", "streaming/"),
+            "streaming/ad_stream.py::state_scope",
+        ),
     ],
-    ids=["lineage_truncation", "conf_override"],
+    ids=["lineage_truncation", "conf_override", "stream_width"],
 )
-def test_one_entry_point_per_mechanism(pattern, owner):
-    """Lineage truncation goes through functions.ckpt.ckpt and
-    temporary conf overrides through session.scoped_conf — a second
-    copy of either silently escapes the SPARK_GRAFT_PAIR_CKPT knob or
-    the restore-on-error contract."""
+def test_one_entry_point_per_mechanism(pattern, scope, owner):
+    """Lineage truncation goes through functions.ckpt.ckpt, temporary
+    conf overrides through session.scoped_conf, and bounded streams'
+    width through streaming.ad_stream.state_scope — a second copy of
+    any of them silently escapes the SPARK_GRAFT_PAIR_CKPT knob, the
+    restore-on-error contract, or the session-width cap."""
+    owner_path, owner_lines = _owned_lines(owner)
     offenders = [
-        f"{path.relative_to(_PKG)}:{n}: {line.strip()}"
+        f"{rel}:{n}: {line.strip()}"
         for path in sorted(_PKG.rglob("*.py"))
-        if path.relative_to(_PKG).as_posix() != owner
+        if (rel := path.relative_to(_PKG).as_posix()).startswith(scope)
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if re.search(pattern, line)
+        and not (rel == owner_path and (owner_lines is None or n in owner_lines))
     ]
     assert not offenders, offenders

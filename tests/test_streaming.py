@@ -163,8 +163,12 @@ def test_streaming_dedup_drops_replayed_events(spark, tmp_path):
 
 def test_province_top3_per_batch_sql(spark, sf_dir, tmp_path):
     """foreachBatch + SQL window top-3 (the transform+SQL pattern);
-    per-province ranks capped at 3 with the rank>=3 ref bug fixed."""
+    per-province ranks capped at 3 with the rank>=3 ref bug fixed,
+    over a user dimension materialized once before the stream."""
+    import re
+
     from analysisofuserbehavior_spark.operators import behavior_model as bm
+    from analysisofuserbehavior_spark.plans import audit as _audit
     from analysisofuserbehavior_spark.sources import load_table
     from analysisofuserbehavior_spark.streaming.ad_stream import (
         province_top3_per_batch,
@@ -179,10 +183,20 @@ def test_province_top3_per_batch_sql(spark, sf_dir, tmp_path):
     out = str(tmp_path / "top3_out")
     ckpt = str(tmp_path / "top3_ckpt")
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
-    province_top3_per_batch(stream, users, out, ckpt)
+    _audit.start_micro_batch_plan_capture()
+    try:
+        province_top3_per_batch(stream, users, out, ckpt)
+    finally:
+        captured = _audit.stop_micro_batch_plan_capture()
     got = spark.read.parquet(out)
     per_key = got.groupBy("day", "province", "epoch").count().collect()
     assert per_key and all(r["count"] <= 3 for r in per_key)
+    # the user dimension is built once at query start: no batch
+    # re-scans the customer/nation/region tables
+    plans = [plan for tag, plan in captured if tag == "province_top3_batch"]
+    assert plans
+    for plan in plans:
+        assert not re.search(r"FileScan[^\n]*(customer|nation|region)", plan), plan
 
 
 def test_watermark_drops_late_events(spark, tmp_path):

@@ -297,3 +297,31 @@ def test_load_state_tolerates_pre_created_empty_dir(spark, tmp_path):
     os.makedirs(d)
     schema = T.StructType().add("k", T.LongType()).add("applied_epoch", T.LongType())
     assert _load_state(spark, schema, d).count() == 0
+
+
+def test_first_batch_state_is_jvm_only_with_declared_schema(spark, tmp_path):
+    """With no state yet, `_load_state` returns an empty frame that
+    never touches a Python worker (no ExistingRDD scan of a Python
+    RDD in its executed plan) and carries the declared schema exactly
+    — names, types and nullability — whether declared as DDL or as a
+    StructType."""
+    from pyspark.sql import types as T
+
+    from analysisofuserbehavior_spark.plans.audit import executed_plan
+    from analysisofuserbehavior_spark.sources.upsert import _load_state
+
+    absent = str(tmp_path / "absent")
+    ddl = "day string, user_id long, click_count long, applied_epoch long"
+    struct = T.StructType(
+        [
+            T.StructField("day", T.StringType(), True),
+            T.StructField("click_count", T.LongType(), False),
+            T.StructField("valid_from", T.TimestampType(), True),
+            T.StructField("applied_epoch", T.LongType(), False),
+        ]
+    )
+    for declared, want in ((ddl, T.DataType.fromDDL(ddl)), (struct, struct)):
+        state = _load_state(spark, declared, absent)
+        assert "ExistingRDD" not in executed_plan(state)
+        assert state.schema == want
+        assert state.count() == 0
