@@ -52,6 +52,7 @@ from pyspark.sql.types import (
 
 from ..functions import qround
 from ..functions.ckpt import ckpt, loop_scope
+from ..sources import local_frame
 
 SENTINEL = "\x1f"
 
@@ -164,11 +165,7 @@ def bpe_learn_merges(
                     "cnt",
                 )
             )
-    # one-slice parallelize — see registry._small_df: avoids
-    # defaultParallelism near-empty pickled partitions on every scan
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(merges, 1), MERGE_SCHEMA
-    )
+    return local_frame(spark, merges, MERGE_SCHEMA)
 
 
 def bpe_encode_stats(

@@ -23,6 +23,7 @@ import zlib
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions import qround
+from ..sources import local_frame
 
 DEFAULT_QUERY_TERMS = ("spark", "join", "window", "stream")
 DEFAULT_INDEX_BUCKETS = 16
@@ -573,13 +574,7 @@ def bm25_prf_topk(
         .select("token")
     )
     spark = docs.sparkSession
-    # one-slice parallelize — see registry._small_df: avoids
-    # defaultParallelism near-empty pickled partitions riding into
-    # the scoring union
-    seed = spark.createDataFrame(
-        spark.sparkContext.parallelize([(t,) for t in query_terms], 1),
-        "token string",
-    )
+    seed = local_frame(spark, [(t,) for t in query_terms], "token string")
     return bm25_score_dynamic(docs, seed.unionByName(expansion), k=k)
 
 

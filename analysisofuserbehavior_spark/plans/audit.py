@@ -97,11 +97,12 @@ def single_partition_window_sorts(plan: str) -> list[str]:
 # executed micro-batch plans live in the StreamExecution (for
 # watermark/agg/join queries) or in foreachBatch bodies (for the
 # MERGE-style sinks).  This registry lets a test observe BOTH without
-# per-query instrumentation cost: `observe_micro_batch_plan` is called
-# from the two seams every streaming query funnels through
-# (streaming/ad_stream.py::run_to_completion captures the last
-# micro-batch's executed plan via explainInternal; the foreachBatch
-# sinks capture the plan of each frame they stage) and is a single
+# per-query instrumentation cost.  There is one seam:
+# streaming/ad_stream.py::run_bounded, the start of every bounded
+# stream, captures the last micro-batch's executed plan (via
+# explainInternal) when its caller passes a plan tag, and the
+# foreachBatch bodies, which pass none, capture the plan of each frame
+# they stage through `observe_micro_batch_frame`.  Each is a single
 # `is None` check when no capture is active.
 
 _MICRO_BATCH_PLANS: list[tuple[str, str]] | None = None

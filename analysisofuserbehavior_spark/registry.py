@@ -16,9 +16,10 @@ from .operators import behavior_model as bm
 from .operators import session_analysis as sa
 from .functions import qround
 from .params import TaskParams
-from .session import scratch_dir, streaming_checkpoint_location
-from .sources import load_table
-from .streaming.ad_stream import state_scope
+from .session import scratch_dir
+from .sources import load_table, local_frame
+from .streaming.ad_stream import run_bounded
+from .streaming.replay import two_phase_replay
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -109,71 +110,6 @@ def _users(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "customer"),
         load_table(spark, sf_dir, "nation"),
         load_table(spark, sf_dir, "region"),
-    )
-
-
-def _small_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """Dimension-sized collected rows back to a ONE-SLICE frame: bare
-    createDataFrame parallelizes over defaultParallelism, and the 32
-    near-empty pickled partitions each cost a Python-worker
-    round-trip on every downstream scan (profiled ~0.2 s/task on the
-    bench's noop save of ad_blacklist_feedback).  parallelize(rows, 1)
-    from the start — NOT .coalesce(1), whose single merged task pays
-    all 32 parent handshakes serially (measured 4-5 s per action vs
-    0.16 s for the one-slice frame)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    )
-
-
-def _two_phase_replay_dir(work: str, phases: list[DataFrame]) -> str:
-    """Write each phase frame as ONE parquet file under `<work>/in`
-    with ascending mtimes, so a maxFilesPerTrigger=1 file-source
-    stream replays them as deterministic ordered micro-batches.
-    Executor-side Spark writes — nothing materializes on the driver;
-    coalesce(1) is the replay FIXTURE's requirement (the mtime-order
-    contract needs exactly one file per phase), not a scale pattern."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    in_dir = _os.path.join(work, "in")
-    _os.makedirs(in_dir)
-    for i, df in enumerate(phases):
-        stage = _os.path.join(work, f"stage_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        parts = _glob.glob(_os.path.join(stage, "part-*.parquet"))
-        if not parts:
-            # a phase frame that resolved to ZERO partitions (e.g. an
-            # empty scan after pruning) writes only _SUCCESS; fail
-            # legibly instead of IndexError-ing on the glob
-            raise ValueError(
-                f"replay phase {i} produced no parquet part file "
-                f"(empty/zero-partition frame?) under {stage}; every "
-                f"phase must contribute exactly one file"
-            )
-        part = parts[0]
-        fp = _os.path.join(in_dir, f"phase_{i}.parquet")
-        _os.replace(part, fp)
-        _shutil.rmtree(stage, ignore_errors=True)
-        # the file source admits oldest-mtime first; pin the order
-        _os.utime(fp, (1_000_000 + i * 100, 1_000_000 + i * 100))
-    return in_dir
-
-
-def _replay_rows(in_dir: str) -> int:
-    """Total rows across a replay dir's phase files, read from the
-    parquet FOOTERS on the driver (the files are the fixture's local
-    staging copies) — replaces a re-scan of the source frame when a
-    query only needs an emptiness guard."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    return sum(
-        _pq.ParquetFile(f).metadata.num_rows
-        for f in _glob.glob(_os.path.join(in_dir, "*.parquet"))
     )
 
 
@@ -367,7 +303,6 @@ def q_ad_blacklist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import day_col, json_long
     from .streaming.ad_stream import BlacklistLoop
 
-    work = scratch_dir(prefix="blfeed_q_")
     ev = load_table(spark, sf_dir, "events")
     src = ev.where(F.col("event_type") == "click").select(
         day_col(F.col("ts").cast("timestamp")).alias("day"),
@@ -379,40 +314,29 @@ def q_ad_blacklist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     # time; any fixed split keeps the (empty -> empty) contract
     t0 = ev.agg(F.min("ts")).first()[0] or datetime(1970, 1, 1)
     split_day = (t0 + timedelta(days=14)).strftime("%Y-%m-%d")
-    in_dir = _two_phase_replay_dir(
-        work,
+    with two_phase_replay(
+        spark,
         [src.where(F.col("day") <= split_day), src.where(F.col("day") > split_day)],
-    )
-    loop = BlacklistLoop(_os.path.join(work, "state"))
-    stream = (
-        spark.readStream.schema(
-            "day string, user_id long, ad_id long, event_type string"
+        "blfeed_q_",
+    ) as r:
+        loop = BlacklistLoop(_os.path.join(r.work, "state"))
+        loop.run(r.stream, r.ckpt)
+        _, last_epoch = loop.state_epoch(spark)
+        # the two-phase-replay property only binds when there were
+        # clicks to replay; an empty log legitimately yields zero
+        # micro-batch folds and an empty blacklist-feedback result
+        # (emptiness from the replay files' footers, no third scan)
+        if r.rows() > 0 and (last_epoch is None or last_epoch < 1):
+            raise RuntimeError(
+                f"expected >= 2 micro-batches, last epoch = {last_epoch}"
+            )
+        # the totals are dimension-sized (|day×user×ad| click keys);
+        # materialize them before the work dir goes
+        return local_frame(
+            spark,
+            loop.current_totals(spark).collect(),
+            "day string, user_id long, ad_id long, click_count long",
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    loop.run(stream, _os.path.join(work, "ckpt"))
-    _, last_epoch = loop.state_epoch(spark)
-    # the two-phase-replay property only binds when there were clicks
-    # to replay; an empty log legitimately yields zero micro-batch
-    # folds and an empty blacklist-feedback result.  Emptiness comes
-    # from the staged replay files' parquet footers (driver-side, no
-    # third scan of the events table).
-    if _replay_rows(in_dir) > 0 and (last_epoch is None or last_epoch < 1):
-        raise RuntimeError(
-            f"expected >= 2 micro-batches, last epoch = {last_epoch}"
-        )
-    # the totals are dimension-sized (|day×user×ad| click keys);
-    # materialize them so the work dir (a full copy of the click log
-    # + stream state + checkpoint) can be deleted instead of leaking
-    # a /tmp tree per invocation
-    rows = loop.current_totals(spark).collect()
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
-    return _small_df(
-        spark, rows, "day string, user_id long, ad_id long, click_count long"
-    )
 
 
 @query("ad_stat")
@@ -1336,7 +1260,7 @@ def q_corpus_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         .collect()
     )
     shutil.rmtree(work, ignore_errors=True)
-    return _small_df(
+    return local_frame(
         spark, rows, "doc_id long, bm25 double, day string, n_day1 long, n_day2 long"
     )
 
@@ -1483,7 +1407,7 @@ def q_ann_ivf_topk_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_ivf_index(emb.where(F.col("vec_id") >= 400), path)
     rows = ann_ivf_topk_indexed(spark, path, emb).collect()
     shutil.rmtree(work, ignore_errors=True)
-    return _small_df(
+    return local_frame(
         spark, rows, "query_id long, rank long, neighbor_id long, sim double"
     )
 
@@ -1722,7 +1646,7 @@ def q_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     days = sorted(r[0] for r in daily.select("day").distinct().collect())
     if not days:
-        return _small_df(
+        return local_frame(
             spark, [], "day string, n_users long, total_clicks long, total_rev_cents long"
         )
     mid = days[len(days) // 2]
@@ -1747,7 +1671,7 @@ def q_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     shutil.rmtree(work, ignore_errors=True)
-    return _small_df(
+    return local_frame(
         spark, rows, "day string, n_users long, total_clicks long, total_rev_cents long"
     )
 
@@ -1829,7 +1753,7 @@ def q_bm25_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact_inverted_index(spark, path)
     rows = bm25_topk_indexed(spark, path).collect()
     shutil.rmtree(work, ignore_errors=True)
-    return _small_df(spark, rows, "doc_id long, bm25 double")
+    return local_frame(spark, rows, "doc_id long, bm25 double")
 
 
 @query("purged_time_split")
@@ -2312,36 +2236,35 @@ def q_streaming_user_click_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     UPDATE count = count + delta / INSERT, set-oriented).  merge="sum"
     accumulation across micro-batches must equal the batch groupBy —
     the ad_user_click_count oracle."""
+    import shutil
 
     from .sources.upsert import ParquetUpsertSink
     from .streaming.ad_stream import read_event_stream
 
     work = scratch_dir(prefix="upsert_q_")
-    sink = ParquetUpsertSink(
-        f"{work}/table", ["day", "user_id", "ad_id"], ["click_count"], merge="sum"
-    )
-
-    def per_batch(batch: DataFrame, epoch_id: int) -> None:
-        sink(
-            batch.where(F.col("event_type") == "click")
-            .groupBy("day", "user_id", "ad_id")
-            .agg(F.count(F.lit(1)).alias("click_count")),
-            epoch_id,
+    try:
+        sink = ParquetUpsertSink(
+            f"{work}/table", ["day", "user_id", "ad_id"], ["click_count"], merge="sum"
         )
 
-    with state_scope(spark):
-        q = (
-            read_event_stream(spark, f"{sf_dir}/events.parquet")
-            .writeStream.foreachBatch(per_batch)
-            .option(
-                "checkpointLocation",
-                streaming_checkpoint_location(spark, f"{work}/ckpt"),
+        def per_batch(batch: DataFrame, epoch_id: int) -> None:
+            sink(
+                batch.where(F.col("event_type") == "click")
+                .groupBy("day", "user_id", "ad_id")
+                .agg(F.count(F.lit(1)).alias("click_count")),
+                epoch_id,
             )
-            .trigger(availableNow=True)
-            .start()
+
+        stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
+        run_bounded(stream.writeStream.foreachBatch(per_batch), spark, f"{work}/ckpt")
+        # dimension-sized totals; materialize before the work dir goes
+        return local_frame(
+            spark,
+            sink.current(spark).collect(),
+            "day string, user_id long, ad_id long, click_count long",
         )
-        q.awaitTermination()
-    return sink.current(spark)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @query("streaming_upsert_crash_recovery")
@@ -2363,7 +2286,6 @@ def q_streaming_upsert_crash_recovery(spark: SparkSession, sf_dir: str) -> DataF
     from .functions import day_col, json_long
     from .sources.upsert import ParquetUpsertSink
 
-    work = scratch_dir(prefix="upsert_crash_q_")
     ev = load_table(spark, sf_dir, "events")
     src = ev.select(
         day_col(F.col("ts").cast("timestamp")).alias("day"),
@@ -2374,67 +2296,39 @@ def q_streaming_upsert_crash_recovery(spark: SparkSession, sf_dir: str) -> DataF
     # empty-log guard (see ad_blacklist_feedback)
     t0 = ev.agg(F.min("ts")).first()[0] or datetime(1970, 1, 1)
     split_day = (t0 + timedelta(days=14)).strftime("%Y-%m-%d")
-    in_dir = _two_phase_replay_dir(
-        work,
+    with two_phase_replay(
+        spark,
         [src.where(F.col("day") <= split_day), src.where(F.col("day") > split_day)],
-    )
-    sink = ParquetUpsertSink(
-        _os.path.join(work, "table"),
-        ["day", "user_id", "ad_id"],
-        ["click_count"],
-        merge="sum",
-    )
-
-    def per_batch(batch: DataFrame, epoch_id: int) -> None:
-        sink(
-            batch.where(F.col("event_type") == "click")
-            .groupBy("day", "user_id", "ad_id")
-            .agg(F.count(F.lit(1)).alias("click_count")),
-            epoch_id,
+        "upsert_crash_q_",
+    ) as r:
+        sink = ParquetUpsertSink(
+            _os.path.join(r.work, "table"),
+            ["day", "user_id", "ad_id"],
+            ["click_count"],
+            merge="sum",
         )
 
-    def run():
-        stream = (
-            spark.readStream.schema(
-                "day string, user_id long, ad_id long, event_type string"
+        def per_batch(batch: DataFrame, epoch_id: int) -> None:
+            sink(
+                batch.where(F.col("event_type") == "click")
+                .groupBy("day", "user_id", "ad_id")
+                .agg(F.count(F.lit(1)).alias("click_count")),
+                epoch_id,
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        return (
-            stream.writeStream.foreachBatch(per_batch)
-            .option(
-                "checkpointLocation",
-                streaming_checkpoint_location(spark, _os.path.join(work, "ckpt")),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
 
-    sink.fail_after_stage_epoch = 1  # die mid-protocol on the 2nd batch
-    with state_scope(spark):
-        q1 = run()
-        crashed = False
-        try:
-            q1.awaitTermination()
-        except Exception:
-            crashed = True
-        if not crashed:
-            raise RuntimeError(
-                "injected crash did not fire — the replay no longer exercises "
-                "the staged-but-unfinalized recovery window"
-            )
-        q2 = run()  # restart from the SAME checkpoint: epoch 1 replays
-        q2.awaitTermination()
-    # dimension-sized totals; materialize so the work dir (log copy +
-    # state + checkpoint) can be deleted instead of leaking per call
-    rows = sink.current(spark).collect()
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
-    return _small_df(
-        spark, rows, "day string, user_id long, ad_id long, click_count long"
-    )
+        sink.fail_after_stage_epoch = 1  # die mid-protocol on the 2nd batch
+        r.run_crash_then_resume(
+            lambda: run_bounded(
+                r.stream.writeStream.foreachBatch(per_batch), spark, r.ckpt
+            ),
+            "staged-but-unfinalized recovery window",
+        )
+        # dimension-sized totals; materialize before the work dir goes
+        return local_frame(
+            spark,
+            sink.current(spark).collect(),
+            "day string, user_id long, ad_id long, click_count long",
+        )
 
 
 @query("streaming_scd2_crash_recovery")
@@ -2454,7 +2348,6 @@ def q_streaming_scd2_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFra
 
     from .sources.upsert import Scd2Sink
 
-    work = scratch_dir(prefix="scd2_crash_q_")
     cust = load_table(spark, sf_dir, "customer")
     phase1 = cust.select(
         F.col("c_custkey").alias("custkey"),
@@ -2466,51 +2359,20 @@ def q_streaming_scd2_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFra
         F.concat(F.lit("X-"), F.col("c_mktsegment")).alias("segment"),
         F.lit("2024-02-01").alias("eff"),
     )
-    in_dir = _two_phase_replay_dir(work, [phase1, phase2])
-    sink = Scd2Sink(
-        _os.path.join(work, "table"), "custkey", ["segment"], eff_col="eff"
-    )
-
-    def run():
-        stream = (
-            spark.readStream.schema("custkey long, segment string, eff string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+    with two_phase_replay(spark, [phase1, phase2], "scd2_crash_q_") as r:
+        sink = Scd2Sink(
+            _os.path.join(r.work, "table"), "custkey", ["segment"], eff_col="eff"
         )
-        return (
-            stream.writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation",
-                streaming_checkpoint_location(spark, _os.path.join(work, "ckpt")),
-            )
-            .trigger(availableNow=True)
-            .start()
+        sink.fail_after_stage_epoch = 1  # die mid-protocol on the CDC batch
+        r.run_crash_then_resume(
+            lambda: run_bounded(r.stream.writeStream.foreachBatch(sink), spark, r.ckpt),
+            "staged-but-unfinalized SCD2 recovery window",
         )
-
-    sink.fail_after_stage_epoch = 1  # die mid-protocol on the CDC batch
-    with state_scope(spark):
-        q1 = run()
-        crashed = False
-        try:
-            q1.awaitTermination()
-        except Exception:
-            crashed = True
-        if not crashed:
-            raise RuntimeError(
-                "injected crash did not fire — the replay no longer exercises "
-                "the staged-but-unfinalized SCD2 recovery window"
-            )
-        q2 = run()  # restart from the SAME checkpoint: epoch 1 replays
-        q2.awaitTermination()
-    rows = sink.history(spark).collect()
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
-    return _small_df(
-        spark,
-        rows,
-        "custkey long, segment string, valid_from string, valid_to string",
-    )
+        return local_frame(
+            spark,
+            sink.history(spark).collect(),
+            "custkey long, segment string, valid_from string, valid_to string",
+        )
 
 
 @query("streaming_late_event_drop")
@@ -2527,77 +2389,59 @@ def q_streaming_late_event_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle counts every event EXCEPT the late duplicate and
     emits exactly the windows whose end the final watermark passed —
     the full append-mode contract in ANSI SQL."""
-    import glob as _glob
     import os as _os
 
-    work = scratch_dir(prefix="late_drop_q_")
     ev = load_table(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"), "event_id"
     )
     t0, t1 = ev.agg(F.min("ts"), F.max("ts")).first()
     split = t0 + (t1 - t0) / 2
     late = ev.orderBy("ts", "event_id").limit(1)  # oldest event, replayed late
-    in_dir = _two_phase_replay_dir(
-        work,
+    with two_phase_replay(
+        spark,
         [
             ev.where(F.col("ts") <= split),
             ev.where(F.col("ts") > split).unionByName(late),
         ],
-    )
-    # hold phase 2 back so run 1 checkpoints a watermark WITHOUT it
-    (p2,) = _glob.glob(_os.path.join(in_dir, "phase_1.parquet"))
-    held = _os.path.join(work, "phase_1.held")
-    _os.replace(p2, held)
-    out_dir = _os.path.join(work, "out")
+        "late_drop_q_",
+    ) as r:
+        # hold phase 2 back so run 1 checkpoints a watermark WITHOUT it
+        p2 = _os.path.join(r.in_dir, "phase_1.parquet")
+        held = _os.path.join(r.work, "phase_1.held")
+        _os.replace(p2, held)
+        out_dir = _os.path.join(r.work, "out")
 
-    def run():
-        raw = (
-            spark.readStream.schema("ts timestamp, event_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        agg = (
-            raw.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm").alias("hour_start"),
-                "n",
+        def run():
+            agg = (
+                r.stream.withWatermark("ts", "1 hour")
+                .groupBy(F.window("ts", "1 hour").alias("w"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .select(
+                    F.date_format("w.start", "yyyy-MM-dd HH:mm").alias("hour_start"),
+                    "n",
+                )
             )
-        )
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation",
-                streaming_checkpoint_location(spark, _os.path.join(work, "ckpt")),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from .plans import audit as _audit
-
-        if _audit.capture_active():
-            _audit.observe_micro_batch_plan(
-                "late_event_drop_window",
-                _audit.physical_section(q._jsq.explainInternal(True)),  # noqa: SLF001
+            # each run's width is min(8, session width), the same for
+            # both: the first run's is what the checkpoint pins
+            run_bounded(
+                agg.writeStream.outputMode("append")
+                .format("parquet")
+                .option("path", out_dir),
+                spark,
+                r.ckpt,
+                plan_tag="late_event_drop_window",
             )
 
-    # both runs under one scope: the first run's width is what the
-    # checkpoint pins for every state store
-    with state_scope(spark):
         run()
         _os.replace(held, p2)  # phase 2 appears; same checkpoint
         run()
-    # writer-fixed schema (the streaming sink above): declaring it
-    # skips the read's schema-inference job
-    rows = spark.read.schema("hour_start string, n bigint").parquet(out_dir).collect()
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
-    return _small_df(spark, rows, "hour_start string, n long")
+        # writer-fixed schema (the streaming sink above): declaring it
+        # skips the read's schema-inference job
+        return local_frame(
+            spark,
+            spark.read.schema("hour_start string, n bigint").parquet(out_dir).collect(),
+            "hour_start string, n long",
+        )
 
 
 @query("tpch_q4")
@@ -4341,42 +4185,34 @@ def q_streaming_funnel_within_window(spark: SparkSession, sf_dir: str) -> DataFr
     collapsed to one batch).  Hash-gated against funnel_within_window's
     EXISTS oracle — the streaming fold must land on the batch answer
     exactly (streaming/stateful.py::funnel_levels_stream)."""
-    import os as _os
-    import shutil
     from datetime import datetime, timedelta
 
     from .streaming.ad_stream import run_to_completion
     from .streaming.stateful import final_funnel_counts, funnel_levels_stream
 
-    work = scratch_dir(prefix="sfunnel_q_")
     ev = load_table(spark, sf_dir, "events")
     t0 = ev.agg(F.min("ts")).first()[0] or datetime(1970, 1, 1)
     split = t0 + timedelta(days=14)
     src = ev.select("event_id", "ts", "user_id", "event_type")
-    in_dir = _two_phase_replay_dir(
-        work,
-        [src.where(F.col("ts") < split), src.where(F.col("ts") >= split)],
-    )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp_ntz, user_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     name = "sfunnel_" + sf_dir.strip("/").split("/")[-1].replace(".", "_")
-    # state_partitions=None: keep the SESSION width.  `state_scope`'s
-    # default cap of 8 is right for dimension-sized state (its
-    # per-store open/commit overhead dominates); the funnel's state is
-    # USER-sized (~|users| keys) and each key pays ~0.5 ms of
-    # python-boundary transport (per-key state JSON + pandas slicing,
-    # measured via the stage profile: 18.4 s exec / 3.4 s cpu at 8
-    # partitions), so the state stage scales with width — A/B at
-    # sf0.1 local[32]: 4.35 s -> 3.15 s.  Session width follows
-    # $SPARK_GRAFT_CPUS, so lower-core runs keep their own right size.
-    updates = run_to_completion(
-        funnel_levels_stream(stream), name, mode="update", state_partitions=None
-    )
+    with two_phase_replay(
+        spark,
+        [src.where(F.col("ts") < split), src.where(F.col("ts") >= split)],
+        "sfunnel_q_",
+    ) as r:
+        # state_partitions=None: keep the SESSION width.  The default
+        # cap of 8 is right for dimension-sized state (its per-store
+        # open/commit overhead dominates); the funnel's state is
+        # USER-sized (~|users| keys) and each key pays ~0.5 ms of
+        # python-boundary transport (per-key state JSON + pandas
+        # slicing, measured via the stage profile: 18.4 s exec / 3.4 s
+        # cpu at 8 partitions), so the state stage scales with width —
+        # A/B at sf0.1 local[32]: 4.35 s -> 3.15 s.  Session width
+        # follows $SPARK_GRAFT_CPUS, so lower-core runs keep their own
+        # right size.
+        updates = run_to_completion(
+            funnel_levels_stream(r.stream), name, mode="update", state_partitions=None
+        )
     # cross-batch proof: a user active in BOTH phases emits one
     # update row PER MICRO-BATCH — updates > distinct users iff state
     # really resumed across >= 2 triggers.  Gate on such a user
@@ -4406,8 +4242,7 @@ def q_streaming_funnel_within_window(spark: SparkSession, sf_dir: str) -> DataFr
                 f"{n_updates} updates over {n_users} users"
             )
     out = final_funnel_counts(updates).collect()
-    shutil.rmtree(work, ignore_errors=True)
-    return _small_df(
+    return local_frame(
         spark, out, "step bigint, stage string, users bigint"
     ).orderBy("step")
 
@@ -4630,40 +4465,30 @@ def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark (unit-pinned in
     tests/test_streaming.py); semantics over bounded replay are
     identical."""
-    import os as _os
     from datetime import datetime, timedelta
 
     from .streaming.ad_stream import run_to_completion
 
-    work = scratch_dir(prefix="sdedup_q_")
     ev = load_table(spark, sf_dir, "events")
     src = ev.select("user_id", "event_type", F.col("ts").cast("timestamp").alias("ts"))
     # empty-log guard (see ad_blacklist_feedback)
     split_ts = (ev.agg(F.min("ts")).first()[0] or datetime(1970, 1, 1)) + timedelta(
         days=14
     )
-    in_dir = _two_phase_replay_dir(
-        work,
+    name = "stream_dedup_" + sf_dir.strip("/").split("/")[-1].replace(".", "_")
+    with two_phase_replay(
+        spark,
         [
             src.where(pred).select("user_id", "event_type")
             for pred in (F.col("ts") <= split_ts, F.col("ts") > split_ts)
         ],
-    )
-    stream = (
-        spark.readStream.schema("user_id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    deduped = stream.dropDuplicates(["user_id", "event_type"])
-    name = "stream_dedup_" + sf_dir.strip("/").split("/")[-1].replace(".", "_")
-    result = run_to_completion(deduped, name, mode="append")
-    # the memory sink holds the rows; drop the /tmp copy of the key
-    # projection instead of leaking one per invocation (bench runs
-    # this twice per cycle)
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+        "sdedup_q_",
+    ) as r:
+        # the memory sink holds the rows, so the result outlives the
+        # replay's work dir
+        return run_to_completion(
+            r.stream.dropDuplicates(["user_id", "event_type"]), name, mode="append"
+        )
 
 
 @query("bm25_topk")
@@ -5441,14 +5266,12 @@ def q_streaming_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two deterministic micro-batches split at min(ts)+14d (the
     streaming_dedup_keys replay fixture)."""
     import os as _os
-    import shutil
     from datetime import datetime, timedelta
 
     from .functions.ckpt import ckpt
     from .operators.text_analysis import cm_bucket
 
     width, depth, n_targets = 256, 4, 20
-    work = scratch_dir(prefix="scm_q_")
     ev = load_table(spark, sf_dir, "events")
     split_ts = (ev.agg(F.min("ts")).first()[0] or datetime(1970, 1, 1)) + timedelta(
         days=14
@@ -5457,8 +5280,8 @@ def q_streaming_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # phase split must PARTITION the log: a bare `ts > split` would
     # silently drop NULL-ts rows that the batch oracle (FROM events)
     # counts — the second phase takes the complement, NULLs included
-    in_dir = _two_phase_replay_dir(
-        work,
+    with two_phase_replay(
+        spark,
         [
             src.where(pred).select("user_id")
             for pred in (
@@ -5466,104 +5289,93 @@ def q_streaming_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("ts") > split_ts) | F.col("ts").isNull(),
             )
         ],
-    )
-    cells_dir = _os.path.join(work, "cells")
-    counts_dir = _os.path.join(work, "counts")
+        "scm_q_",
+    ) as replay:
+        cells_dir = _os.path.join(replay.work, "cells")
+        counts_dir = _os.path.join(replay.work, "counts")
 
-    def sketch_batch(batch_df, epoch_id) -> None:
-        k = F.col("user_id").cast("string")
-        probes = batch_df.select(
-            *[cm_bucket(k, r, width).alias(f"b{r}") for r in range(depth)]
-        )
-        cells = None
-        for r in range(depth):
-            c = (
-                probes.groupBy(F.col(f"b{r}").alias("bucket"))
-                .agg(F.count(F.lit(1)).alias("c"))
-                .select(F.lit(r).alias("row"), "bucket", "c")
+        def sketch_batch(batch_df, epoch_id) -> None:
+            k = F.col("user_id").cast("string")
+            probes = batch_df.select(
+                *[cm_bucket(k, r, width).alias(f"b{r}") for r in range(depth)]
             )
-            cells = c if cells is None else cells.unionAll(c)
-        from .plans import audit as _audit
+            cells = None
+            for r in range(depth):
+                c = (
+                    probes.groupBy(F.col(f"b{r}").alias("bucket"))
+                    .agg(F.count(F.lit(1)).alias("c"))
+                    .select(F.lit(r).alias("row"), "bucket", "c")
+                )
+                cells = c if cells is None else cells.unionAll(c)
+            from .plans import audit as _audit
 
-        _audit.observe_micro_batch_frame("countmin_partial_cells", cells)
-        counts = batch_df.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-        # per-EPOCH subdirs, overwritten: an at-least-once foreachBatch
-        # retry rewrites its own epoch's partial instead of appending a
-        # duplicate that would inflate the merged cells
-        cells.write.mode("overwrite").parquet(
-            _os.path.join(cells_dir, f"epoch={epoch_id}")
-        )
-        counts.write.mode("overwrite").parquet(
-            _os.path.join(counts_dir, f"epoch={epoch_id}")
-        )
+            _audit.observe_micro_batch_frame("countmin_partial_cells", cells)
+            counts = batch_df.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
+            # per-EPOCH subdirs, overwritten: an at-least-once foreachBatch
+            # retry rewrites its own epoch's partial instead of appending a
+            # duplicate that would inflate the merged cells
+            cells.write.mode("overwrite").parquet(
+                _os.path.join(cells_dir, f"epoch={epoch_id}")
+            )
+            counts.write.mode("overwrite").parquet(
+                _os.path.join(counts_dir, f"epoch={epoch_id}")
+            )
 
-    stream = (
-        spark.readStream.schema("user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    with state_scope(spark):
-        q = (
-            stream.writeStream.foreachBatch(sketch_batch)
-            .option(
-                "checkpointLocation",
-                streaming_checkpoint_location(spark, _os.path.join(work, "ckpt")),
-            )
-            .trigger(availableNow=True)
-            .start()
+        run_bounded(
+            replay.stream.writeStream.foreachBatch(sketch_batch), spark, replay.ckpt
         )
-        q.awaitTermination()
-    # writer-fixed schemas (sketch_batch above): declared reads skip
-    # the schema-inference jobs
-    merged = (
-        spark.read.schema("row int, bucket bigint, c bigint")
-        .parquet(cells_dir)
-        .groupBy("row", "bucket")
-        .agg(F.sum("c").alias("c"))
-    )
-    truth = (
-        spark.read.schema("user_id bigint, n bigint").parquet(counts_dir)
-        .groupBy("user_id")
-        .agg(F.sum("n").cast("bigint").alias("true_count"))
-        .where(F.col("user_id") < n_targets)
-    )
-    probe_rows = truth.select(
-        "user_id",
-        "true_count",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("row"),
-                        cm_bucket(F.col("user_id").cast("string"), r, width).alias(
-                            "bucket"
-                        ),
-                    )
-                    for r in range(depth)
-                ]
-            )
-        ).alias("p"),
-    ).select(
-        "user_id", "true_count", F.col("p.row").alias("row"), F.col("p.bucket").alias("bucket")
-    )
-    out = (
-        merged.join(F.broadcast(probe_rows), ["row", "bucket"])
-        .groupBy("user_id", "true_count")
-        .agg(F.min("c").cast("bigint").alias("cm_estimate"))
-        .select(
+        # writer-fixed schemas (sketch_batch above): declared reads skip
+        # the schema-inference jobs
+        merged = (
+            spark.read.schema("row int, bucket bigint, c bigint")
+            .parquet(cells_dir)
+            .groupBy("row", "bucket")
+            .agg(F.sum("c").alias("c"))
+        )
+        truth = (
+            spark.read.schema("user_id bigint, n bigint").parquet(counts_dir)
+            .groupBy("user_id")
+            .agg(F.sum("n").cast("bigint").alias("true_count"))
+            .where(F.col("user_id") < n_targets)
+        )
+        probe_rows = truth.select(
             "user_id",
             "true_count",
-            "cm_estimate",
-            (F.col("cm_estimate") - F.col("true_count"))
-            .cast("bigint")
-            .alias("overestimate"),
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(r).alias("row"),
+                            cm_bucket(F.col("user_id").cast("string"), r, width).alias(
+                                "bucket"
+                            ),
+                        )
+                        for r in range(depth)
+                    ]
+                )
+            ).alias("p"),
+        ).select(
+            "user_id",
+            "true_count",
+            F.col("p.row").alias("row"),
+            F.col("p.bucket").alias("bucket"),
         )
-        .orderBy("user_id")
-        # materialize BEFORE the work dir (the sketch store) is removed
-        .transform(ckpt, eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        return (
+            merged.join(F.broadcast(probe_rows), ["row", "bucket"])
+            .groupBy("user_id", "true_count")
+            .agg(F.min("c").cast("bigint").alias("cm_estimate"))
+            .select(
+                "user_id",
+                "true_count",
+                "cm_estimate",
+                (F.col("cm_estimate") - F.col("true_count"))
+                .cast("bigint")
+                .alias("overestimate"),
+            )
+            .orderBy("user_id")
+            # materialize BEFORE the work dir (the sketch store) is removed
+            .transform(ckpt, eager=True)
+        )
 
 
 @query("page_reachability_sql")
@@ -6003,7 +5815,7 @@ def q_stress_linear_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for op_name in [*[n for n, _ in ops], "mv_merge"]
     ]
-    return _small_df(
+    return local_frame(
         spark,
         rows,
         "op string, out_rows_1x long, out_rows_10x long, "

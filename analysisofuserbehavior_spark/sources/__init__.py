@@ -4,6 +4,7 @@ from .loaders import (
     epoch_us,
     load_table,
     load_tables,
+    local_frame,
     ntz_lit,
     register_views,
     save_tables_to_catalog,
@@ -15,6 +16,7 @@ __all__ = [
     "epoch_us",
     "load_table",
     "load_tables",
+    "local_frame",
     "ntz_lit",
     "register_views",
     "save_tables_to_catalog",

@@ -33,6 +33,7 @@ import os
 import re
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -195,6 +196,33 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: str | T.StructType
+) -> DataFrame:
+    """Driver-side rows (tuples or Rows, in `schema`'s column order) as
+    a frame with exactly the declared schema — names, types and
+    nullability — the engine's one small-frame builder.
+
+    The rows cross to the JVM once as an Arrow table and plan as a
+    LocalTableScan: no Python RDD, so no downstream scan ever starts a
+    Python worker for them (a `createDataFrame(parallelize(rows))`
+    frame plans as `Scan ExistingRDD`, and each of its partitions pays
+    a worker round-trip per scan).  Meant for dimension-sized results
+    a query collects before deleting its work dir, and for seed
+    frames; large data stays in Spark."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from .jdbc import write_jdbc
+from .loaders import local_frame
 
 
 def _fs_path(spark: SparkSession, path: str):
@@ -218,22 +219,9 @@ def _load_state_impl(
     # the very first batch crashed mid-staging write — no durable
     # history exists yet, so an empty state loses nothing and lets
     # the replayed epoch 0 recover without operator intervention.
-    return _empty_state(spark, schema), None
-
-
-def _empty_state(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
-    """Zero-row frame with exactly the declared schema (names, types,
-    nullability), built JVM-side as an empty local relation: no Python
-    RDD, so no Python worker and no task ever reads it, and the
-    optimizer folds it out of the first batch's union."""
-    if isinstance(schema, str):
-        schema = T.DataType.fromDDL(schema)
-    jspark = spark._jsparkSession  # noqa: SLF001 - py4j bridge is the API here
-    jdf = jspark.createDataFrame(
-        spark.sparkContext._jvm.java.util.ArrayList(),  # noqa: SLF001
-        jspark.parseDataType(schema.json()),
-    )
-    return DataFrame(jdf, spark)
+    # The empty seed is a local relation with the declared schema, so
+    # the optimizer folds it out of the first batch's union.
+    return local_frame(spark, [], schema), None
 
 
 class ParquetUpsertSink:

@@ -35,12 +35,11 @@ derives the same keys once, with the shared behavior-model columns.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
-from contextlib import contextmanager
 
 from ..session import scoped_conf, streaming_checkpoint_location as _ckpt_loc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..functions import day_col, json_long
 from ..functions.ckpt import ckpt
@@ -228,33 +227,44 @@ _ROCKSDB_PROVIDER = (
 )
 
 
-@contextmanager
-def state_scope(
-    spark: SparkSession, partitions: int | None = 8, provider: str | None = None
-) -> Iterator[None]:
-    """Scope the state width (and optionally the state-store provider)
-    of the bounded streams started in the body — the engine's one
-    stream-width policy.
+def run_bounded(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    checkpoint_dir: str | None = None,
+    *,
+    partitions: int | None = 8,
+    provider: str | None = None,
+    plan_tag: str | None = None,
+) -> StreamingQuery:
+    """Start `writer` as a bounded (availableNow) query, wait for it to
+    finish and return it — the engine's one stream lifecycle.
 
-    Width is `min(partitions, session width)`, the session width being
-    its shuffle.partitions on entry.  Every state-store instance pays
-    a fixed ~0.1-0.5 s open/commit per micro-batch regardless of data
-    volume, and a symmetric hash join keeps FOUR stores per partition
-    (SCALING.md round 14): at a 32-core session's width a
-    dimension-sized state pays that floor 32 times per operator per
-    batch, and partitions beyond the task slots only add waves of it.
-    At gate/bench SFs 8 partitions hold the state comfortably; the
-    width a stream starts with is what its checkpoint pins forever,
-    so raise `partitions` when per-partition state outgrows an
-    executor.  Results are partition-invariant.  `partitions=None`
-    keeps the session width.
+    Width: shuffle partitions are `min(partitions, session width)`
+    for the run, the session width being its shuffle.partitions on
+    entry.  Every state-store instance pays a fixed ~0.1-0.5 s
+    open/commit per micro-batch regardless of data volume, and a
+    symmetric hash join keeps FOUR stores per partition (SCALING.md
+    round 14): at a 32-core session's width a dimension-sized state
+    pays that floor 32 times per operator per batch, and partitions
+    beyond the task slots only add waves of it.  At gate/bench SFs 8
+    partitions hold the state comfortably; the width a stream starts
+    with is what its checkpoint pins forever, so raise `partitions`
+    when per-partition state outgrows an executor.  Results are
+    partition-invariant.  `partitions=None` keeps the session width.
 
     `provider` ("rocksdb" or a full provider class) pins the
-    state-store provider.  Both confs come back on exit, even when
-    neither had a prior value (`scoped_conf`)."""
+    state-store provider.  Both confs come back on exit, also when the
+    query fails (`scoped_conf`).
+
+    `checkpoint_dir` goes through `streaming_checkpoint_location`;
+    None starts with no location (a memory sink's temporary one).
+    With `plan_tag`, an active plan capture records the LAST
+    micro-batch's executed plan, straight from the StreamExecution."""
     key = "spark.sql.shuffle.partitions"
     if partitions is not None:
         partitions = min(partitions, int(spark.conf.get(key)))
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", _ckpt_loc(spark, checkpoint_dir))
     with scoped_conf(
         spark,
         {
@@ -264,7 +274,16 @@ def state_scope(
             ),
         },
     ):
-        yield
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+    from ..plans import audit as _audit
+
+    if plan_tag is not None and _audit.capture_active():
+        _audit.observe_micro_batch_plan(
+            plan_tag,
+            _audit.physical_section(q._jsq.explainInternal(True)),  # noqa: SLF001
+        )
+    return q
 
 
 def run_to_completion(
@@ -274,8 +293,9 @@ def run_to_completion(
     state_provider: str | None = None,
     state_partitions: int | None = 8,
 ) -> DataFrame:
-    """Drive a bounded stream to completion (availableNow) into a
-    memory sink and return the final result as a batch DataFrame.
+    """Drive a bounded stream to completion into a memory sink through
+    `run_bounded` and return the final result as a batch DataFrame;
+    the last micro-batch's plan is captured under `query_name`.
 
     `state_provider` ("rocksdb" or a full provider class) pins the
     state-store provider for THIS query and asserts from the finished
@@ -284,42 +304,28 @@ def run_to_completion(
     executor heap and RocksDB spills keyed state to local disk with
     changelog checkpointing.
 
-    `state_partitions` is the state width, capped at the session
-    width (`state_scope`, the one stream-width policy); None keeps
-    the session's width.  Both confs are restored on exit."""
+    `state_partitions` is `run_bounded`'s width: capped at the session
+    width, None keeps the session's width."""
     spark = agg.sparkSession
-    with state_scope(spark, state_partitions, state_provider):
-        q = (
-            agg.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from ..plans import audit as _audit
+    q = run_bounded(
+        agg.writeStream.outputMode(mode).format("memory").queryName(query_name),
+        spark,
+        partitions=state_partitions,
+        provider=state_provider,
+        plan_tag=query_name,
+    )
+    if state_provider and "rocksdb" in state_provider.lower():
+        import json
 
-        if _audit.capture_active():
-            # the LAST micro-batch's executed plan, straight from the
-            # StreamExecution — what the streaming plan lint reads
-            _audit.observe_micro_batch_plan(
-                query_name,
-                _audit.physical_section(q._jsq.explainInternal(True)),  # noqa: SLF001
-            )
-        if state_provider and "rocksdb" in state_provider.lower():
-            import json
-
-            progresses = [
-                json.loads(p if isinstance(p, str) else p.json)
-                for p in q.recentProgress
-            ]
-            state_ops = [
-                op for p in progresses for op in p.get("stateOperators", [])
-            ]
-            assert state_ops and any(
-                any("rocksdb" in k.lower() for k in op.get("customMetrics", {}))
-                for op in state_ops
-            ), "query did not execute on the RocksDB state store"
+        progresses = [
+            json.loads(p if isinstance(p, str) else p.json)
+            for p in q.recentProgress
+        ]
+        state_ops = [op for p in progresses for op in p.get("stateOperators", [])]
+        assert state_ops and any(
+            any("rocksdb" in k.lower() for k in op.get("customMetrics", {}))
+            for op in state_ops
+        ), "query did not execute on the RocksDB state store"
     return spark.table(query_name)
 
 
@@ -341,7 +347,11 @@ def province_top3_per_batch(
     broadcast jobs per batch).  A caller that needs dimension changes
     to show up restarts the query.  Under SPARK_GRAFT_PAIR_CKPT=
     reliable the session needs a checkpoint dir, as at every `ckpt`
-    site."""
+    site.
+
+    The query starts through `run_bounded` at the session width
+    (`partitions=None`): it keeps no state, and each batch's window
+    SQL shuffles at the width the caller's session sets."""
     udim = ckpt(
         users.select("user_id", F.col("area").alias("province")), eager=True
     )
@@ -367,16 +377,12 @@ def province_top3_per_batch(
         _audit.observe_micro_batch_frame("province_top3_batch", out)
         out.write.mode("append").parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(run_batch)
-        .option(
-            "checkpointLocation",
-            _ckpt_loc(stream.sparkSession, checkpoint_dir),
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        stream.writeStream.foreachBatch(run_batch),
+        stream.sparkSession,
+        checkpoint_dir,
+        partitions=None,
     )
-    q.awaitTermination()
 
 
 class BlacklistLoop:
@@ -491,27 +497,19 @@ class BlacklistLoop:
         )
         _promote_state(spark, self.totals_dir)
 
-    def run(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        state_partitions: int | None = 8,
-    ) -> None:
-        # the per-batch delta/totals aggregates run over dimension-
-        # sized state: at the session's core-count width each batch
-        # paid 32 near-empty tasks per aggregate (profiled via
-        # ad_blacklist_feedback: 32-task stages at < 0.4 s total CPU).
-        # `state_scope` is the one stream-width policy:
-        # min(state_partitions, session width), conf restored on exit.
-        spark = stream.sparkSession
-        with state_scope(spark, state_partitions):
-            q = (
-                stream.writeStream.foreachBatch(self.process_batch)
-                .option("checkpointLocation", _ckpt_loc(spark, checkpoint_dir))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    def run(self, stream: DataFrame, checkpoint_dir: str) -> None:
+        """Fold `stream` to completion through `run_bounded`.  The
+        per-batch delta/totals aggregates run over dimension-sized
+        state: at the session's core-count width each batch paid 32
+        near-empty tasks per aggregate (profiled via
+        ad_blacklist_feedback: 32-task stages at < 0.4 s total CPU),
+        so it runs at `run_bounded`'s default width, min(8, session
+        width)."""
+        run_bounded(
+            stream.writeStream.foreachBatch(self.process_batch),
+            stream.sparkSession,
+            checkpoint_dir,
+        )
 
 
 def run_ad_module(

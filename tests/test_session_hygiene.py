@@ -4,8 +4,8 @@ sibling; run_to_completion restores shuffle.partitions even when no
 prior value existed; scoped session confs come back on the error path
 too; and the package keeps ONE entry point each for lineage
 truncation (functions/ckpt.py), temporary conf overrides
-(session.scoped_conf) and bounded-stream width
-(streaming.ad_stream.state_scope)."""
+(session.scoped_conf) and the bounded-stream lifecycle — start,
+checkpoint, width and await (streaming.ad_stream.run_bounded)."""
 
 from __future__ import annotations
 
@@ -186,17 +186,24 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
         (
             r"[\"']spark\.sql\.shuffle\.partitions[\"']",
             ("registry.py", "streaming/"),
-            "streaming/ad_stream.py::state_scope",
+            "streaming/ad_stream.py::run_bounded",
+        ),
+        (
+            r"availableNow=True|\.awaitTermination\(|[\"']checkpointLocation[\"']",
+            ("",),
+            "streaming/ad_stream.py::run_bounded",
         ),
     ],
-    ids=["lineage_truncation", "conf_override", "stream_width"],
+    ids=["lineage_truncation", "conf_override", "stream_width", "bounded_stream_start"],
 )
 def test_one_entry_point_per_mechanism(pattern, scope, owner):
     """Lineage truncation goes through functions.ckpt.ckpt, temporary
-    conf overrides through session.scoped_conf, and bounded streams'
-    width through streaming.ad_stream.state_scope — a second copy of
-    any of them silently escapes the SPARK_GRAFT_PAIR_CKPT knob, the
-    restore-on-error contract, or the session-width cap."""
+    conf overrides through session.scoped_conf, and every bounded
+    stream — its width, checkpoint, start and await — through
+    streaming.ad_stream.run_bounded.  A second copy of any of them
+    silently escapes the SPARK_GRAFT_PAIR_CKPT knob, the
+    restore-on-error contract, the session-width cap or the
+    checkpoint-path guard."""
     owner_path, owner_lines = _owned_lines(owner)
     offenders = [
         f"{rel}:{n}: {line.strip()}"

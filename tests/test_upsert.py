@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import os
 from datetime import datetime
 
@@ -304,10 +305,12 @@ def test_first_batch_state_is_jvm_only_with_declared_schema(spark, tmp_path):
     never touches a Python worker (no ExistingRDD scan of a Python
     RDD in its executed plan) and carries the declared schema exactly
     — names, types and nullability — whether declared as DDL or as a
-    StructType."""
+    StructType.  The same builder, `local_frame`, given rows plans as
+    one LocalTableScan and gives back the rows and the schema."""
     from pyspark.sql import types as T
 
     from analysisofuserbehavior_spark.plans.audit import executed_plan
+    from analysisofuserbehavior_spark.sources import local_frame
     from analysisofuserbehavior_spark.sources.upsert import _load_state
 
     absent = str(tmp_path / "absent")
@@ -325,3 +328,21 @@ def test_first_batch_state_is_jvm_only_with_declared_schema(spark, tmp_path):
         assert "ExistingRDD" not in executed_plan(state)
         assert state.schema == want
         assert state.count() == 0
+
+    rows = [("2024-01-01", 5, 2.5), ("2024-01-02", 7, None)]
+    declared = T.StructType(
+        [
+            T.StructField("day", T.StringType(), True),
+            T.StructField("click_count", T.LongType(), False),
+            T.StructField("score", T.DoubleType(), True),
+        ]
+    )
+    for schema in (declared, "day string, click_count long, score double"):
+        frame = local_frame(spark, rows, schema)
+        plan = executed_plan(frame)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        want = T.DataType.fromDDL(schema) if isinstance(schema, str) else schema
+        # the JVM side carries the declared nullability, not just the
+        # schema cached on the Python frame
+        assert T.StructType.fromJson(json.loads(frame._jdf.schema().json())) == want
+        assert [tuple(r) for r in frame.collect()] == rows
