@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions import qround
+from ..sources import local_frame
 
 
 def lsh_planes(n_bits: int, dim: int, seed: int) -> list[list[float]]:
@@ -701,9 +702,9 @@ def ann_bruteforce_topk_np(
     if not q_rows:
         # empty corpus/query block: np.array([]) is 1-D and the
         # axis-1 norm below would raise — return the empty frame
-        _sp = embeddings.sparkSession
-        return _sp.createDataFrame(
-            _sp.sparkContext.parallelize([], 1),
+        return local_frame(
+            embeddings.sparkSession,
+            [],
             "query_id long, rank long, neighbor_id long, sim double",
         )
     Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)

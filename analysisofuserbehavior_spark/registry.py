@@ -1017,14 +1017,13 @@ def q_top10_first_week_active(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("streaming_ad_running_totals")
 def q_streaming_ad_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """updateStateByKey-equivalent running totals through the
-    applyInPandasWithState operator (streaming/stateful.py), driven
-    to completion over the bounded event stream ON THE ROCKSDB STATE
-    STORE (round-6 VERDICT item 5: the disk-backed provider was
-    unit-only; this gated row now executes on it, asserted from the
-    query's own progress metrics — every other gated streaming row
-    keeps covering the default HDFS-backed provider).  The final
-    per-key value must equal the batch groupBy count exactly."""
+    """updateStateByKey-equivalent running totals through the JVM
+    streaming count (streaming/stateful.py::running_click_totals),
+    driven to completion over the bounded event stream ON THE ROCKSDB
+    STATE STORE, asserted from the query's own progress metrics —
+    every other gated streaming row keeps covering the default
+    HDFS-backed provider.  The final per-key value must equal the
+    batch groupBy count exactly."""
     from .streaming.ad_stream import read_event_stream, run_to_completion
     from .streaming.stateful import final_totals, running_click_totals
 
@@ -4179,10 +4178,10 @@ def q_clicks_rollup_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("streaming_funnel_within_window")
 def q_streaming_funnel_within_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The windowed funnel as a STATEFUL STREAM: the greedy fold's
-    (l1,l2,l3) accumulator lives in applyInPandasWithState per-user
-    state, resumed across 2 real time-ordered micro-batches (two-phase
-    replay split at the corpus midpoint; raises if the replay
-    collapsed to one batch).  Hash-gated against funnel_within_window's
+    (l1,l2,l3) accumulator lives in per-user Python state, resumed
+    across 2 real time-ordered micro-batches (two-phase replay split
+    at the corpus midpoint; raises if the replay collapsed to one
+    batch).  Hash-gated against funnel_within_window's
     EXISTS oracle — the streaming fold must land on the batch answer
     exactly (streaming/stateful.py::funnel_levels_stream)."""
     from datetime import datetime, timedelta
@@ -5823,363 +5822,58 @@ def q_stress_linear_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Only the first 50 `queries()` entries are hash-gated; this list
+# pins which queries fill them, in order.  Each slot's history (what
+# it displaced, and why) is in the git log of this list.
 _GATE_WINDOW = [
     "sessionize",
     "session_stats",
-    # round 6: unigram_surprisal (de-skewed corpus-LM stats — the
-    # driver now gates the checkpointed groupBy+join-back plan) takes
-    # session_aggr_stat's slot, whose 16-bucket conditional sums stay
-    # exercised by the gated session_filtered_aggr_stat; displaced
-    # rows stay hash-verified in ORACLE_FULL_r{N}.json.
     "unigram_surprisal",
     "session_filtered_aggr_stat",
     "session_random_extract",
-    # round 6: doc_tfidf_top_terms (de-skewed df + quantized ranking
-    # windows) takes session_detail's slot — the semi-join extract
-    # shape is plan-asserted (test_q4) and gated via tpch_q18's
-    # IN-subquery left-semi.
     "doc_tfidf_top_terms",
     "top10_categories",
     "top10_category_sessions",
-    # round 6: backoff_surprisal (trigram stupid-backoff LM — new
-    # operator, both branches exercised) takes tpch_q1's slot: q1's
-    # pushdown/codegen evidence is pinned by dedicated plan tests and
-    # its scan-agg algebra by the gated q18/q2/q9/q11 rows.
     "backoff_surprisal",
-    # round 13: run_task_page_convert (module 2's composed task_param
-    # → ranged scan → sessionize → page-split → rate lifecycle,
-    # VERDICT r09 #4) takes page_convert_rate's slot — it runs the
-    # SAME lag-adjacency pipeline end-to-end plus the task-param
-    # parse, strictly broader evidence (the run_task_area_top3
-    # rationale applied to module 2); the bare twin stays
-    # hash-verified in ORACLE_FULL_r{N}.json.
     "run_task_page_convert",
-    # round 11: run_task_area_top3 (module 3's composed task_param →
-    # ranged scan → dim join → UDAF agg → window top-3 lifecycle,
-    # VERDICT r08 #5) takes area_top3_products's slot — it runs the
-    # SAME area pipeline end-to-end plus the task-param parse and
-    # ranged pushdown, strictly broader evidence (the
-    # run_task_session_aggr rationale applied to module 3); the
-    # unranged twin stays hash-verified in ORACLE_FULL_r{N}.json.
     "run_task_area_top3",
-    # round 11: dsir_select (hashed-unigram importance-resampling
-    # selection — the first GATED consumer of the two-pass
-    # distributed-ntile ranking machinery, plus the broadcast
-    # bucket-LM join) takes ad_user_click_count's slot: that query is
-    # a bare per-user/day count whose algebra the gated ad_stat /
-    # ad_blacklist / streaming_ad_running_totals rows already carry;
-    # the displaced row stays hash-verified in ORACLE_FULL_r{N}.json.
     "dsir_select",
-    # round 15: dedup_contained_docs (anchor-complete token-run
-    # containment dedup — rarest-gram anchor join verified against the
-    # EXHAUSTIVE all-pairs oracle, so the hash proves the candidate
-    # pruning lost nothing: a candidate-generation-completeness
-    # evidence class nothing else gates) takes stress_linear_report's
-    # slot (VERDICT r11 #3: the stress row is rows-only by nature —
-    # its values are timings — and a strict reader counted it a gate
-    # failure; its scaling evidence keeps regenerating every driver
-    # run via ORACLE_FULL's rows-only check, bench.py, and the
-    # SCALING.md tables).
     "dedup_contained_docs",
-    # round 12: embedding_covariance (mapInPandas int64 Gram partials
-    # — the Python-side PARTIAL-AGGREGATION-merge evidence class: a
-    # wrong per-partition accumulate or merge flips the hash; the
-    # gated image_features_* rows exercise Arrow decode, not partial
-    # aggregation) takes ad_stat's slot — ad_stat is a plain
-    # groupBy count whose algebra the gated ad_blacklist /
-    # ad_province_top3 / streaming_ad_running_totals rows already
-    # carry; the displaced row stays hash-verified in
-    # ORACLE_FULL_r{N}.json.
     "embedding_covariance",
-    # round 13: run_task_ad_province_top3 (module 4's composed
-    # lifecycle: task-param parse → ranged scan → dim join → per-day
-    # province counts → window top-3, VERDICT r09 #4) takes
-    # ad_province_top3's slot — the same pipeline end-to-end plus the
-    # param surface, strictly broader evidence; the bare twin stays
-    # hash-verified in ORACLE_FULL_r{N}.json.  With this all four
-    # reference main() lifecycles sit in the driver's gate window.
     "run_task_ad_province_top3",
-    # round 4 (cont.): streaming_dedup_keys (cross-micro-batch dedup
-    # state proven by a DISTINCT hash) took ad_click_trend's slot.
-    # round 15: vocab_coverage_curve (token-coverage mass at candidate
-    # vocab sizes via the two-pass bucket rank over |vocab| + one
-    # conditional-sum aggregate for all cut-offs — the
-    # tokenizer-sizing evidence class next to the gated
-    # bpe_learn_merges) takes streaming_dedup_keys's slot (VERDICT
-    # r11 #3 promotion): cross-batch streaming state stays gated by
-    # SEVEN rows (upsert + scd2 crash recovery, late-event drop,
-    # click-attribution outer, ad running totals, sliding trend,
-    # blacklist feedback), so the dropDuplicates-state hash is the
-    # family's most redundant member; it stays hash-verified in
-    # ORACLE_FULL_r{N}.json.
     "vocab_coverage_curve",
-    # round 14: user_spend_gini (exact Gini via the two-pass bucketed
-    # rank — distributed order statistics with integer-exact
-    # numerators, an inequality-measure evidence class nothing else
-    # gates) takes tpch_q2_derived's slot (VERDICT r10 #3): q2's
-    # correlated min-cost subquery shape stays hash-verified in
-    # ORACLE_FULL_r{N}.json alongside 20 TPC-H siblings.
     "user_spend_gini",
-    # round 14: rolling_7d_distinct_users (EXACT sliding count-distinct
-    # via the bounded ≤7-day fan-out, never 7 rescans — a dedup-window
-    # evidence class nothing else gates) takes tpch_q9_derived's slot
-    # (VERDICT r10 #3): q9's 5-table join chain stays hash-verified in
-    # the full oracle.
     "rolling_7d_distinct_users",
-    # round 6 (second pass): dedup_exact_canonical (normalized-key
-    # grouping + quality-aware keeper selection) takes dedup_exact's
-    # slot — it strictly subsumes the raw md5-grouping evidence and
-    # adds the canonical-selection window; displaced rows stay
-    # hash-verified in ORACLE_FULL_r{N}.json.
     "dedup_exact_canonical",
     "dedup_ngram_jaccard",
-    # round 6 (second pass): dedup_clusters (recursive-CTE closure
-    # oracle — newly hash-gated) takes dedup_minhash_lsh's slot: the
-    # clusters query CONSUMES minhash_lsh_pairs and its oracle embeds
-    # the exact-jaccard pair target, so an LSH-path divergence still
-    # breaks this hash — the evidence is preserved and extended to
-    # the transitive fixpoint.
     "dedup_clusters",
-    # round 6: remove_dup_spans (de-skewed duplicated-span removal —
-    # the rebuilt TEXT hash-gates) takes daily_cumulative_clicks's
-    # slot, whose running-total algebra the gated
-    # streaming_ad_running_totals carries.
     "remove_dup_spans",
-    # round 5 (cont.): dup_ngram_coverage (Gopher duplicated-n-gram
-    # coverage — positional multiplicity + df, a repetition-filter
-    # evidence class nothing else gates) takes ann_cosine_topk's
-    # slot: the brute-force ANN's results are provably reproduced by
-    # the gated ann_ivf_topk at full probe
-    # (test_ivf_kmeans_adversarial_boundary_queries pins set
-    # equality), so the gate loses no evidence.
     "dup_ngram_coverage",
-    # round 7: ann_ivf_topk_indexed (same deterministic IVF oracle,
-    # PLUS the materialized cluster-partitioned layout and the
-    # plan-pinned partition-pruned probe) strictly subsumes
-    # ann_ivf_topk's evidence; the inline twin stays hash-verified in
-    # ORACLE_FULL_r{N}.json and equality of the two is unit-pinned.
     "ann_ivf_topk_indexed",
-    # round 14: events_segment_pit (point-in-time SCD2 enrichment —
-    # BUILT ON the same asof_join carry-forward machinery, so an as-of
-    # divergence still breaks this hash, plus the two-version history
-    # and the UNKNOWN/LEGACY arbitration the bare as-of row lacks)
-    # takes click_asof_prior_view's slot (VERDICT r10 #3); the
-    # displaced row stays hash-verified in ORACLE_FULL_r{N}.json
-    # against DuckDB's native ASOF JOIN.
     "events_segment_pit",
-    # round 7: semantic_dedup (SemDeDup keep-farthest-from-centroid
-    # over embedding clusters — an embedding-space dedup evidence
-    # class nothing else gates) takes embedding_neardup_exact's slot:
-    # the displaced row is the calibration-only O(n²) pair generator
-    # whose exact-cosine algebra semantic_dedup's pair_sim and the
-    # gated ann rows carry; it stays hash-verified in ORACLE_FULL.
     "semantic_dedup",
-    # round 6 (second pass): quality_gate_report takes text_stats's
-    # slot — the gate's fused signals are pinned equal to text_stats'
-    # formulas (test_quality_gate_signals_match_canonical_operators),
-    # so the projection evidence survives while the verdict/reasons
-    # layer and the LM join are added.
     "quality_gate_report",
-    # round 5 (cont.): bigram_surprisal (transition-probability LM
-    # filter, window-derived corpus stats) takes lang_id's slot —
-    # lang_id's row-local n-gram heuristic is evidence-adjacent to
-    # the gated text_stats projections; displaced queries stay
-    # hash-verified in ORACLE_FULL_r{N}.json.
-    # round 14: schema_evolution_union (heterogeneous-schema read —
-    # mergeSchema union with typed NULL backfill across layout
-    # generations, a warehouse evidence class nothing else gates)
-    # takes bigram_surprisal's slot (VERDICT r10 #3): the gated
-    # backoff_surprisal's stupid-backoff chain CONSUMES the same
-    # bigram and unigram transition statistics (both branches
-    # exercised), so a bigram-LM divergence still breaks that hash;
-    # the displaced row stays hash-verified in ORACLE_FULL_r{N}.json.
     "schema_evolution_union",
-    # round 5: bm25_topk (corpus-stats broadcast + quantized-rank
-    # retrieval — an evidence class no other gated row carries) takes
-    # doc_fingerprint's slot, whose rolling-hash projection is
-    # evidence-adjacent to the gated dedup_exact/token_counts rows.
     "bm25_topk",
-    # round 6: streaming_scd2_crash_recovery (fault-injected CDC
-    # crash between Scd2Sink's stage and finalize + checkpoint
-    # restart vs a closed-form history oracle) takes
-    # session_window_rollup's slot — its session-rollup algebra is
-    # the gated sessionize/session_stats pair's.
     "streaming_scd2_crash_recovery",
-    # round 9: bpe_learn_merges (distributed BPE tokenizer training —
-    # iterative weighted-pair argmax + sentinel-string merge rewrite,
-    # oracle = unrolled materialized CTE triples) takes vocab_growth's
-    # slot: both are vocabulary-statistics evidence, and the BPE loop
-    # additionally gates the iterative-literal-replan pattern no other
-    # row carries; vocab_growth stays hash-verified in the full oracle.
     "bpe_learn_merges",
-    # round 8: session_concurrency_hourly (distributed sweep-line —
-    # two-level prefix sum vs the oracle's serial global window) takes
-    # area_top3_products_sql's slot, whose SQL-surface twin evidence
-    # the gated area_top3_products carries; displaced rows stay
-    # hash-verified in ORACLE_FULL_r{N}.json.
     "session_concurrency_hourly",
-    # round 8: lsh_tuning_report (measured band/row cost-recall
-    # trade-off over the exact-Jaccard pair distribution, pow-free
-    # probability algebra) took top10_active_users's slot — the
-    # module-5 sort+limit family keeps 4 siblings in the full oracle.
-    # round 15: ann_ivfpq_topk (the gated IVF coarse quantizer
-    # composed with PQ's 4×16-codebook ADC scan — FAISS's
-    # billion-scale default layout re-expressed relationally, gating
-    # the composed determinism contract end-to-end) takes
-    # lsh_tuning_report's slot (VERDICT r11 #3 promotion): the tuning
-    # report is a CALIBRATION readout whose exact-Jaccard pair
-    # algebra the gated dedup_ngram_jaccard and dedup_clusters rows
-    # already carry; it stays hash-verified in ORACLE_FULL_r{N}.json.
     "ann_ivfpq_topk",
-    # round 5: events_cube (CUBE grouping-sets with integer-cents
-    # sums) and user_halves_setops (INTERSECT/EXCEPT) take the slots
-    # of top10_purchase_users/top10_visit_growth — 2nd and 3rd of the
-    # module-5 near-family whose shape top10_active_users already
-    # gates.
-    # round 8 (second pass): item_covisitation (row-local capped pair
-    # fan-out vs the oracle's naive self-join) takes events_cube's
-    # slot — CUBE algebra is a Catalyst built-in whose grouping-sets
-    # evidence the full oracle and user_type_grouping_sets retain.
-    # round 12: item_communities_lpa takes item_covisitation's slot —
-    # its oracle EMBEDS the same baskets/pair-count CTEs and extends
-    # them through 3 unrolled synchronous label-propagation rounds
-    # (weighted argmax + smallest-label ties), so a covisitation
-    # divergence still breaks this hash: evidence preserved and
-    # extended to the community fixpoint (the dedup_clusters-over-
-    # minhash_lsh precedent); the displaced row stays hash-verified
-    # in ORACLE_FULL_r{N}.json.
     "item_communities_lpa",
-    # round 10: embedding_dedup_clusters_lsh (banded-LSH candidates →
-    # exact cosine verify → pointer-jumping closure, the full LSH
-    # pipeline under the hash via bit-exact ±1-plane sign sums —
-    # VERDICT r07 #1: retires the last O(n²) plan with gate-class
-    # evidence) takes curriculum_stages's slot: its histogram-CDF
-    # exact-quantile algebra is the same count-CDF discipline the
-    # gated skew_key_diagnostics carries, and the staging layer stays
-    # hash-verified in ORACLE_FULL_r{N}.json.
     "embedding_dedup_clusters_lsh",
-    # round 4: ad_blacklist_feedback (multi-batch streaming state with
-    # an unrolled-SQL oracle — strictly stronger evidence) takes the
-    # slot of top10_purchase_growth, the near-twin of
-    # top10_visit_growth; the displaced query stays hash-verified in
-    # ORACLE_FULL_r{N}.json.
     "ad_blacklist_feedback",
-    # page_bfs_depths (iterative frontier BFS vs a recursive-CTE
-    # oracle) replaced top10_first_week_active, third of the module-5
-    # near-family.
-    # round 15: orders_mv_incremental (incremental materialized-view
-    # maintenance — merge(standing partials, delta partials) proven
-    # EXACTLY equal to the full-recompute oracle, avg rebuilt from
-    # merged sum/count: the warehouse view-maintenance evidence class
-    # nothing else gates) takes page_bfs_depths's slot (VERDICT r11
-    # #3 promotion): iterative-fixpoint evidence stays gated via
-    # item_communities_lpa (unrolled synchronous rounds) and
-    # dedup_clusters (checkpointed closure); the BFS row stays
-    # hash-verified in ORACLE_FULL_r{N}.json.
     "orders_mv_incremental",
     "streaming_ad_running_totals",
-    # round 6: ad_click_trend (module-4 trend table, the last ad
-    # output not under gate) takes token_counts's slot — its
-    # row-local projections are the gated text_stats's class.
-    # round 8: cdc_apply_changelog (MERGE-style latest-change-wins
-    # + delete-drop reduction) takes ad_click_trend's slot — the
-    # batch twin of the gated streaming_sliding_trend.
     "cdc_apply_changelog",
-    # round 9: ab_test_report (md5-parity unit bucketing + pooled
-    # two-proportion z-test with cross-engine sqrt/division parity —
-    # an experimentation evidence class no other row carries) takes
-    # tpch_q11_derived's slot, whose HAVING-vs-global-total two-agg
-    # shape stays hash-verified in the full oracle alongside 20 TPC-H
-    # siblings (tpch_q6's scan-agg pushdown is plan-asserted).
     "ab_test_report",
-    # round 7: corpus_pipeline_e2e (the COMPOSED lifecycle — quality
-    # gate → canonical dedup → span scrub → chunking → packing, with
-    # per-stage corpus statistics over each stage's own input) takes
-    # pack_sequences's slot: the e2e runs pack_sequences as its final
-    # stage over the chunk stream, so the two-pass prefix-sum
-    # evidence is preserved while the composition (schema handoffs,
-    # survivor propagation) becomes gated; pack_sequences stays
-    # hash-verified in ORACLE_FULL_r{N}.json.
     "corpus_pipeline_e2e",
-    # round 13: corpus_pipeline_incremental (the two-day incremental
-    # lifecycle — admission screen vs the stored corpus, dynamic
-    # day-partition overwrite, ledger-guarded index append, and a
-    # full day-2 RE-RUN whose idempotence the hash proves) takes
-    # incremental_admit's slot: its oracle embeds the IDENTICAL
-    # admission CTEs (oracle.py _ADMISSION_CTES), so an admission
-    # divergence still breaks this hash while the gate gains the
-    # store/index/re-run lifecycle; the solo row stays hash-verified
-    # in ORACLE_FULL_r{N}.json.
     "corpus_pipeline_incremental",
     "streaming_sliding_trend",
-    # round 4: run_task_session_aggr gates the whole migration path
-    # (task_param wire format → pushed-down ranged scan → predicate
-    # engine → aggregate) — strictly broader evidence than a second
-    # parameterization of the same predicate engine
-    # (session_filtered_aggr_stat2, displaced but still verified in
-    # ORACLE_FULL_r{N}.json).
-    # round 8: training_shuffle_shards (deterministic md5 prefix
-    # sharding manifest) takes run_task_session_aggr's slot, whose
-    # predicate+aggr path the gated session_filtered_aggr_stat
-    # carries (the task-param parse keeps its own unit tests).
-    # round 14: covisit_next_item_hitrate (sessionized co-visitation
-    # candidate model + leave-last-out next-item evaluation, exact
-    # integer hit numerators — a recommender-eval evidence class
-    # nothing else gates) takes training_shuffle_shards's slot
-    # (VERDICT r10 #3): the md5 prefix-shard manifest algebra is the
-    # gated dsir_select/ab_test_report rows' hashing discipline, and
-    # the displaced row stays hash-verified in ORACLE_FULL_r{N}.json.
     "covisit_next_item_hitrate",
-    # round 6: streaming_late_event_drop (append-mode watermark drop
-    # across a checkpoint restart, hash-sensitive to a wrongly-merged
-    # late row — an evidence class nothing else gates) takes
-    # tpch_q10's slot, whose join+agg+top-k shape the gated
-    # q18/q2_derived rows carry.
     "streaming_late_event_drop",
-    # round 5: streaming_upsert_crash_recovery (fault-injected
-    # crash between the upsert sink's stage and finalize, then a
-    # checkpoint restart — oracle-checked recovery, an evidence class
-    # nothing else gates) takes streaming_session_rollup's slot; its
-    # batch twin session_window_rollup stays gated and the streaming
-    # variant stays hash-verified in ORACLE_FULL_r{N}.json.
     "streaming_upsert_crash_recovery",
-    # round 5: image_features_ppm (real P6 decode through Arrow
-    # mapInPandas, hash-gated vs a closed-form oracle — the only
-    # multimodal evidence class) takes clean_corpus's slot, whose
-    # dedup+filter composition the gated dedup_exact/text_stats rows
-    # cover.
-    # round 7: image_features_jpeg (baseline JPEG — full huffman
-    # entropy decode of a COMPRESSED format, closed-form DC-quant
-    # oracle) takes image_features_ppm's slot: the uncompressed
-    # token-header decode class stays gated via the BMP twin's shape
-    # and ppm remains hash-verified in ORACLE_FULL_r{N}.json.
     "image_features_jpeg",
-    # round 6: streaming_click_attribution (watermarked stream-stream
-    # interval join — the only stream-stream join class) takes
-    # session_paths's slot; lag-adjacency stays gated via
-    # page_convert_rate.
-    # round 12: the LEFT OUTER twin takes the inner join's slot — its
-    # oracle embeds the IDENTICAL matched-pair SQL and adds the
-    # eviction-driven NULL rows under the final-watermark cutoff, so
-    # an inner-join divergence still breaks this hash while the gate
-    # gains the state-eviction evidence class; the displaced row stays
-    # hash-verified in ORACLE_FULL_r{N}.json.
     "streaming_click_attribution_outer",
-    # round 6: snapshot_diff_customer (snapshot diff —
-    # added/removed/changed classification) takes cohort_retention's
-    # slot, whose self-join + conditional-agg shape the gated
-    # q18/q9_derived and events_cube rows carry.
-    # round 8: skew_key_diagnostics (exact p99 rows-per-key via the
-    # count-histogram CDF, 4-key union) took snapshot_diff_customer's
-    # slot — the SCD family keeps the stronger gated
-    # streaming_scd2_crash_recovery row.
-    # round 15: quantile_normalize_by_type (rank-based feature
-    # scaling via the GROUPED two-pass bucket rank + closed-form
-    # integer ntile — strictly broader order-statistics evidence:
-    # per-group ranking, percentile reconstruction, and integer-cent
-    # cell bounds on top of the same count-CDF discipline) takes
-    # skew_key_diagnostics's slot (VERDICT r11 #3 promotion); the
-    # diagnostics row stays hash-verified in ORACLE_FULL_r{N}.json.
     "quantile_normalize_by_type",
     "tpch_q18",
 ]

@@ -520,10 +520,11 @@ def run_ad_module(
 ) -> dict[str, DataFrame]:
     """Module 4 end-to-end over the bounded event stream — the
     streaming counterpart of modules.run_task: the dynamic-blacklist
-    feedback loop, the updateStateByKey-style running totals
-    (applyInPandasWithState), the per-batch SQL province top-3, and
-    the sliding trend, each driven to completion.  Returns the final
-    result tables keyed like the reference's MySQL sinks (§1.3)."""
+    feedback loop, the updateStateByKey-style running totals (a JVM
+    streaming count, no Python worker), the per-batch SQL province
+    top-3, and the sliding trend, each driven to completion.  Returns
+    the final result tables keyed like the reference's MySQL sinks
+    (§1.3)."""
     import os as _os
 
     from ..operators import behavior_model as bm

@@ -1,29 +1,24 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Module 4's stateful streaming operators: the funnel's per-user
+state machine plus the JVM running totals.
 
 The reference's `updateStateByKey` (AdClickRealTimeStatSpark.java:
 620-676) keeps a never-expiring Long per (day, province, city, ad)
-and re-emits the full running total every 5 s batch.  The built-in
-streaming `groupBy().count()` covers that exactly (ad_stream.py);
-this module is the FINE-GRAINED path for state logic the built-in
-aggregates can't express — per-key arbitrary Python state with
-explicit timeout control, the Structured Streaming replacement for
-updateStateByKey's custom update function.
+and re-emits the running total every 5 s batch.  The built-in
+streaming `groupBy().count()` in update mode covers that exactly, so
+`running_click_totals` is a JVM-only stateful aggregate: a partial
+count before the exchange, state in the executor-side StateStore
+(RocksDB in production via `spark.sql.streaming.stateStore.
+providerClass`), partitioned by grouping key, and no Python worker.
 
-Demonstrated operator: running click totals per (day, ad_id) with
-optional processing-time state TTL (the reference never expires
-state — :648-676 returns Optional.of(clickCount) forever; the TTL
-knob is the rebuild's new decision, default off to match).
-
-Scale notes: state lives in the executor-side StateStore (RocksDB in
-production via `spark.sql.streaming.stateStore.providerClass`),
-partitioned by grouping key — adding executors shards state
-linearly.  The pandas function sees one key's rows per call, Arrow-
-batched; no state ever crosses the driver.
+`funnel_levels_stream` is the one shape the built-in aggregates
+can't express — a sequential per-key fold — so it keeps arbitrary
+per-user Python state, Arrow-batched per key, held in the executors'
+state store.  It is the package's only Python stateful operator.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -31,67 +26,15 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-RUNNING_TOTAL_SCHEMA = T.StructType(
-    [
-        T.StructField("day", T.StringType()),
-        T.StructField("ad_id", T.LongType()),
-        T.StructField("click_count", T.LongType()),
-    ]
-)
 
-_STATE_SCHEMA = T.StructType([T.StructField("count", T.LongType())])
-
-
-def _update_running_total(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterable[pd.DataFrame]:
-    """Per-key update: state += batch rows; emit the running total.
-
-    Mirrors the reference's update function (:651-672): sum the new
-    values for the key, add the previous state, re-emit.  Runs once
-    per key per micro-batch with ALL the key's rows (Arrow batches).
-    """
-    if state.hasTimedOut:
-        state.remove()
-        return
-    new_rows = sum(len(pdf) for pdf in pdfs)
-    (prev,) = state.getOption or (0,)
-    total = prev + new_rows
-    state.update((total,))
-    day, ad_id = key
-    yield pd.DataFrame({"day": [day], "ad_id": [ad_id], "click_count": [total]})
-
-
-def running_click_totals(stream: DataFrame, ttl_ms: int | None = None) -> DataFrame:
-    """updateStateByKey-equivalent running totals per (day, ad_id).
-
-    Emits the key's new cumulative count every micro-batch it
-    appears in (update semantics).  `ttl_ms` arms a processing-time
-    timeout that clears idle state — the knob the reference lacks.
-    """
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def with_ttl(key, pdfs, state):
-        if ttl_ms is not None and not state.hasTimedOut:
-            state.setTimeoutDuration(ttl_ms)
-        yield from _update_running_total(key, pdfs, state)
-
+def running_click_totals(stream: DataFrame) -> DataFrame:
+    """updateStateByKey-equivalent running totals per (day, ad_id):
+    in update mode each micro-batch emits the new cumulative count of
+    every key it touched."""
     return (
         stream.where(F.col("event_type") == "click")
         .groupBy("day", "ad_id")
-        .applyInPandasWithState(
-            with_ttl,
-            outputStructType=RUNNING_TOTAL_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=timeout,
-        )
+        .agg(F.count(F.lit(1)).alias("click_count"))
     )
 
 
@@ -101,63 +44,6 @@ def final_totals(updates: DataFrame) -> DataFrame:
     bounded-stream run be checked against the batch `groupBy().count()`
     oracle exactly."""
     return updates.groupBy("day", "ad_id").agg(F.max("click_count").alias("click_count"))
-
-
-# ---- transformWithState twin (Spark 4 arbitrary-state v2) -----------------
-#
-# Same operator as running_click_totals, on the successor API:
-# StatefulProcessor + typed per-key state handles.  What it buys at
-# scale over applyInPandasWithState: composable named state variables
-# (value/list/map) instead of one struct, explicit timers instead of
-# one timeout conf, and first-class RocksDB state-store integration
-# (the API requires the RocksDB provider — changelog-checkpointed,
-# memory-bounded state at 100 TB).
-#
-# ENV-GATED, like multimodal decode and the Kafka broker path: the
-# v2 state server speaks protobuf and this container ships no
-# working `google.protobuf`, so execution raises
-# STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE here.  The operator
-# is complete and the unit test runs it wherever protobuf exists
-# (tests/test_streaming.py: skipif).
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class _RunningTotalProcessor(StatefulProcessor):
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._count = handle.getValueState("count", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        new_rows = sum(len(pdf) for pdf in rows)
-        prev = self._count.get()[0] if self._count.exists() else 0
-        total = prev + new_rows
-        self._count.update((total,))
-        day, ad_id = key
-        yield pd.DataFrame({"day": [day], "ad_id": [ad_id], "click_count": [total]})
-
-    def close(self) -> None:
-        pass
-
-
-def running_click_totals_tws(stream: DataFrame) -> DataFrame:
-    """`running_click_totals` on transformWithStateInPandas.  The
-    caller must run with the RocksDB state-store provider
-    (`spark.sql.streaming.stateStore.providerClass` =
-    ...state.RocksDBStateStoreProvider) — the v2 API rejects the
-    default HDFS-backed store."""
-    return (
-        stream.where(F.col("event_type") == "click")
-        .groupBy("day", "ad_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_RunningTotalProcessor(),
-            outputStructType=RUNNING_TOTAL_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
 
 
 # ---- streaming windowFunnel ------------------------------------------------

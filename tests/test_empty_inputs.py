@@ -18,6 +18,7 @@ from analysisofuserbehavior_spark.operators.page_flow import page_convert_rate
 from analysisofuserbehavior_spark.operators.sessionize import sessionize
 from analysisofuserbehavior_spark.operators.similarity import (
     ann_bruteforce_topk,
+    ann_bruteforce_topk_np,
     embedding_neardup_pairs,
 )
 
@@ -59,6 +60,11 @@ def test_similarity_empty(spark):
     emb = _empty(spark, "vec_id long, embedding array<float>")
     assert ann_bruteforce_topk(emb).count() == 0
     assert embedding_neardup_pairs(emb).count() == 0
+    # empty query block: a JVM-only seed with the non-empty result's schema
+    np_out = ann_bruteforce_topk_np(emb)
+    assert np_out.count() == 0
+    assert np_out.columns == ["query_id", "rank", "neighbor_id", "sim"]
+    assert "ExistingRDD" not in np_out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_random_extract_empty(spark):

@@ -869,6 +869,16 @@ def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):
 # _SINGLE_PARTITION_WINDOW_WHITELIST: (max hits, size bound + why)
 _STREAMING_SP_WINDOW_WHITELIST: dict[str, tuple[int, str]] = {}
 
+# Python exec nodes: each starts a Python worker per task of every
+# micro-batch.  Only the funnel's sequential per-user fold needs one.
+_STREAMING_PYTHON_NODES = (
+    "FlatMapGroupsInPandasWithState",
+    "TransformWithStateInPandas",
+    "ArrowEvalPython",
+    "MapInPandas",
+)
+_STREAMING_PYTHON_WHITELIST = {"streaming_funnel_within_window"}
+
 
 def test_streaming_micro_batch_plans_lint(spark, sf_dir):
     from analysisofuserbehavior_spark.plans import (
@@ -900,6 +910,12 @@ def test_streaming_micro_batch_plans_lint(spark, sf_dir):
                 problems.append(f"{name}/{tag}: CartesianProduct")
             if "BatchEvalPython" in plan:
                 problems.append(f"{name}/{tag}: BatchEvalPython (row-at-a-time UDF)")
+            if name not in _STREAMING_PYTHON_WHITELIST:
+                problems.extend(
+                    f"{name}/{tag}: {node} (Python worker per micro-batch)"
+                    for node in _STREAMING_PYTHON_NODES
+                    if node in plan
+                )
             sp_hits.extend(plans.single_partition_window_sorts(plan))
         cap = _STREAMING_SP_WINDOW_WHITELIST.get(name, (0, "not whitelisted"))
         if len(sp_hits) > cap[0]:

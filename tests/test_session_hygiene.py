@@ -193,8 +193,19 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
             ("",),
             "streaming/ad_stream.py::run_bounded",
         ),
+        (
+            r"applyInPandasWithState|transformWithStateInPandas",
+            ("",),
+            "streaming/stateful.py::funnel_levels_stream",
+        ),
     ],
-    ids=["lineage_truncation", "conf_override", "stream_width", "bounded_stream_start"],
+    ids=[
+        "lineage_truncation",
+        "conf_override",
+        "stream_width",
+        "bounded_stream_start",
+        "stateful_python_state",
+    ],
 )
 def test_one_entry_point_per_mechanism(pattern, scope, owner):
     """Lineage truncation goes through functions.ckpt.ckpt, temporary
@@ -203,7 +214,9 @@ def test_one_entry_point_per_mechanism(pattern, scope, owner):
     streaming.ad_stream.run_bounded.  A second copy of any of them
     silently escapes the SPARK_GRAFT_PAIR_CKPT knob, the
     restore-on-error contract, the session-width cap or the
-    checkpoint-path guard."""
+    checkpoint-path guard.  Per-key Python state lives only in the
+    funnel's sequential fold; every other stateful stream stays in
+    the JVM, with no Python worker per key per batch."""
     owner_path, owner_lines = _owned_lines(owner)
     offenders = [
         f"{rel}:{n}: {line.strip()}"

@@ -1,4 +1,4 @@
-"""applyInPandasWithState running totals (streaming/stateful.py).
+"""Streaming running totals (streaming/stateful.py).
 
 Drives a REAL multi-batch stream: the events split across several
 files with maxFilesPerTrigger=1 forces one micro-batch per file, so
@@ -91,44 +91,3 @@ def test_running_totals_accumulate_across_batches(spark, tmp_path):
         ("2024-01-02", 3): 1,
         ("2024-01-01", 5): 1,
     }
-
-
-class _FakeState:
-    """Minimal GroupState stand-in for unit-testing the update fn."""
-
-    def __init__(self, value=None, timed_out=False):
-        self._v = value
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_set = None
-
-    @property
-    def getOption(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def remove(self):
-        self.removed = True
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_set = ms
-
-
-def test_update_fn_accumulates_and_times_out():
-    import pandas as pd
-    from analysisofuserbehavior_spark.streaming.stateful import _update_running_total
-
-    # fresh key: 3 rows → emit 3
-    st = _FakeState()
-    out = list(_update_running_total(("2024-01-01", 1), iter([pd.DataFrame({"x": [1, 2, 3]})]), st))
-    assert out[0]["click_count"].iloc[0] == 3 and st.getOption == (3,)
-    # existing state 5 + 2 rows → emit 7
-    st = _FakeState(value=(5,))
-    out = list(_update_running_total(("2024-01-01", 1), iter([pd.DataFrame({"x": [1, 2]})]), st))
-    assert out[0]["click_count"].iloc[0] == 7
-    # timed-out key: state removed, nothing emitted
-    st = _FakeState(value=(5,), timed_out=True)
-    out = list(_update_running_total(("2024-01-01", 1), iter([]), st))
-    assert out == [] and st.removed

@@ -3,7 +3,6 @@ from __future__ import annotations
 import os
 from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from analysisofuserbehavior_spark.streaming.ad_stream import (
@@ -606,62 +605,6 @@ def test_stream_stream_interval_join_semantics(spark, tmp_path):
     assert progress["stateOperators"], "join kept no state store"
     op = progress["stateOperators"][0]
     assert "symmetricHashJoin" in op["operatorName"], op["operatorName"]
-
-
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState v2 state server needs google.protobuf "
-    "(not shipped in this container)",
-)
-def test_running_totals_tws_matches_v1(spark, tmp_path):
-    """Both stateful APIs must land on identical final totals."""
-    from analysisofuserbehavior_spark.streaming.stateful import (
-        final_totals,
-        running_click_totals,
-        running_click_totals_tws,
-    )
-
-    rows = [
-        (1, (datetime(2024, 1, 1, 10, 5)), 1, "click", 0.0, '{"k": 3}'),
-        (2, (datetime(2024, 1, 1, 10, 6)), 1, "click", 0.0, '{"k": 3}'),
-        (3, (datetime(2024, 1, 2, 10, 7)), 2, "click", 0.0, '{"k": 7}'),
-    ]
-    d = _write_batches(spark, str(tmp_path), [rows])
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        v2 = final_totals(
-            run_to_completion(
-                running_click_totals_tws(read_event_stream(spark, d)),
-                "t_tws",
-                mode="update",
-            )
-        ).collect()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    v1 = final_totals(
-        run_to_completion(
-            running_click_totals(read_event_stream(spark, d)),
-            "t_v1_twin",
-            mode="update",
-        )
-    ).collect()
-    assert sorted(map(tuple, v2)) == sorted(map(tuple, v1))
 
 
 def test_dropduplicates_state_survives_micro_batches(spark, tmp_path):
