@@ -353,7 +353,9 @@ def ingest_corpus_day(
     the file fall back to the MAX count across day markers — counts
     are monotone per append, so max == latest regardless of day
     order.  (The `_stats` manifest is ingest-batch-sized, so the
-    guard's count is a tiny metadata-shaped job per ingest.)
+    guard's count is a tiny metadata-shaped job, run once per
+    screened ingest; the append adds exactly one row, so the commit
+    records `live + 1` without counting again.)
 
     The first day (`first_day=True`) builds the index instead of
     appending (write_inverted_index), with the same ledger discipline.
@@ -466,10 +468,11 @@ def ingest_corpus_day(
     )
     if first_day:
         write_inverted_index(admitted, index_dir)
+        n_stats = 1
     else:
+        live = read_index_stats(spark, index_dir).count()
         committed = _ledger_committed_stats_rows(spark, fs, ledger_dir)
         if committed is not None:
-            live = read_index_stats(spark, index_dir).count()
             if live > committed:
                 raise RuntimeError(
                     f"inverted index at {index_dir} holds {live} _stats "
@@ -481,6 +484,7 @@ def ingest_corpus_day(
             # last ingest (manifest summed to one row) — legitimate;
             # the commit below re-bases the ledger to the live layout
         append_inverted_index(admitted, index_dir)
+        n_stats = live + 1
     # maintain the signature table BEFORE the marker commits (the
     # marker's presence proves store + index + signatures are all
     # complete).  Dynamic partition overwrite keeps the re-run /
@@ -498,8 +502,8 @@ def ingest_corpus_day(
             .parquet(sig_dir)
         )
     # commit LAST: day marker + single-file baseline, both carrying
-    # the post-append manifest row count
-    n_stats = read_index_stats(spark, index_dir).count()
+    # the post-append manifest row count — every write or append adds
+    # exactly one `_stats` row, so it is known without a second count
     out = fs.create(marker, True)
     out.write(bytearray(str(n_stats).encode("ascii")))
     out.close()

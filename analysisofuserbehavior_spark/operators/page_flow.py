@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import qround
+from ..sources import local_frame
 
 
 def page_splits(
@@ -62,15 +63,11 @@ def page_convert_rate(
     divide by zero; ANSI mode makes the guard explicit).
     """
     splits = [f"{a}_{b}" for a, b in zip(target_flow, target_flow[1:])]
-    # one-slice parallelize: a bare createDataFrame spreads this
-    # steps-sized frame over defaultParallelism pickled partitions,
-    # each costing a Python-worker round-trip per downstream scan
-    target_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i + 1, s) for i, s in enumerate(splits)], 1
-        ),
-        "step int, split string",
-    )
+    # one slice: a local scan splits its rows over up to
+    # defaultParallelism tasks, each a map task of the join's exchange
+    target_df = local_frame(
+        spark, [(i + 1, s) for i, s in enumerate(splits)], "step int, split string"
+    ).coalesce(1)
     pair_counts = (
         page_splits(actions, flow_col)
         .where(F.col("split").isin(splits))

@@ -197,6 +197,18 @@ def get_spark(
             ),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Whole-stage codegen's generated-class cache keeps 100
+        # entries by default, but one warm perfbench `module_tasks`
+        # cycle compiles ~227 classes (session 112, ad 50, area 34,
+        # page 31): every task recompiled everything, even an
+        # identical resubmission.  A four-seed sweep (56 tasks, with
+        # warm-ups) holds ~440 distinct classes; Guava splits the
+        # bound over 4 independently evicting segments, hence the
+        # headroom.  Warm tasks then compile 6/4/2/8 classes (only the
+        # literal-specialised ones), a resubmission 0, for ~5 MiB more
+        # metaspace.  Static: like the options above, it must be set
+        # when the JVM starts.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # Spark 4.1's checkpoint-file checksums (corruption detection
         # for DURABLE checkpoints on unreliable object stores) write a
         # sidecar checksum through an async pool and make every state

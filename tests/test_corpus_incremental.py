@@ -294,3 +294,38 @@ def test_legacy_store_without_sigs_self_heals(spark, tmp_path):
         (10, "2024-01-02"),
         (22, "2024-01-03"),
     }
+
+
+def test_marker_payload_is_live_stats_rows(spark, tmp_path):
+    """The commit records the post-ingest `_stats` row count without
+    counting it again (each write or append adds exactly one manifest
+    row): after every ingest — first day, screened days, after a
+    compaction, a backfill, and onto an index with no ledger — the
+    day's marker payload and the baseline equal the live row count."""
+    import shutil
+
+    from analysisofuserbehavior_spark.operators.retrieval import (
+        compact_inverted_index,
+    )
+
+    store, idx = str(tmp_path / "store"), str(tmp_path / "idx")
+    ledger = idx + "_ledger"
+
+    def ingest(lo, day, **kw):
+        ingest_corpus_day(
+            spark, _unique_docs(spark, lo, lo + 5, day), day, store, idx, **kw
+        )
+        live = spark.read.parquet(idx + "/_stats").count()
+        for name in (f"day={day}", "_BASELINE"):
+            with open(os.path.join(ledger, name)) as f:
+                assert int(f.read()) == live, (day, name)
+        return live
+
+    assert ingest(0, "2024-01-01", first_day=True) == 1
+    assert ingest(10, "2024-01-02") == 2
+    assert ingest(20, "2024-01-04") == 3
+    compact_inverted_index(spark, idx)
+    assert ingest(30, "2024-01-05") == 2
+    assert ingest(40, "2024-01-03") == 3  # backfill an earlier day
+    shutil.rmtree(ledger)  # an index built outside the ledger
+    assert ingest(50, "2024-01-06") == 4

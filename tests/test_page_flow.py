@@ -4,6 +4,7 @@ from datetime import datetime
 
 from analysisofuserbehavior_spark.operators import behavior_model as bm
 from analysisofuserbehavior_spark.operators.page_flow import page_convert_rate, page_splits
+from analysisofuserbehavior_spark.sources import local_frame
 
 SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -12,7 +13,7 @@ SCHEMA = (
 
 
 def _actions(spark, rows):
-    return bm.actions(spark.createDataFrame(rows, SCHEMA))
+    return bm.actions(local_frame(spark, rows, SCHEMA))
 
 
 def _mk(eid, sec, user, typ):
@@ -41,9 +42,12 @@ def test_convert_rate_chain(spark):
         _mk(6, 0, 3, "view"),
         _mk(7, 0, 4, "view"),
     ]
-    out = {r["split"]: r for r in page_convert_rate(
+    rate = page_convert_rate(
         spark, _actions(spark, rows), ("view", "click", "purchase", "signup")
-    ).collect()}
+    )
+    out = {r["split"]: r for r in rate.collect()}
+    # the target-flow frame is a local Arrow table, not a Python RDD
+    assert "ExistingRDD" not in rate._jdf.queryExecution().executedPlan().toString()
     assert out["view_click"]["pv"] == 2
     assert out["view_click"]["convert_rate"] == 0.5       # 2/4 views
     assert out["click_purchase"]["convert_rate"] == 0.5   # 1/2

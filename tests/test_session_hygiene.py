@@ -2,10 +2,12 @@
 is per-process, sweep-registered, and self-healing after a crashed
 sibling; run_to_completion restores shuffle.partitions even when no
 prior value existed; scoped session confs come back on the error path
-too; and the package keeps ONE entry point each for lineage
-truncation (functions/ckpt.py), temporary conf overrides
-(session.scoped_conf) and the bounded-stream lifecycle — start,
-checkpoint, width and await (streaming.ad_stream.run_bounded)."""
+too; an identical task resubmission compiles no code; and the package
+keeps ONE entry point each for lineage truncation (functions/ckpt.py),
+temporary conf overrides (session.scoped_conf), the bounded-stream
+lifecycle — start, checkpoint, width and await
+(streaming.ad_stream.run_bounded) — and small driver-side frames
+(sources.local_frame)."""
 
 from __future__ import annotations
 
@@ -123,6 +125,42 @@ def test_dataframe_debugging_default_off_and_env_overridable(spark):
     assert os.environ.get("SPARK_GRAFT_DF_DEBUG", "false") == "false"
 
 
+def test_identical_task_resubmission_compiles_no_code(spark, sf_dir):
+    """get_spark sizes whole-stage codegen's class cache to the
+    engine's working set: a module-1 task compiles ~112 classes, over
+    Spark's default cache of 100, so at the default every resubmission
+    recompiled all of them.  Read as the exact compile count
+    (CodegenMetrics' histogram count, not its sampled sum)."""
+    import json
+
+    from analysisofuserbehavior_spark.modules import run_task
+
+    task = json.dumps(
+        {
+            "startDate": ["2024-01-03"],
+            "endDate": ["2024-01-20"],
+            "startAge": ["10"],
+            "endAge": ["55"],
+            "sex": ["female"],
+            "keywords": ["click,view"],
+        }
+    )
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def submit() -> int:
+        before = compiles.getCount()
+        for df in run_task(spark, task, sf_dir, modules=("session",)).values():
+            df.write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    submit()
+    assert compiles.getCount() > 0  # the counter is live in this JVM
+    assert submit() == 0
+
+
 def test_dedup_clusters_restores_loop_confs_on_convergence_error(spark):
     """dedup_clusters narrows shuffle width and turns AQE off for its
     loop; a budget-exhausted run must still hand both confs back."""
@@ -198,6 +236,7 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
             ("",),
             "streaming/stateful.py::funnel_levels_stream",
         ),
+        (r"\.parallelize\(", ("",), "sources/loaders.py::local_frame"),
     ],
     ids=[
         "lineage_truncation",
@@ -205,6 +244,7 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
         "stream_width",
         "bounded_stream_start",
         "stateful_python_state",
+        "python_rdd_frame",
     ],
 )
 def test_one_entry_point_per_mechanism(pattern, scope, owner):
@@ -216,7 +256,9 @@ def test_one_entry_point_per_mechanism(pattern, scope, owner):
     restore-on-error contract, the session-width cap or the
     checkpoint-path guard.  Per-key Python state lives only in the
     funnel's sequential fold; every other stateful stream stays in
-    the JVM, with no Python worker per key per batch."""
+    the JVM, with no Python worker per key per batch.  Driver-side
+    rows become frames through sources.local_frame, never through a
+    Python RDD whose every scan starts a Python worker."""
     owner_path, owner_lines = _owned_lines(owner)
     offenders = [
         f"{rel}:{n}: {line.strip()}"

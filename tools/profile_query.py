@@ -5,7 +5,9 @@ bench.py's phase-2 measures the ACTIONS_FAMILY) through the noop sink
 N times, then dumps every completed stage from the status REST API:
 stage id, name, task count, executor run time, shuffle bytes, input
 bytes — the data the optimization guide (§1, §7) says to collect
-before touching a plan.
+before touching a plan.  Beside the job and stage lists it prints the
+exact number of whole-stage codegen compiles the last run paid
+(CodegenMetrics' compile count; 0 when every class was cached).
 
 Usage:
     python tools/profile_query.py <query> [--shared] [--runs 2]
@@ -61,19 +63,24 @@ def main() -> None:
         ) as r:
             return json.loads(r.read())
 
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
     times = []
     mark = -1
     jmark = -1
+    cmark = 0
     for i in range(args.runs):
         if i == args.runs - 1:
             mark = max((s["stageId"] for s in stages()), default=-1)
             jmark = max((j["jobId"] for j in jobs()), default=-1)
+            cmark = compiles.getCount()
         t0 = time.perf_counter()
         QUERIES[args.query](spark, args.sf).write.format("noop").mode("overwrite").save()
         times.append(round(time.perf_counter() - t0, 3))
         if not args.shared:
             release_query_resources(spark)
     print(f"runs: {times}")
+    print(f"codegen compiles in last run: {compiles.getCount() - cmark}")
 
     js = [j for j in jobs() if j["jobId"] > jmark]
     print(f"\n== {len(js)} jobs in last run ==")
