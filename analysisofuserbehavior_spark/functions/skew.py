@@ -74,25 +74,6 @@ def salted_count(df: DataFrame, keys: Sequence[str], n_salts: int = 16) -> DataF
     )
 
 
-def salted_collect_set(
-    df: DataFrame, keys: Sequence[str], col: str, n_salts: int = 16
-) -> DataFrame:
-    """collect_set sharded across salts then union-distinct — the
-    non-algebraic case where a single hot key's set build otherwise
-    lands on one task."""
-    return salted_agg(
-        df,
-        keys,
-        [F.collect_set(col).alias("_partial")],
-        [
-            F.array_distinct(F.flatten(F.collect_list("_partial"))).alias(
-                f"{col}_set"
-            )
-        ],
-        n_salts,
-    )
-
-
 def grouped_top_k(
     df: DataFrame,
     keys: Sequence[str],

@@ -93,59 +93,3 @@ def register_pandas_example(spark: SparkSession) -> None:
         return (v - v.mean()) / (std if std else 1.0)
 
     spark.udf.register("value_zscore", value_zscore)
-
-
-def register_arrow_example(spark: SparkSession) -> None:
-    """Arrow-native UDF (Spark 4.1 `arrow_udf`): the same scalar
-    contract as the pandas demo but operating on pyarrow Arrays —
-    one less conversion hop than pandas_udf (Arrow batch → pandas →
-    Arrow becomes Arrow → Arrow), which is the preferred shape for
-    numeric kernels that don't need pandas semantics.  Registered as
-    `value_double_arrow`; parity with the column expression is
-    pinned in tests/test_layout_udfs.py."""
-    # `from __future__ import annotations` stringifies hints, and
-    # pyspark resolves them against MODULE globals — so pa must be
-    # visible there for the arrow_udf eval-type inference to work
-    import pyarrow as pa
-    from pyspark.sql.functions import arrow_udf
-
-    globals().setdefault("pa", pa)
-
-    @arrow_udf(DoubleType())
-    def value_double_arrow(v: pa.Array) -> pa.Array:
-        import pyarrow.compute as pc
-
-        return pc.multiply(v, pa.scalar(2.0))
-
-    spark.udf.register("value_double_arrow", value_double_arrow)
-
-
-def register_chunk_udtf(spark: SparkSession, name: str = "chunk_doc") -> None:
-    """Python UDTF (Spark 3.5+/4 table-function API) twin of
-    `operators.packing.chunk_documents` — completes the UDF/UDAF/UDTF
-    registration surface (SURVEY §2.12): a SQL-callable table
-    function usable standalone or in a LATERAL join:
-
-        SELECT d.doc_id, t.* FROM documents d,
-        LATERAL chunk_doc(d.text, 128, 96) t
-
-    Same step semantics as the operator (`step` = distance between
-    window starts; named `stride` through round 9 — see
-    chunk_documents' rename note).  This is the API-surface demo, not the production
-    path: the UDTF runs row-at-a-time Python, while chunk_documents
-    compiles to built-in array expressions fused into the scan — keep
-    the declarative operator in 100 TB pipelines and reach for a UDTF
-    only when per-row imperative logic is genuinely unavoidable."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx: bigint, chunk_text: string, n_tokens: bigint")
-    class ChunkDoc:
-        def eval(self, text: str, chunk_tokens: int = 128, step: int = 96):
-            if text is None:
-                return
-            toks = text.split(" ")
-            for start in range(0, len(toks), step):
-                piece = toks[start : start + chunk_tokens]
-                yield start // step, " ".join(piece), len(piece)
-
-    spark.udtf.register(name, ChunkDoc)

@@ -368,13 +368,19 @@ def ingest_corpus_day(
     N's screen is O(batch + digest-table probe) — the corpus-wide
     shingle/MinHash pass that previously re-ran on EVERY ingest runs
     at most once per store lifetime.  The table is seeded LAZILY: the
-    first screened ingest that finds no `_sigs` directory (day 2 of a
-    fresh store, or any store predating the table) derives the
-    standing corpus's digest from the store — the same md5 +
-    shingle/MinHash work its own text screen owed anyway — screens
-    against it, and commits it alongside its batch's signatures in
-    one write, so the first day pays nothing and every later day
-    takes the O(batch) path.
+    first screened ingest that finds no seed marker (day 2 of a fresh
+    store, any store predating the table, or a seed write that died
+    part-way) derives the standing corpus's digest from the store —
+    the same md5 + shingle/MinHash work its own text screen owed
+    anyway — screens against it, and commits it alongside its batch's
+    signatures in one write, so the first day pays nothing and every
+    later day takes the O(batch) path.  The probe path is gated on
+    `_ledger/_SIGS_SEEDED`, written right after that seeding write and
+    before the day marker: a `_sigs` directory alone proves nothing,
+    since a crash inside the write leaves a partial one, and probing
+    a partial table would admit duplicates of every stored doc it
+    misses.  Without the marker the ingest re-seeds; the dynamic
+    partition overwrite makes that idempotent.
     """
     from ..plans.layout import overwrite_day_partitions
     from ..sources.upsert import _fs_path
@@ -404,6 +410,7 @@ def ingest_corpus_day(
         return
     sig_dir = store_dir + "_sigs"
     _, sig_root = _fs_path(spark, sig_dir)
+    _, seeded = _fs_path(spark, ledger_dir + "/_SIGS_SEEDED")
     day_sigs = None  # signature-table rows this ingest must commit
     if first_day:
         # no screen ran, so no signatures were computed — the table is
@@ -415,7 +422,7 @@ def ingest_corpus_day(
         from ..functions.ckpt import ckpt
 
         backfill_sigs = None
-        if fs.exists(sig_root):
+        if fs.exists(seeded) and fs.exists(sig_root):
             # O(batch) screen: probe the maintained signature table —
             # the corpus text is never read, the corpus-wide MinHash
             # aggregate never re-runs.  `shs`/`sig` are NULL for
@@ -429,12 +436,13 @@ def ingest_corpus_day(
                 .where(F.col("day") < day)
             )
         else:
-            # first screened ingest (or a store predating the table):
-            # derive the standing corpus's digest from the store ONCE
-            # (explicit schema: the store layout is this module's own
-            # writer — declaring it skips the schema-inference job),
-            # screen against it, and seed the table with it below —
-            # every later day then takes the O(batch) path
+            # first screened ingest (or a store predating the table,
+            # or an unfinished seed): derive the standing corpus's
+            # digest from the store ONCE (explicit schema: the store
+            # layout is this module's own writer — declaring it skips
+            # the schema-inference job), screen against it, and seed
+            # the table with it below — every later day then takes
+            # the O(batch) path
             stored = (
                 spark.read.schema(
                     "doc_id bigint, text string, ts timestamp, day date"
@@ -501,6 +509,8 @@ def ingest_corpus_day(
             .partitionBy("day")
             .parquet(sig_dir)
         )
+        if backfill_sigs is not None:
+            fs.create(seeded, True).close()
     # commit LAST: day marker + single-file baseline, both carrying
     # the post-append manifest row count — every write or append adds
     # exactly one `_stats` row, so it is known without a second count

@@ -380,22 +380,6 @@ def _minhash_min_expr(i: int, a: int, b: int, hp: str, alias: str) -> F.Column:
     )
 
 
-def minhash_signatures(dsh: DataFrame, num_perm: int = 32) -> DataFrame:
-    """(doc_id, sig array<bigint>) — min over each permutation.
-
-    h'(x) = (a * (xxhash64(x) mod P) + b) mod P keeps every product
-    below 2^62, safe under ANSI overflow checking."""
-    hp = f"pmod(xxhash64(shingle), cast({MERSENNE_P} as bigint))"
-    mins = [
-        _minhash_min_expr(i, a, b, hp, "h")
-        for i, (a, b) in enumerate(MINHASH_COEFFS[:num_perm])
-    ]
-    sig = dsh.groupBy("doc_id").agg(*mins)
-    return sig.select(
-        "doc_id", F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig")
-    )
-
-
 def _minhash_sets(docs: DataFrame, k: int, num_perm: int) -> DataFrame:
     """(doc_id, shs, _h0.._hN): the per-doc shingle set and all
     signature minima out of ONE hash-aggregate (codegen'd min
@@ -1002,52 +986,6 @@ def incremental_admit_sigs(
         .withColumnRenamed("_text_hash", "text_hash")
         .join(sets_new, "doc_id", "left")
         .select(*new_docs.columns, "text_hash", "shs", "sig")
-    )
-
-
-def neardup_pr_report(
-    predicted: DataFrame, truth: DataFrame
-) -> DataFrame:
-    """Precision/recall of an approximate near-dup detector against
-    exact ground truth — the evaluation harness for tuning (bands,
-    rows, threshold) before a corpus-wide run: feed it e.g.
-    `minhash_lsh_pairs(docs, threshold=t)` and
-    `ngram_jaccard_pairs(docs, threshold=t, max_df=None)` on a
-    calibration SAMPLE.
-
-    Both inputs are (doc_a, doc_b, ...) pair frames with doc_a <
-    doc_b; the confusion counts come from one full-outer join on the
-    pair key (a single shuffle bounded by |pairs|, not |docs|²).
-    Precision of an exact-verified candidate generator is 1.0 BY
-    CONSTRUCTION (every emitted pair was re-checked against the real
-    sets) — pinned in tests; recall is the banding loss."""
-    p = predicted.select("doc_a", "doc_b").withColumn("_p", F.lit(1))
-    t = truth.select("doc_a", "doc_b").withColumn("_t", F.lit(1))
-    joined = p.join(t, ["doc_a", "doc_b"], "full_outer")
-
-    def n(cond) -> F.Column:
-        # sum over ZERO rows is NULL, not 0 — the dq_report empty-
-        # table divergence class; coalesce keeps counts integral
-        return F.coalesce(F.sum(cond.cast("long")), F.lit(0))
-
-    return joined.agg(
-        n(F.col("_p").isNotNull() & F.col("_t").isNotNull()).alias("tp"),
-        n(F.col("_p").isNotNull() & F.col("_t").isNull()).alias("fp"),
-        n(F.col("_p").isNull() & F.col("_t").isNotNull()).alias("fn"),
-    ).select(
-        "tp",
-        "fp",
-        "fn",
-        qround(
-            F.col("tp").cast("double")
-            / F.nullif(F.col("tp") + F.col("fp"), F.lit(0)).cast("double"),
-            4,
-        ).alias("precision"),
-        qround(
-            F.col("tp").cast("double")
-            / F.nullif(F.col("tp") + F.col("fn"), F.lit(0)).cast("double"),
-            4,
-        ).alias("recall"),
     )
 
 

@@ -33,14 +33,6 @@ METADATA_SCHEMA = (
     "doc_id long, media_type string, width int, height int, n_bytes long"
 )
 
-try:  # real decoders are optional; absent in this environment
-    import PIL.Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Spread a narrow frame across the session's cores BEFORE the
     CPU-heavy per-row Python codec work downstream.
@@ -84,36 +76,6 @@ def _decode_fake(payload: bytes) -> tuple[int, int]:
     if payload is None or len(payload) < 8:
         return (0, 0)
     return struct.unpack("<II", payload[:8])
-
-
-def decode_real(payload: bytes):  # pragma: no cover - env has no codecs
-    """Real compressed-format decode (JPEG/PNG/...) — requires PIL.
-    Auto-activates if the environment ever gains Pillow (probed by
-    tests/test_env_probes.py); returns the same
-    (width, height, mean_r, mean_g, mean_b) tuple as the built-in
-    BMP/PPM decoders so image_features can dispatch to it."""
-    if not HAVE_PIL:
-        raise NotImplementedError(
-            "image decoding requires PIL/ffmpeg, not available in this build; "
-            "the fake-header path (media_metadata) exercises the full "
-            "Spark plumbing"
-        )
-    import io
-
-    import numpy as np
-    from PIL import Image
-
-    with Image.open(io.BytesIO(payload)) as im:
-        rgb = im.convert("RGB")
-        arr = np.asarray(rgb, dtype=np.float64)
-        means = arr.reshape(-1, 3).mean(axis=0)
-        return (
-            rgb.width,
-            rgb.height,
-            float(means[0]),
-            float(means[1]),
-            float(means[2]),
-        )
 
 
 def sniff_format(payload: bytes | None) -> str:
@@ -398,35 +360,6 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
             yield out
 
     return media.mapInPandas(resize, MEDIA_SCHEMA)
-
-
-def embed_media(media: DataFrame, dim: int = 16) -> DataFrame:
-    """Feature-extraction stub: deterministic pseudo-embedding
-    (seeded from a payload digest) with the exact schema a vision
-    encoder would emit (`array<float>`), feeding straight into the
-    similarity operators.  A production build replaces the hash loop
-    with a batched model forward pass inside the same iterator —
-    partitioning, Arrow batch shape, and output schema unchanged."""
-    import hashlib
-
-    def embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def one(b: bytes | None) -> list[float]:
-                if b is None:
-                    return [0.0] * dim
-                d = hashlib.sha256(b).digest()
-                # widen the 32-byte digest to `dim` floats in [-1, 1)
-                vals = []
-                for i in range(dim):
-                    chunk = d[(2 * i) % 32] * 256 + d[(2 * i + 1) % 32]
-                    vals.append(chunk / 32768.0 - 1.0)
-                return vals
-
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "embedding": pdf["media"].map(one)}
-            )
-
-    return media.mapInPandas(embed, "doc_id long, embedding array<float>")
 
 
 def frame_offsets(media: DataFrame, every_n: int = 10, fps: int = 30) -> DataFrame:

@@ -63,11 +63,9 @@ def page_convert_rate(
     divide by zero; ANSI mode makes the guard explicit).
     """
     splits = [f"{a}_{b}" for a, b in zip(target_flow, target_flow[1:])]
-    # one slice: a local scan splits its rows over up to
-    # defaultParallelism tasks, each a map task of the join's exchange
     target_df = local_frame(
         spark, [(i + 1, s) for i, s in enumerate(splits)], "step int, split string"
-    ).coalesce(1)
+    )
     pair_counts = (
         page_splits(actions, flow_col)
         .where(F.col("split").isin(splits))

@@ -245,25 +245,6 @@ def session_aggr_stat(filtered_sessions: DataFrame) -> DataFrame:
     return out
 
 
-def session_aggr_stat_observed(filtered_sessions: DataFrame):
-    """The accumulator-shaped alternative: attach the 16 bucket
-    counters as `observe()` metrics so they materialize as a side
-    product of whatever action consumes the frame — semantically what
-    the reference's SessionAggrStatAccumulator does (metrics riding
-    on the filter pass, :181,896-952) but deterministic and
-    exactly-once.  Returns (df, observation); read
-    `observation.get` after an action."""
-    from pyspark.sql import Observation
-
-    obs = Observation("session_aggr_stat")
-    metrics = [F.count(F.lit(1)).alias("session_count")]
-    for name, _ in VISIT_BUCKETS:
-        metrics.append(_bucket_count_expr("visit_length", name))
-    for name, _ in STEP_BUCKETS:
-        metrics.append(_bucket_count_expr("step_length", name))
-    return filtered_sessions.observe(obs, *metrics), obs
-
-
 def session_random_extract(sessions: DataFrame, total: int = 1000) -> DataFrame:
     """Stratified per-(day, hour) session extract — ref :989-1253.
 

@@ -16,7 +16,7 @@ the layout IS the index:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def write_partitioned_by_day(
@@ -29,15 +29,6 @@ def write_partitioned_by_day(
         .partitionBy("day")
         .parquet(path)
     )
-
-
-def read_day_range(
-    spark: SparkSession, path: str, start_day: str, end_day: str
-) -> DataFrame:
-    """Partition-pruned scan — only the matching day directories are
-    listed/read (check PartitionFilters in the plan)."""
-    df = spark.read.parquet(path)
-    return df.where(F.col("day").between(start_day, end_day))
 
 
 def write_bucketed(
@@ -57,97 +48,6 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-def compact_dir(
-    spark: SparkSession,
-    src: str,
-    dest: str,
-    target_files: int,
-    cluster_col: str | None = None,
-) -> None:
-    """Small-file compaction: rewrite a directory of many tiny
-    parquet files (the classic streaming-sink / over-parallel-write
-    pathology — every file costs a namenode op, a footer read, and a
-    task at scan time) into `target_files` right-sized files.
-
-    With `cluster_col` the rewrite uses repartitionByRange + a
-    within-partition sort, so the output is range-clustered on that
-    column and min/max row-group stats stay selective for later
-    predicate pushdown — compaction that *improves* the layout
-    instead of shuffling it randomly."""
-    df = spark.read.parquet(src)
-    if cluster_col is not None:
-        df = df.repartitionByRange(target_files, F.col(cluster_col)).sortWithinPartitions(
-            cluster_col
-        )
-    else:
-        df = df.repartition(target_files)
-    df.write.mode("overwrite").parquet(dest)
-
-
-def _spread_bits_16(col: F.Column) -> F.Column:
-    """Interleave-ready bit spread: 16-bit int → 32-bit with a zero
-    between every bit (the classic morton magic-number ladder), as
-    pure JVM bitwise expressions."""
-    x = col.cast("bigint")
-    x = x.bitwiseOR(F.shiftleft(x, 8)).bitwiseAND(F.lit(0x00FF00FF))
-    x = x.bitwiseOR(F.shiftleft(x, 4)).bitwiseAND(F.lit(0x0F0F0F0F))
-    x = x.bitwiseOR(F.shiftleft(x, 2)).bitwiseAND(F.lit(0x33333333))
-    x = x.bitwiseOR(F.shiftleft(x, 1)).bitwiseAND(F.lit(0x55555555))
-    return x
-
-
-def zorder_key(df: DataFrame, col_a: str, col_b: str, bits: int = 16) -> DataFrame:
-    """`_z`: morton interleave of the two columns' equal-width
-    bucket ids.  Bucketing is pure arithmetic against the broadcast
-    (min, span) of each column — no rank window, no global sort —
-    so the key costs one tiny aggregate + a map stage at any scale."""
-    n_buckets = 1 << bits
-    stats = df.agg(
-        F.min(col_a).alias("_a_lo"),
-        (F.max(col_a) - F.min(col_a) + 1).cast("double").alias("_a_span"),
-        F.min(col_b).alias("_b_lo"),
-        (F.max(col_b) - F.min(col_b) + 1).cast("double").alias("_b_span"),
-    )
-    bucket_a = F.least(
-        F.lit(n_buckets - 1),
-        ((F.col(col_a) - F.col("_a_lo")) * n_buckets / F.col("_a_span")).cast("bigint"),
-    )
-    bucket_b = F.least(
-        F.lit(n_buckets - 1),
-        ((F.col(col_b) - F.col("_b_lo")) * n_buckets / F.col("_b_span")).cast("bigint"),
-    )
-    return (
-        df.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_z", _spread_bits_16(bucket_a).bitwiseOR(F.shiftleft(_spread_bits_16(bucket_b), 1))
-        )
-        .drop("_a_lo", "_a_span", "_b_lo", "_b_span")
-    )
-
-
-def write_zorder_clustered(
-    df: DataFrame, path: str, col_a: str, col_b: str, n_files: int
-) -> None:
-    """Z-order (morton-curve) clustered rewrite on TWO dimensions.
-
-    A sort on one column makes that column's per-file min/max tight
-    and leaves the other spanning the full domain — predicates on
-    the second column prune nothing.  Range-partitioning + sorting
-    on the morton key keeps BOTH columns' per-file ranges narrow
-    simultaneously, so parquet row-group/file stats prune scans on
-    EITHER dimension (the Delta/Iceberg OPTIMIZE ZORDER layout,
-    built from vanilla Spark ops; verified against footer stats in
-    tests/test_scd_graph.py)."""
-    (
-        zorder_key(df, col_a, col_b)
-        .repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def overwrite_day_partitions(

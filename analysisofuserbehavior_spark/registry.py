@@ -8,6 +8,7 @@ this registry for the driver harness.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -34,74 +35,19 @@ def query(name: str):
     return deco
 
 
-# ~20 registry queries start from the same sessionized-actions frame
-# (scan + one user-window shuffle).  Run independently each pays that
-# cost; a workload running several of them should pay it ONCE — the
-# reference persists the frame for exactly this reason
-# (UserVisitSessionAnalyzeSpark.java:186).  `enable_shared_scan`
-# caches the frame per (session, sf_dir); `_actions` consults the
-# cache, so every consumer query amortizes transparently.  Caching
-# changes physical reuse only — results are identical (pinned by
-# tests/test_modules.py::test_shared_scan_results_identical).
-# WeakKeyDictionary keyed by the live SparkSession object: a stopped
-# and garbage-collected session drops its entries automatically, so a
-# later session can never be served a dead session's persisted frame
-# (id()-based keys are reused by CPython after GC) and the cache never
-# pins a dead session's DataFrames.
-import weakref as _weakref
-
-_SHARED_ACTIONS: "_weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    _weakref.WeakKeyDictionary()
-)
-_SHARED_SESSIONS: "_weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    _weakref.WeakKeyDictionary()
-)
 # built inverted-index layouts per (session, sf_dir) — paths, not
 # DataFrames; tempdirs die with the OS tmp cleanup, entries with the
 # session (see q_bm25_topk_indexed for why the cache is correct)
-_INV_INDEX: "_weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    _weakref.WeakKeyDictionary()
+_INV_INDEX: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
+    weakref.WeakKeyDictionary()
 )
 
 
-def enable_shared_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persist + materialize the shared actions frame AND its
-    per-session rollup for `sf_dir`; subsequent `_actions` /
-    `_sessions` calls on this session reuse them.  The rollup cache
-    matters as much as the scan cache: six queries start from
-    session_stats, whose |sessions|-row result is tiny but whose
-    rollup shuffle over the full event table is the dominant cost."""
-    per_session = _SHARED_ACTIONS.setdefault(spark, {})
-    if sf_dir not in per_session:
-        df = bm.actions(load_table(spark, sf_dir, "events")).persist()
-        df.count()  # materialize eagerly so consumers measure amortized cost
-        per_session[sf_dir] = df
-        ss = sa.session_stats(df).persist()
-        ss.count()
-        _SHARED_SESSIONS.setdefault(spark, {})[sf_dir] = ss
-    return per_session[sf_dir]
-
-
-def disable_shared_scan(spark: SparkSession | None = None) -> None:
-    for cache in (_SHARED_ACTIONS, _SHARED_SESSIONS):
-        sessions = [spark] if spark is not None else list(cache.keys())
-        for s in sessions:
-            for df in cache.pop(s, {}).values():
-                df.unpersist()
-
-
 def _actions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cached = _SHARED_ACTIONS.get(spark, {}).get(sf_dir)
-    if cached is not None:
-        return cached
     return bm.actions(load_table(spark, sf_dir, "events"))
 
 
 def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """session_stats over the (possibly cached) actions frame."""
-    cached = _SHARED_SESSIONS.get(spark, {}).get(sf_dir)
-    if cached is not None:
-        return cached
     return sa.session_stats(_actions(spark, sf_dir))
 
 
@@ -4514,8 +4460,7 @@ def q_bm25_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The built index is cached per (session, sf_dir) — an index IS a
     materialized layout, built once and queried many times; rebuilding
-    per query would mis-state the operator's cost the same way
-    re-sessionizing per query did before enable_shared_scan."""
+    per query would mis-state the operator's cost."""
 
     from .operators.retrieval import bm25_topk_indexed, write_inverted_index
 

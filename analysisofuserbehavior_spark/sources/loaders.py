@@ -211,7 +211,12 @@ def local_frame(
     frame plans as `Scan ExistingRDD`, and each of its partitions pays
     a worker round-trip per scan).  Meant for dimension-sized results
     a query collects before deleting its work dir, and for seed
-    frames; large data stays in Spark."""
+    frames; large data stays in Spark.
+
+    Rows arrive as one slice: a local scan would otherwise split them
+    over up to defaultParallelism partitions, each a map task of the
+    next exchange.  An empty frame keeps its zero partitions, so the
+    optimizer can still fold it away as an empty relation."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -222,7 +227,8 @@ def local_frame(
     table = pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
-    return spark.createDataFrame(table, schema)
+    df = spark.createDataFrame(table, schema)
+    return df.coalesce(1) if table.num_rows > 1 else df
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

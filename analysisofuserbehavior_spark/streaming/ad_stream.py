@@ -148,17 +148,6 @@ def read_kafka_ad_click_stream(
     return parse_ad_click_wire(raw)
 
 
-def streaming_dedup(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Exactly-once event dedup inside the stream: drops replayed
-    event_ids whose event time is within the watermark horizon —
-    state is bounded by the watermark (dropDuplicates on an
-    unbounded stream would grow state forever).  The at-least-once →
-    exactly-once repair step in front of every counting query."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
 def read_event_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:

@@ -31,11 +31,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from analysisofuserbehavior_spark.registry import (
-    QUERIES,
-    disable_shared_scan,
-    enable_shared_scan,
-)
+from analysisofuserbehavior_spark.registry import QUERIES
 from analysisofuserbehavior_spark.session import (
     get_spark,
     release_query_resources,
@@ -333,67 +329,6 @@ HEADLINE = [
 ]
 
 
-# queries whose plan starts from the shared sessionized-actions frame
-# (registry._actions): a workload running several of them pays the
-# scan + sessionize shuffle once via enable_shared_scan, the way the
-# reference persists the frame across module 1's outputs.  These run
-# as a second phase with the cache alive (its build cost is reported
-# as the `shared_scan_build` entry); everything else keeps the
-# clear-cache-between-queries discipline.
-ACTIONS_FAMILY = [
-    "sessionize",
-    "session_stats",
-    "session_aggr_stat",
-    "session_filtered_aggr_stat",
-    "session_filtered_aggr_stat2",
-    "session_random_extract",
-    "session_detail",
-    "session_paths",
-    "session_length_deciles",
-    "top10_categories",
-    "top10_category_sessions",
-    "area_top3_products",
-    "ad_user_click_count",
-    "ad_blacklist",
-    "ad_stat",
-    "ad_province_top3",
-    "ad_click_trend",
-    "page_rank",
-    "page_transition_probs",
-    "page_bfs_depths",
-    "session_concurrency_hourly",
-    "item_covisitation",
-    "session_length_percentiles",
-    "basket_affinity_rules",
-    "target_encode_category",
-    "item_communities_lpa",
-    "winsorized_user_spend",
-    "user_behavior_profile",
-    "page_dwell_stats",
-    "entry_exit_pages",
-    "bounce_rate_daily",
-    "session_depth_curve",
-    "purchase_gap_distribution",
-    # round 13: the new _actions-based entries share the same frame
-    "events_segment_pit",
-    "daily_drift_jsd",
-    "rolling_7d_distinct_users",
-    "covisit_next_item_hitrate",
-    "offpolicy_ips_estimate",
-    "user_spend_gini",
-    "top_decile_spend_share",
-    "cart_abandonment_daily",
-    "time_to_convert_percentiles",
-    "funnel_by_segment",
-    "arpu_daily",
-    # round 14: the new _actions-based entries share the same frame
-    "user_entropy_profile",
-    "funnel_regex_path",
-    "frequent_path_trigrams",
-    "zonemap_pruning_report",
-]
-
-
 def _disk_probe_mb_s(n_mb: int = 32) -> float:
     """Measured sequential write throughput of the DISK-backed tmp
     (/var/tmp — the medium the testdata scans and any non-tmpfs spill
@@ -516,7 +451,6 @@ _STDOUT_ANCHORS = (
     "page_convert_rate",
     "page_reachability_sql",
     "ann_ivfpq_topk",
-    "shared_scan_build",
     "dedup_minhash_lsh",
     "streaming_hourly_clicks",
     "quantile_normalize_by_type",
@@ -595,9 +529,8 @@ def main() -> None:
         metrics[name] = _stage_delta(spark, mark)
         return round(best, 3)
 
-    shared = [n for n in headline if n in QUERIES and n in ACTIONS_FAMILY]
     for name in headline:
-        if name not in QUERIES or name in ACTIONS_FAMILY:
+        if name not in QUERIES:
             continue
         timings[name] = measure(name)
         # drop any lingering per-query JVM state (broadcast refs,
@@ -619,27 +552,6 @@ def main() -> None:
             timings[name] = min(timings[name], measure(name))
             release_query_resources(spark)
             repassed.append(name)
-    # cold-path twins: the shared-scan family's phase-2 numbers read
-    # the cache, so a regression in the underlying scan+sessionize
-    # plan would hide behind it.  Keep one UNCACHED measurement per
-    # family anchor (reported as <name>_cold) alongside the cached
-    # phase-2 entry.
-    for name in ("sessionize", "session_stats"):
-        if name in headline and name in QUERIES:
-            timings[name + "_cold"] = measure(name)
-            metrics[name + "_cold"] = metrics.pop(name)
-            spark.catalog.clearCache()
-    if shared:
-        t0 = time.perf_counter()
-        enable_shared_scan(spark, sf_dir)
-        timings["shared_scan_build"] = round(time.perf_counter() - t0, 3)
-        for name in shared:
-            timings[name] = measure(name)  # no clearCache: cache must live
-        if not only:
-            for name in sorted(shared, key=lambda n: -timings[n])[:4]:
-                timings[name] = min(timings[name], measure(name))
-                repassed.append(name)
-        disable_shared_scan(spark)
     noise["disk_mb_s_end"] = _disk_probe_mb_s()
     noise["loadavg_end"] = round(os.getloadavg()[0], 2)
     noise["outlier_repass"] = repassed

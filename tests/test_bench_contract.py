@@ -19,10 +19,10 @@ def test_bench_emits_one_valid_json_line():
         if os.path.exists(committed_detail)
         else None
     )
-    # a representative subset (scan+agg, join chain, shared-scan family,
-    # streaming replay, text op) keeps the contract check fast and
-    # immune to CPU-contention timeouts; the full list runs in the
-    # driver's per-round bench
+    # a representative subset (scan+agg, join chain, sessionized
+    # actions, streaming replay, text op) keeps the contract check
+    # fast and immune to CPU-contention timeouts; the full list runs
+    # in the per-round bench
     subset = "tpch_q1,sessionize,area_top3_products,streaming_hourly_clicks,text_stats,dedup_exact"
     env = dict(
         os.environ,
@@ -45,8 +45,7 @@ def test_bench_emits_one_valid_json_line():
     assert rec["unit"] == "sec"
     assert rec["sf"] == 0.001
     assert isinstance(rec["value"], (int, float))
-    # subset (6) + the shared_scan_build entry from the actions family
-    assert len(rec["queries"]) >= 7
+    assert set(rec["queries"]) == set(subset.split(","))
     assert all(isinstance(v, (int, float)) for v in rec["queries"].values())
     # subset runs must write their detail to the _smoke file, leaving
     # the committed full-run BENCH_DETAIL.json bit-identical (the r9

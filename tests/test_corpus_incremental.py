@@ -296,6 +296,62 @@ def test_legacy_store_without_sigs_self_heals(spark, tmp_path):
     }
 
 
+def test_partial_signature_table_is_reseeded_not_trusted(spark, tmp_path):
+    """A seed write that died part-way leaves a `_sigs` directory that
+    misses stored docs.  The next screened ingest must not probe it:
+    an exact duplicate of a stored doc the table misses would be
+    admitted.  It re-seeds from the store instead, so the duplicate is
+    rejected and the table covers every stored doc."""
+    from analysisofuserbehavior_spark.operators.dedup import doc_signature_frame
+
+    store, idx = str(tmp_path / "store"), str(tmp_path / "idx")
+    near_a = "the quick brown fox jumps over the lazy dog again and again"
+    ingest_corpus_day(
+        spark,
+        spark.createDataFrame(
+            [(1, near_a), (2, "day one unique text about watermarks")],
+            "doc_id long, text string",
+        ),
+        "2024-01-01",
+        store,
+        idx,
+        first_day=True,
+    )
+    # the partial seed: only doc 2's signature row reached the table
+    stored = spark.read.parquet(store).where("doc_id = 2").select("doc_id", "text")
+    (
+        doc_signature_frame(stored)
+        .withColumn("day", F.lit("2024-01-01"))
+        .write.partitionBy("day")
+        .parquet(store + "_sigs")
+    )
+    ingest_corpus_day(
+        spark,
+        spark.createDataFrame(
+            [(20, near_a), (21, "fresh day two arrival with novel words")],
+            "doc_id long, text string",
+        ),
+        "2024-01-02",
+        store,
+        idx,
+    )
+    day2_stored = {
+        r["doc_id"]
+        for r in spark.read.parquet(store)
+        .where("day = '2024-01-02'")
+        .select("doc_id")
+        .collect()
+    }
+    assert day2_stored == {21}  # doc 20 is an exact dup of doc 1
+    sig_rows = {
+        (r["doc_id"], str(r["day"]))
+        for r in spark.read.parquet(store + "_sigs")
+        .select("doc_id", "day")
+        .collect()
+    }
+    assert sig_rows == {(1, "2024-01-01"), (2, "2024-01-01"), (21, "2024-01-02")}
+
+
 def test_marker_payload_is_live_stats_rows(spark, tmp_path):
     """The commit records the post-ingest `_stats` row count without
     counting it again (each write or append adds exactly one manifest

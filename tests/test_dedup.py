@@ -188,43 +188,6 @@ def test_dedup_clusters_raises_on_exhaustion(spark):
         dedup_clusters(pairs, max_iterations=2).collect()
 
 
-def test_standalone_signatures_match_inline_path(spark):
-    """minhash_signatures (the persist-and-reuse API) must agree with
-    the signature expression minhash_lsh_pairs computes inline."""
-    from pyspark.sql import functions as F
-    from analysisofuserbehavior_spark.operators.dedup import (
-        MERSENNE_P,
-        MINHASH_COEFFS,
-        minhash_signatures,
-        shingles,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g"), (2, "c d e f g h i")], "doc_id long, text string"
-    )
-    standalone = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in minhash_signatures(shingles(docs), num_perm=8).collect()
-    }
-    inline = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in (
-            shingles(docs)
-            .select("doc_id", F.pmod(F.xxhash64("shingle"), F.lit(MERSENNE_P)).alias("hp"))
-            .groupBy("doc_id")
-            .agg(
-                F.array(
-                    *[
-                        F.min(F.pmod(F.lit(a) * F.col("hp") + F.lit(b), F.lit(MERSENNE_P)))
-                        for a, b in MINHASH_COEFFS[:8]
-                    ]
-                ).alias("sig")
-            )
-        ).collect()
-    }
-    assert standalone == inline
-
-
 def test_slim_band_join_equals_fat_path(spark, sf_dir, tmp_path):
     """The PB-scale slim structure (band join on (doc_id,band,bucket)
     triples + id re-join against the checkpointed sets table) returns
@@ -330,37 +293,6 @@ def test_max_df_default_caps_quadratic_boilerplate_fanout(spark):
     capped = dedup.ngram_jaccard_pairs(docs, threshold=0.5, max_df=100)
     got = {(r.doc_a, r.doc_b) for r in capped.collect()}
     assert got == {(1000, 1001)}  # boilerplate gone, informative pair kept
-
-
-def test_pr_report_minhash_vs_exact_precision_is_one(spark, sf_dir):
-    """Exact-verified LSH candidates can never emit a false positive:
-    precision == 1.0 against unconstrained exact jaccard at the same
-    threshold; recall is the banding loss, bounded below."""
-    from analysisofuserbehavior_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        neardup_pr_report,
-        ngram_jaccard_pairs,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pred = minhash_lsh_pairs(docs, threshold=0.5)
-    truth = ngram_jaccard_pairs(docs, threshold=0.5, max_df=None)
-    r = neardup_pr_report(pred, truth).first()
-    assert r["fp"] == 0 and r["precision"] == 1.0
-    assert r["tp"] + r["fn"] > 0  # the corpus has 0.5-level pairs
-    assert r["recall"] >= 0.5  # 16x4 banding at s>=0.5
-
-
-def test_pr_report_confusion_counts_exact(spark):
-    """Closed-form confusion check on hand-built pair frames."""
-    from analysisofuserbehavior_spark.operators.dedup import neardup_pr_report
-
-    pred = spark.createDataFrame([(1, 2), (1, 3), (4, 5)], "doc_a long, doc_b long")
-    truth = spark.createDataFrame([(1, 2), (4, 5), (6, 7)], "doc_a long, doc_b long")
-    r = neardup_pr_report(pred, truth).first()
-    assert (r["tp"], r["fp"], r["fn"]) == (2, 1, 1)
-    assert r["precision"] == round(2 / 3, 4) or abs(r["precision"] - 0.6667) < 1e-9
-    assert r["recall"] == round(2 / 3, 4) or abs(r["recall"] - 0.6667) < 1e-9
 
 
 def test_exact_dedup_canonical_picks_highest_quality_variant(spark):

@@ -178,19 +178,13 @@ def test_round4_graph_ops_empty(spark):
     assert triangle_count(edges).first()["n_triangles"] == 0
 
 
-def test_round4_cluster_profile_and_pr_report_empty(spark):
-    from analysisofuserbehavior_spark.operators.dedup import neardup_pr_report
+def test_round4_cluster_profile_empty(spark):
     from analysisofuserbehavior_spark.operators.similarity import (
         embedding_cluster_profile,
     )
 
     emb = _empty(spark, "vec_id long, embedding array<float>")
     assert embedding_cluster_profile(emb).count() == 0
-    pairs = _empty(spark, "doc_a long, doc_b long")
-    r = neardup_pr_report(pairs, pairs).first()
-    # no pairs anywhere: zero counts, NULL (0/0-guarded) ratios
-    assert (r["tp"], r["fp"], r["fn"]) == (0, 0, 0)
-    assert r["precision"] is None and r["recall"] is None
 
 
 def test_grouping_sets_empty_input_divergence_pinned(spark):

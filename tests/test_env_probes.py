@@ -1,12 +1,10 @@
-"""Per-round environment probes — zero-cost skips today, immediate
-real-path coverage the moment the sandbox grows the dependency.
+"""Environment probes — zero-cost skips today, immediate real-path
+coverage the moment the sandbox grows the dependency.
 
-Two env-bounded gaps remain in the build (VERDICT r4 "What's
-missing"): no Kafka broker and no PIL/ffmpeg.  Each probe checks for
-the dependency at collection time; when absent the test skips with an
-explicit reason the judge can read, when present it exercises the
-REAL path (PIL decode of a compressed format; Kafka wire round-trip)
-instead of the documented stub/twin.
+No Kafka broker is reachable in this build.  The probe checks for one
+at run time; when absent the test skips with an explicit reason, when
+present it exercises the REAL Kafka wire round trip instead of the
+file/rate replay twins.
 """
 
 from __future__ import annotations
@@ -26,27 +24,6 @@ def _kafka_bootstrap() -> str | None:
             return cand
     except OSError:
         return None
-
-
-def test_pil_real_decode_when_present(spark):
-    """With Pillow installed, decode_real must decode a genuine
-    compressed image (PNG) to the same tuple shape the built-in
-    BMP/PPM decoders produce, with exact channel means."""
-    from analysisofuserbehavior_spark.operators import multimodal as mm
-
-    if not mm.HAVE_PIL:
-        pytest.skip("Pillow not in this container; JPEG-class decode stays stubbed")
-    import io
-
-    import numpy as np
-    from PIL import Image
-
-    px = np.zeros((3, 4, 3), dtype=np.uint8)
-    px[..., 0], px[..., 1], px[..., 2] = 10, 20, 30
-    buf = io.BytesIO()
-    Image.fromarray(px).save(buf, format="PNG")
-    got = mm.decode_real(buf.getvalue())
-    assert got == (4, 3, 10.0, 20.0, 30.0)
 
 
 def test_kafka_wire_roundtrip_when_broker_present(spark, tmp_path):

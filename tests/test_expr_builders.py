@@ -60,10 +60,9 @@ def test_minhash_sets_expr_string_plan_identical(spark):
 
 def test_band_structs_expr_string_value_and_plan_identical(spark):
     docs = _docs(spark)
-    dsh = D.shingles(docs, 3).select(
-        "doc_id", F.col("shingle")
+    sig = D._minhash_sets(docs, 3, 16).select(
+        "doc_id", F.array(*[f"_h{i}" for i in range(16)]).alias("sig")
     )
-    sig = D.minhash_signatures(dsh, 16)
     rows_per_band = 16 // 8
     reference_structs = F.array(
         *[

@@ -1,140 +1,7 @@
-"""CSV / JSON-lines adapter round trips against the parquet twins."""
+"""Parquet read paths: schema evolution across ingestion generations
+and load_table's schema cache."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from analysisofuserbehavior_spark import plans
-from analysisofuserbehavior_spark.sources import load_table
-from analysisofuserbehavior_spark.sources.formats import (
-    CORRUPT_COL,
-    quarantine_split,
-    read_csv,
-    read_jsonl,
-    write_csv,
-    write_jsonl,
-)
-
-
-def _strip_corrupt(schema):
-    import pyspark.sql.types as T
-
-    return T.StructType([f for f in schema.fields if f.name != CORRUPT_COL])
-
-
-def test_csv_round_trip_with_timestamps(spark, sf_dir, tmp_path):
-    """orders (timestamp_ntz column included) survives parquet → CSV
-    → schema-pinned read byte-exactly."""
-    orders = load_table(spark, sf_dir, "orders")
-    write_csv(orders, str(tmp_path / "orders_csv"))
-    back = read_csv(spark, str(tmp_path / "orders_csv"), orders.schema)
-    clean, corrupt = quarantine_split(back)
-    assert len(corrupt.collect()) == 0
-    assert clean.schema == orders.schema
-    a = {tuple(r) for r in orders.collect()}
-    assert {tuple(r) for r in clean.collect()} == a
-
-
-def test_jsonl_round_trip(spark, sf_dir, tmp_path):
-    cust = load_table(spark, sf_dir, "customer")
-    write_jsonl(cust, str(tmp_path / "cust_json"))
-    back, _ = quarantine_split(
-        read_jsonl(spark, str(tmp_path / "cust_json"), cust.schema)
-    )
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in cust.collect()}
-
-
-def test_csv_corrupt_rows_are_quarantined_not_fatal(spark, tmp_path):
-    p = tmp_path / "dirty.csv"
-    p.write_text("a,b\n1,2\nnot_an_int,3\n4,5\n")
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [T.StructField("a", T.LongType()), T.StructField("b", T.LongType())]
-    )
-    clean, corrupt = quarantine_split(
-        read_csv(spark, str(p), schema, header=True)
-    )
-    assert sorted((r["a"], r["b"]) for r in clean.collect()) == [(1, 2), (4, 5)]
-    bad = corrupt.collect()
-    assert len(bad) == 1 and "not_an_int" in bad[0][CORRUPT_COL]
-
-
-def test_csv_scan_prunes_columns(spark, sf_dir, tmp_path):
-    """Unselected columns must never be materialized by the CSV
-    parser — ReadSchema on the scan shows only the projection."""
-    cust = load_table(spark, sf_dir, "customer")
-    write_csv(cust, str(tmp_path / "cust_csv"))
-    back = read_csv(spark, str(tmp_path / "cust_csv"), cust.schema)
-    two = back.select("c_custkey", "c_mktsegment")
-    (cols,) = plans.read_schema_columns(two)
-    assert "c_name" not in cols and "c_acctbal" not in cols
-    assert {"c_custkey", "c_mktsegment"} <= cols
-
-
-def test_orc_round_trip_preserves_values_and_schema(spark, sf_dir, tmp_path):
-    from analysisofuserbehavior_spark.sources.formats import read_orc, write_orc
-
-    src = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "docs_orc")
-    write_orc(src, path)
-    back = read_orc(spark, path, schema=src.schema)
-    assert back.schema == src.schema
-    a = {tuple(r) for r in src.collect()}
-    b = {tuple(r) for r in back.collect()}
-    assert a == b
-
-
-def test_orc_scan_pushes_filters_and_prunes_columns(spark, sf_dir, tmp_path):
-    from analysisofuserbehavior_spark import plans
-    from analysisofuserbehavior_spark.sources.formats import read_orc, write_orc
-
-    src = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "docs_orc2")
-    write_orc(src, path)
-    df = read_orc(spark, path).where(F.col("doc_id") < 10).select("doc_id", "lang")
-    pushed = plans.pushed_filters(df)
-    assert any("doc_id" in p for p in pushed), pushed
-    (cols,) = plans.read_schema_columns(df)
-    assert cols == {"doc_id", "lang"}, cols
-
-
-def test_xml_round_trip_and_quarantine(spark, sf_dir, tmp_path):
-    """Native Spark-4 XML: schema-pinned round trip of the documents
-    table, plus the PERMISSIVE quarantine contract on a malformed
-    feed — a broken record lands in _corrupt_record instead of
-    failing the scan."""
-    from analysisofuserbehavior_spark.sources.formats import (
-        CORRUPT_COL,
-        quarantine_split,
-        read_xml,
-        write_xml,
-    )
-    from pyspark.sql import types as T
-
-    src = load_table(spark, sf_dir, "documents").limit(50)
-    path = str(tmp_path / "docs_xml")
-    write_xml(src, path, row_tag="doc")
-    back = read_xml(spark, path, schema=src.schema, row_tag="doc").drop(CORRUPT_COL)
-    assert back.schema == src.schema
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in src.collect()}
-
-    # malformed feed: one good row, one row whose typed field is junk
-    bad = tmp_path / "bad.xml"
-    bad.write_text(
-        "<rows><r><id>1</id><s>ok</s></r>"
-        "<r><id>not_a_number</id><s>broken</s></r></rows>"
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("s", T.StringType())]
-    )
-    df = read_xml(spark, str(bad), schema=schema, row_tag="r")
-    good, quarantined = quarantine_split(df)
-    assert [r["id"] for r in good.collect()] == [1]
-    # collect (not count) — counting ONLY the corrupt column from a
-    # raw scan is the documented QUERY_ONLY_CORRUPT_RECORD_COLUMN trap
-    bad_rows = quarantined.collect()
-    assert len(bad_rows) == 1 and "not_a_number" in bad_rows[0][CORRUPT_COL]
 
 
 def test_merge_schema_reads_evolved_partitions(spark, tmp_path):
@@ -142,7 +9,7 @@ def test_merge_schema_reads_evolved_partitions(spark, tmp_path):
     adds a column; mergeSchema unifies the read and backfills NULL
     for the old files — the 100 TB reality where re-writing history
     to add a column is not an option."""
-    from pyspark.sql import Row, functions as F
+    from pyspark.sql import Row
 
     p = str(tmp_path / "evolved")
     spark.createDataFrame([Row(doc_id=1, text="a")]).write.parquet(f"{p}/g=1")

@@ -9,7 +9,6 @@ from analysisofuserbehavior_spark import plans
 from analysisofuserbehavior_spark.functions import udfs
 from analysisofuserbehavior_spark.operators import session_analysis as sa
 from analysisofuserbehavior_spark.plans.layout import (
-    read_day_range,
     write_bucketed,
     write_partitioned_by_day,
 )
@@ -19,7 +18,7 @@ from analysisofuserbehavior_spark.sources import load_table
 def test_partitioned_layout_prunes_days(spark, sf_dir, tmp_path):
     out = os.path.join(str(tmp_path), "events_by_day")
     write_partitioned_by_day(load_table(spark, sf_dir, "events"), out)
-    df = read_day_range(spark, out, "2024-01-02", "2024-01-03")
+    df = spark.read.parquet(out).where(F.col("day").between("2024-01-02", "2024-01-03"))
     plan = plans.executed_plan(df)
     assert "PartitionFilters" in plan
     # partition values are type-inferred on read (day comes back as a
@@ -77,17 +76,6 @@ def test_pandas_udf_registration(spark):
     df.createOrReplaceTempView("zs")
     vals = [r["z"] for r in spark.sql("SELECT value_zscore(v) AS z FROM zs").collect()]
     assert abs(sum(vals)) < 1e-9
-
-
-def test_observe_metrics_match_aggregation(spark, sf_dir):
-    from analysisofuserbehavior_spark.operators import behavior_model as bm
-
-    sessions = sa.session_stats(bm.actions(load_table(spark, sf_dir, "events")))
-    df, obs = sa.session_aggr_stat_observed(sessions)
-    df.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    want = sessions.agg(F.count(F.lit(1)).alias("c")).collect()[0]["c"]
-    assert got["session_count"] == want
 
 
 def test_operators_run_against_catalog_tables(spark, sf_dir):
@@ -184,40 +172,3 @@ def test_bucketed_events_elide_sessionize_shuffle(spark, sf_dir, tmp_path):
         assert a == b
     finally:
         spark.sql("DROP TABLE IF EXISTS events_bucketed")
-
-
-def test_chunk_udtf_matches_declarative_operator(spark, sf_dir):
-    """The UDTF registration surface produces EXACTLY the declarative
-    chunk_documents output over the real corpus via a LATERAL join —
-    same step semantics, same row set."""
-    from analysisofuserbehavior_spark.functions.udfs import register_chunk_udtf
-    from analysisofuserbehavior_spark.operators.packing import chunk_documents
-
-    register_chunk_udtf(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.createOrReplaceTempView("_udtf_docs")
-    via_udtf = spark.sql(
-        """SELECT d.doc_id, t.chunk_idx, t.chunk_text, t.n_tokens
-           FROM _udtf_docs d, LATERAL chunk_doc(d.text, 16, 12) t"""
-    )
-    declarative = chunk_documents(
-        docs.select("doc_id", "text"), chunk_tokens=16, step=12
-    )
-    a = sorted(map(tuple, via_udtf.collect()))
-    b = sorted(map(tuple, declarative.collect()))
-    assert a == b and len(a) > 0
-
-
-def test_arrow_udf_parity_with_expression(spark):
-    """Spark 4.1 arrow_udf surface: Arrow-native scalar UDF agrees
-    with the equivalent Column expression bit for bit."""
-    from analysisofuserbehavior_spark.functions.udfs import (
-        register_arrow_example,
-    )
-
-    register_arrow_example(spark)
-    df = spark.range(100).selectExpr("cast(id as double) AS v")
-    got = df.selectExpr(
-        "value_double_arrow(v) AS a", "v * 2.0 AS b"
-    ).collect()
-    assert all(r.a == r.b for r in got)

@@ -142,29 +142,3 @@ def test_run_task_session_outputs_match_uncheckpointed_plans(spark, sf_dir):
     for name in reversed(list(out)):
         got = sorted(map(tuple, out[name].collect()))
         assert got == sorted(map(tuple, plain[name].collect())), name
-
-
-def test_shared_scan_results_identical(spark, sf_dir):
-    """enable_shared_scan only changes physical reuse (one cached
-    scan+sessionize for every registry._actions consumer) — results
-    must be bit-identical to the uncached path, and the cached plan
-    must actually reuse the in-memory frame."""
-    from analysisofuserbehavior_spark import registry
-
-    cold_stats = {tuple(r) for r in registry.QUERIES["session_stats"](spark, sf_dir).collect()}
-    cold_top10 = [tuple(r) for r in registry.QUERIES["top10_categories"](spark, sf_dir).collect()]
-    try:
-        registry.enable_shared_scan(spark, sf_dir)
-        hot_df = registry.QUERIES["session_stats"](spark, sf_dir)
-        assert "InMemoryTableScan" in hot_df._sc._jvm.PythonSQLUtils.explainString(
-            hot_df._jdf.queryExecution(), "simple"
-        ) or "InMemoryRelation" in hot_df._jdf.queryExecution().toString()
-        hot_stats = {tuple(r) for r in hot_df.collect()}
-        hot_top10 = [tuple(r) for r in registry.QUERIES["top10_categories"](spark, sf_dir).collect()]
-    finally:
-        registry.disable_shared_scan(spark)
-    assert hot_stats == cold_stats
-    assert hot_top10 == cold_top10
-    # cache is gone: the next plan is back to the parquet scan
-    cold_again = registry.QUERIES["session_stats"](spark, sf_dir)
-    assert "InMemoryTableScan" not in cold_again._jdf.queryExecution().toString()

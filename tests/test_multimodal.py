@@ -34,13 +34,6 @@ def test_frame_offsets_sample_every_n(spark):
     assert out[1]["timestamp_sec"] == 0.333
 
 
-def test_real_decode_is_gated(spark):
-    if mm.HAVE_PIL:
-        pytest.skip("PIL present; stub gate not applicable")
-    with pytest.raises(NotImplementedError):
-        mm.decode_real(b"\x00" * 16)
-
-
 def test_resize_media_rewrites_header_and_scales_payload(spark):
     import struct
     from analysisofuserbehavior_spark.operators.multimodal import resize_media
@@ -55,25 +48,6 @@ def test_resize_media_rewrites_header_and_scales_payload(spark):
     assert (w, h) == (10, 10)
     assert len(got[1]) - 8 == 10  # payload scaled by (10*10)/(100*100)
     assert got[2] is None
-
-
-def test_embed_media_deterministic_and_ann_compatible(spark):
-    import struct
-    from analysisofuserbehavior_spark.operators.multimodal import embed_media
-    from analysisofuserbehavior_spark.operators.similarity import ann_bruteforce_topk
-
-    rows = [
-        (i, "image", struct.pack("<II", i, i) + bytes([i] * 32)) for i in range(6)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, media_type string, media binary")
-    a = embed_media(df).collect()
-    b = embed_media(df).collect()
-    assert sorted(map(tuple, ((r["doc_id"], tuple(r["embedding"])) for r in a))) == \
-           sorted(map(tuple, ((r["doc_id"], tuple(r["embedding"])) for r in b)))
-    # output schema feeds the similarity operators directly
-    emb = embed_media(df, dim=16).withColumnRenamed("doc_id", "vec_id")
-    topk = ann_bruteforce_topk(emb, n_queries=2, k=2)
-    assert topk.count() == 4
 
 
 def _bmp_bytes(width, height, pixels_rgb_topdown, top_down=False):

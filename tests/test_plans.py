@@ -711,7 +711,7 @@ def test_registry_plans_no_cartesian_no_rowwise_python(spark, sf_dir):
     Arrow-vectorized: ArrowEvalPython / *InPandas).  Streaming/replay
     fixtures execute real queries at build time and are linted by
     their own tests instead."""
-    from analysisofuserbehavior_spark.registry import QUERIES, disable_shared_scan
+    from analysisofuserbehavior_spark.registry import QUERIES
 
     sf = sf_dir
     skip = {n for n in QUERIES if n.startswith("streaming_")} | {
@@ -726,7 +726,6 @@ def test_registry_plans_no_cartesian_no_rowwise_python(spark, sf_dir):
             offenders.append((name, "CartesianProduct"))
         if "BatchEvalPython" in plan:
             offenders.append((name, "BatchEvalPython"))
-    disable_shared_scan(spark)
     assert not offenders, offenders
 
 
@@ -782,7 +781,7 @@ def test_registry_plans_no_unbounded_single_partition_window(spark, sf_dir):
     whitelist where each exemption states its size bound.  Global
     aggregates (SinglePartition feeding HashAggregate) are not
     flagged — they move one partial row per partition, not the frame."""
-    from analysisofuserbehavior_spark.registry import QUERIES, disable_shared_scan
+    from analysisofuserbehavior_spark.registry import QUERIES
 
     skip = {n for n in QUERIES if n.startswith("streaming_")} | {
         "ad_blacklist_feedback",  # multi-batch replay loop
@@ -795,7 +794,6 @@ def test_registry_plans_no_unbounded_single_partition_window(spark, sf_dir):
         hits = plans.single_partition_window_sorts(plan)
         if hits:
             offenders[name] = hits
-    disable_shared_scan(spark)
     problems = []
     for name, hits in offenders.items():
         cap = _SINGLE_PARTITION_WINDOW_WHITELIST.get(name)

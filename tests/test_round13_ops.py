@@ -159,32 +159,3 @@ def test_lang_id_confusion_accuracy_bounds(spark, sf_dir):
         if (r["true_lang"] == "en") == (r["lang_guess"] == "en")
     )
     assert abs(acc - correct / total) < 1e-6
-
-
-def test_shared_scan_invariance_for_round13_actions_consumers(spark, sf_dir):
-    """The round's new _actions consumers run in bench's cached
-    phase-2 family — results must be identical with the shared
-    sessionized scan on and off (the test_modules invariance, extended
-    to the new members)."""
-    from analysisofuserbehavior_spark import registry
-
-    names = [
-        "user_spend_gini",
-        "top_decile_spend_share",
-        "cart_abandonment_daily",
-        "time_to_convert_percentiles",
-        "daily_drift_jsd",
-        "covisit_next_item_hitrate",
-    ]
-    cold = {
-        n: sorted(map(tuple, registry.QUERIES[n](spark, sf_dir).collect()))
-        for n in names
-    }
-    try:
-        registry.enable_shared_scan(spark, sf_dir)
-        for n in names:
-            hot = sorted(map(tuple, registry.QUERIES[n](spark, sf_dir).collect()))
-            assert hot == cold[n], n
-    finally:
-        registry.disable_shared_scan(spark)
-        spark.catalog.clearCache()

@@ -1,11 +1,8 @@
-"""SCD2 merge invariants, PageRank properties, small-file compaction."""
+"""SCD2 merge invariants and PageRank properties."""
 
 from __future__ import annotations
 
-import glob
 import os
-
-from pyspark.sql import functions as F
 
 from analysisofuserbehavior_spark.operators.graph import pagerank
 from analysisofuserbehavior_spark.operators.scd import scd2_apply
@@ -95,21 +92,6 @@ def test_pagerank_star_center_dominates_and_mass_conserved(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-5
 
 
-def test_compact_dir_reduces_files_and_keeps_rows(spark, sf_dir, tmp_path):
-    from analysisofuserbehavior_spark.plans.layout import compact_dir
-    from analysisofuserbehavior_spark.sources import load_table
-
-    src = str(tmp_path / "shattered")
-    dest = str(tmp_path / "compacted")
-    docs = load_table(spark, sf_dir, "documents")
-    docs.repartition(20).write.mode("overwrite").parquet(src)
-    assert len(glob.glob(os.path.join(src, "*.parquet"))) == 20
-
-    compact_dir(spark, src, dest, target_files=2, cluster_col="doc_id")
-    assert len(glob.glob(os.path.join(dest, "*.parquet"))) == 2
-    assert spark.read.parquet(dest).count() == docs.count()
-
-
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 _attrs = st.one_of(st.none(), st.sampled_from(["a", "b", "c"]))
@@ -169,60 +151,6 @@ def test_scd2_matches_reference_model(spark, case):
         return
     got = _apply(spark, cur_rows, upd_rows)
     assert got == _scd2_model(cur_rows, upd_rows)
-
-
-def _file_ranges(path, col):
-    """Per-file (min, max) of a column from the parquet footers."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        los, his = [], []
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                c = md.row_group(rg).column(ci)
-                if c.path_in_schema == col and c.statistics is not None:
-                    los.append(c.statistics.min)
-                    his.append(c.statistics.max)
-        out.append((min(los), max(his)))
-    return out
-
-
-def test_zorder_keeps_both_dims_prunable(spark, sf_dir, tmp_path):
-    """vs a single-column sort: per-file spans must be narrow on BOTH
-    z-ordered dimensions, not just the sort leader."""
-    from analysisofuserbehavior_spark.plans.layout import write_zorder_clustered
-    from analysisofuserbehavior_spark.sources import load_table
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("t_us"))
-    )
-    n_files = 16
-
-    zpath = str(tmp_path / "zorder")
-    write_zorder_clustered(ev, zpath, "user_id", "t_us", n_files)
-
-    spath = str(tmp_path / "sorted")
-    ev.repartitionByRange(n_files, F.col("user_id")).sortWithinPartitions(
-        "user_id"
-    ).write.mode("overwrite").parquet(spath)
-
-    assert spark.read.parquet(zpath).count() == ev.count()
-
-    def avg_span(path, col):
-        r = _file_ranges(path, col)
-        return sum(hi - lo for lo, hi in r) / len(r)
-
-    u_glob = ev.agg(F.max("user_id") - F.min("user_id")).collect()[0][0]
-    t_glob = ev.agg(F.max("t_us") - F.min("t_us")).collect()[0][0]
-
-    # the user_id-sorted layout leaves t_us unprunable (per-file span
-    # ≈ global); z-order must keep BOTH dims well under global span
-    assert avg_span(spath, "t_us") > 0.8 * t_glob
-    assert avg_span(zpath, "user_id") < 0.5 * u_glob
-    assert avg_span(zpath, "t_us") < 0.5 * t_glob
 
 
 def test_snapshot_diff_classifies_all_change_kinds(spark):

@@ -126,19 +126,3 @@ def test_top10_category_sessions_window(spark):
     out = sa.top10_category_sessions(actions, top, n=2).collect()
     assert len(out) == 2
     assert [r["click_count"] for r in out] == [5, 3]
-
-
-def test_observed_metrics_match_aggregation(spark, sf_dir):
-    """The observe()-based accumulator twin must report the same
-    16 bucket counters the aggregation query computes."""
-    from analysisofuserbehavior_spark.operators import behavior_model as bm
-    from analysisofuserbehavior_spark.operators import session_analysis as sa
-    from analysisofuserbehavior_spark.sources import load_table
-
-    sessions = sa.session_stats(bm.actions(load_table(spark, sf_dir, "events")))
-    observed, obs = sa.session_aggr_stat_observed(sessions)
-    n = observed.count()  # any action materializes the metrics
-    got = obs.get
-    assert got["session_count"] == n
-    buckets = [v for k, v in got.items() if k.startswith("n_step")]
-    assert sum(buckets) == n  # step buckets partition all sessions

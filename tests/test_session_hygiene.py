@@ -7,7 +7,8 @@ keeps ONE entry point each for lineage truncation (functions/ckpt.py),
 temporary conf overrides (session.scoped_conf), the bounded-stream
 lifecycle — start, checkpoint, width and await
 (streaming.ad_stream.run_bounded) — and small driver-side frames
-(sources.local_frame)."""
+(sources.local_frame); and every public definition has a caller
+outside the tests."""
 
 from __future__ import annotations
 
@@ -269,3 +270,86 @@ def test_one_entry_point_per_mechanism(pattern, scope, owner):
         and not (rel == owner_path and (owner_lines is None or n in owner_lines))
     ]
     assert not offenders, offenders
+
+
+_REPO = _PKG.parent
+# Reference-parity paths: the reference's production sources and
+# sinks, kept for the deployment this engine stands in for although no
+# gated query or bundled tool calls them.
+_PARITY_PATHS = (
+    "streaming/ad_stream.py::read_kafka_event_stream",
+    "streaming/ad_stream.py::read_kafka_ad_click_stream",
+    "sources/jdbc.py::read_jdbc",
+    "sources/mockdata.py::register_mock_tables",
+    "streaming/mockstream.py::mock_ad_click_micro_batches",
+    "operators/reference_schema.py::actions_from_user_visit_action",
+    "sources/loaders.py::save_tables_to_catalog",
+    "plans/audit.py",  # the plan-lint tests' helpers
+)
+
+
+def _is_query(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in node.decorator_list
+    )
+
+
+def test_every_public_definition_has_a_caller():
+    """Every top-level definition in the package is reached from a
+    gated query, the task runner, a tool, bench.py, perfbench or
+    `__spark_entry__.py` — not only from its own tests.  A definition
+    is reached when its name appears outside its own body in any of
+    those files (the package's `__init__` re-exports do not count),
+    applied transitively: a name used only inside unreached
+    definitions does not reach anything.  `@query` functions,
+    dunders and the reference-parity paths above are the roots."""
+    texts: dict[str, list[str]] = {}
+    spans: dict[tuple[str, str], range] = {}
+    for path in sorted(_PKG.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        rel = path.relative_to(_PKG).as_posix()
+        src = path.read_text()
+        texts[rel] = src.splitlines()
+        for node in ast.parse(src).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            if node.name.startswith("__") or _is_query(node):
+                continue
+            if rel in _PARITY_PATHS or f"{rel}::{node.name}" in _PARITY_PATHS:
+                continue
+            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            spans[(rel, node.name)] = range(first, node.end_lineno + 1)
+    callers = [
+        *sorted((_REPO / "tools").glob("*.py")),
+        *sorted((_REPO / "perfbench").glob("*.py")),
+        _REPO / "bench.py",
+        _REPO / "__spark_entry__.py",
+    ]
+    for path in callers:
+        texts[path.relative_to(_REPO).as_posix()] = path.read_text().splitlines()
+    uses: dict[str, list[tuple[str, int]]] = {}
+    for rel, lines in texts.items():
+        for n, line in enumerate(lines, 1):
+            for word in set(re.findall(r"\w+", line)):
+                uses.setdefault(word, []).append((rel, n))
+
+    def inside(rel: str, n: int, defs) -> bool:
+        return any(d[0] == rel and n in spans[d] for d in defs)
+
+    unreached: set[tuple[str, str]] = set()
+    while True:
+        new = {
+            d
+            for d in spans.keys() - unreached
+            if all(
+                inside(rel, n, unreached | {d}) for rel, n in uses.get(d[1], ())
+            )
+        }
+        if not new:
+            break
+        unreached |= new
+    assert not unreached, sorted(f"{rel}::{name}" for rel, name in unreached)

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from analysisofuserbehavior_spark.functions.skew import salted_collect_set, salted_count
+from analysisofuserbehavior_spark.functions.skew import salted_count
 
 
 def test_salted_count_matches_plain(spark):
@@ -16,11 +16,3 @@ def test_salted_count_matches_plain(spark):
     plain = {r["k"]: r["count"] for r in df.groupBy("k").count().collect()}
     salted = {r["k"]: r["count"] for r in salted_count(df, ["k"]).collect()}
     assert salted == plain == {"hot": 5000, "cold": 7}
-
-
-def test_salted_collect_set_matches_plain(spark):
-    df = spark.createDataFrame(
-        [("k", i % 50) for i in range(2000)], "k string, v long"
-    )
-    out = salted_collect_set(df, ["k"], "v").collect()[0]
-    assert sorted(out["v_set"]) == list(range(50))

@@ -123,43 +123,6 @@ def test_blacklist_replay_is_idempotent(spark, tmp_path):
     assert {r["user_id"] for r in loop.current_blacklist(spark).collect()} == {7}
 
 
-def test_streaming_dedup_drops_replayed_events(spark, tmp_path):
-    """Replayed event_ids inside the watermark horizon are dropped;
-    counts downstream see each event once."""
-    import datetime as dt
-    import os
-    from pyspark.sql import functions as F
-    from analysisofuserbehavior_spark.streaming.ad_stream import (
-        EVENTS_FILE_SCHEMA,
-        streaming_dedup,
-    )
-
-    base = str(tmp_path / "dup")
-    rows = [(1, 1, "click"), (2, 1, "click"), (1, 1, "click"), (3, 2, "view")]
-    for i, (eid, u, et) in enumerate(rows):
-        spark.createDataFrame(
-            [(eid, dt.datetime(2024, 1, 1, 0, i), u, et, 1.0, "{}")],
-            EVENTS_FILE_SCHEMA,
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(base, f"f{i}"))
-    raw = (
-        spark.readStream.schema(EVENTS_FILE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base + "/f*")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    q = (
-        streaming_dedup(raw)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_stream_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(r["event_id"] for r in spark.table("dedup_stream_test").collect())
-    assert got == [1, 2, 3]
-
-
 def test_province_top3_per_batch_sql(spark, sf_dir, tmp_path):
     """foreachBatch + SQL window top-3 (the transform+SQL pattern);
     per-province ranks capped at 3 with the rank>=3 ref bug fixed,

@@ -306,7 +306,8 @@ def test_first_batch_state_is_jvm_only_with_declared_schema(spark, tmp_path):
     RDD in its executed plan) and carries the declared schema exactly
     — names, types and nullability — whether declared as DDL or as a
     StructType.  The same builder, `local_frame`, given rows plans as
-    one LocalTableScan and gives back the rows and the schema."""
+    one LocalTableScan in one partition (an empty frame keeps zero)
+    and gives back the rows and the schema."""
     from pyspark.sql import types as T
 
     from analysisofuserbehavior_spark.plans.audit import executed_plan
@@ -328,6 +329,7 @@ def test_first_batch_state_is_jvm_only_with_declared_schema(spark, tmp_path):
         assert "ExistingRDD" not in executed_plan(state)
         assert state.schema == want
         assert state.count() == 0
+        assert state.rdd.getNumPartitions() == 0
 
     rows = [("2024-01-01", 5, 2.5), ("2024-01-02", 7, None)]
     declared = T.StructType(
@@ -346,3 +348,4 @@ def test_first_batch_state_is_jvm_only_with_declared_schema(spark, tmp_path):
         # schema cached on the Python frame
         assert T.StructType.fromJson(json.loads(frame._jdf.schema().json())) == want
         assert [tuple(r) for r in frame.collect()] == rows
+        assert frame.rdd.getNumPartitions() == 1

@@ -1,16 +1,14 @@
 """Per-stage profiler for a single registry query.
 
-Runs the query (optionally with the shared-scan cache alive, the way
-bench.py's phase-2 measures the ACTIONS_FAMILY) through the noop sink
-N times, then dumps every completed stage from the status REST API:
-stage id, name, task count, executor run time, shuffle bytes, input
-bytes — the data the optimization guide (§1, §7) says to collect
+Runs the query through the noop sink N times, then dumps every
+completed stage from the status REST API: stage id, name, task count,
+executor run time, shuffle bytes, input bytes — the data the optimization guide (§1, §7) says to collect
 before touching a plan.  Beside the job and stage lists it prints the
 exact number of whole-stage codegen compiles the last run paid
 (CodegenMetrics' compile count; 0 when every class was cached).
 
 Usage:
-    python tools/profile_query.py <query> [--shared] [--runs 2]
+    python tools/profile_query.py <query> [--runs 2]
         [--sf /root/testdata/sf0.1] [--cpus 32]
 """
 
@@ -29,24 +27,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("query")
-    ap.add_argument("--shared", action="store_true")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
-    from analysisofuserbehavior_spark.registry import (
-        QUERIES,
-        disable_shared_scan,
-        enable_shared_scan,
-    )
+    from analysisofuserbehavior_spark.registry import QUERIES
     from analysisofuserbehavior_spark.session import get_spark, release_query_resources
 
     spark = get_spark("profile", cpus=args.cpus, extra_conf={"spark.ui.enabled": "true"})
-    if args.shared:
-        t0 = time.perf_counter()
-        enable_shared_scan(spark, args.sf)
-        print(f"shared_scan_build: {time.perf_counter()-t0:.3f}s")
 
     url = spark.sparkContext.uiWebUrl
     app = spark.sparkContext.applicationId
@@ -77,8 +66,7 @@ def main() -> None:
         t0 = time.perf_counter()
         QUERIES[args.query](spark, args.sf).write.format("noop").mode("overwrite").save()
         times.append(round(time.perf_counter() - t0, 3))
-        if not args.shared:
-            release_query_resources(spark)
+        release_query_resources(spark)
     print(f"runs: {times}")
     print(f"codegen compiles in last run: {compiles.getCount() - cmark}")
 
@@ -103,8 +91,6 @@ def main() -> None:
             f"shR={s.get('shuffleReadBytes', 0)/1e6:7.2f}MB "
             f"shW={s.get('shuffleWriteBytes', 0)/1e6:7.2f}MB  {s.get('name', '')[:70]}"
         )
-    if args.shared:
-        disable_shared_scan(spark)
     spark.stop()
 
 
