@@ -4,7 +4,6 @@ from .core import (
     qround,
     csv_set_agg,
     day_col,
-    explode_csv_ids,
     hour_col,
     json_long,
     md5_prefix32,
@@ -17,7 +16,6 @@ __all__ = [
     "qround",
     "csv_set_agg",
     "day_col",
-    "explode_csv_ids",
     "hour_col",
     "json_long",
     "md5_prefix32",

@@ -117,12 +117,3 @@ def json_long(col: Column | str, path: str) -> Column:
     return F.get_json_object(_c(col), path).cast("bigint")
 
 
-def explode_csv_ids(col: Column | str, alias: str = "id") -> Column:
-    """One row per id from a CSV-in-a-string column — the reference's
-    order/pay category explode (UserVisitSessionAnalyzeSpark.java:
-    1337-1372,1601-1623,1661-1682).  NULL or '' produces no rows
-    (filter(...) drops empty fragments before the explode)."""
-    c = _c(col)
-    return F.explode(
-        F.filter(F.split(c, ","), lambda x: (x.isNotNull()) & (x != ""))
-    ).alias(alias)

@@ -8,31 +8,24 @@ module preserves is two things: the column-level equivalents
 *registration mechanism* so SQL text written against the reference's
 function names still runs (`register_reference_udfs`).
 
-| reference UDF            | Ref                                   | backing here            |
-|--------------------------|---------------------------------------|-------------------------|
-| concat_long_string       | ConcatLongStringUDF.java:8-17         | concat_ws               |
-| get_json_object(2-arg)   | GetJsonObjectUDF.java:12-27           | built-in already        |
-| random_prefix            | RandomPrefixUDF.java:11-22            | concat(floor(rand()*n)) |
-| remove_random_prefix     | RemoveRandomPrefixUDF.java:10-20      | substr after first '_'  |
-| group_concat_distinct    | GroupConcatDistinctUDAF.java:17-113   | collect_set+array_join  |
+| reference UDF            | Ref                                   | backing here               |
+|--------------------------|---------------------------------------|----------------------------|
+| concat_long_string       | ConcatLongStringUDF.java:8-17         | concat_ws                  |
+| get_json_object(2-arg)   | GetJsonObjectUDF.java:12-27           | built-in already           |
+| random_prefix            | RandomPrefixUDF.java:11-22            | AQE skew join (no salting) |
+| remove_random_prefix     | RemoveRandomPrefixUDF.java:10-20      | substr after first '_'     |
+| group_concat_distinct    | GroupConcatDistinctUDAF.java:17-113   | functions.csv_set_agg      |
 
 `remove_random_prefix` intentionally FIXES the reference bug: its
 `split("_")[1]` drops everything after a second underscore; ours
 strips exactly the first prefix segment.  The UDAF's substring-based
 "distinct" (String.contains, GroupConcatDistinctUDAF.java:69-77) is
 replaced by true set semantics.
-
-A vectorized Pandas-UDF (`register_pandas_example`) demonstrates the
-Arrow path for logic that genuinely can't be expressed with
-built-ins.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column, SparkSession, functions as F
-from pyspark.sql.types import DoubleType
 
 
 def _c(col: Column | str) -> Column:
@@ -43,24 +36,10 @@ def concat_long_string(v1: Column | str, v2: Column | str, sep: str) -> Column:
     return F.concat_ws(sep, _c(v1).cast("string"), _c(v2).cast("string"))
 
 
-def random_prefix(col: Column | str, n: int) -> Column:
-    """Salting helper for manual skew mitigation (RandomPrefixUDF
-    parity).  AQE subsumes this for joins; explicit salting still
-    helps pathological aggregation keys."""
-    return F.concat_ws(
-        "_", F.floor(F.rand() * n).cast("string"), _c(col).cast("string")
-    )
-
-
 def remove_random_prefix(col: Column | str) -> Column:
     """Strip one salt segment — everything after the FIRST '_'."""
     c = _c(col)
     return F.substring(c, F.instr(c, "_") + F.lit(1), F.lit(2147483647))
-
-
-def group_concat_distinct(col: Column | str) -> Column:
-    """GroupConcatDistinctUDAF parity with true set semantics."""
-    return F.array_join(F.array_sort(F.collect_set(_c(col))), ",")
 
 
 def register_reference_udfs(spark: SparkSession) -> None:
@@ -81,15 +60,3 @@ def register_reference_udfs(spark: SparkSession) -> None:
         "random_prefix_py",
         lambda s, n: s,  # deterministic stub: salting belongs in plans
     )
-
-
-def register_pandas_example(spark: SparkSession) -> None:
-    """Arrow-vectorized UDF demo — the sanctioned slow path for
-    logic built-ins can't express (10-100× over row-at-a-time)."""
-
-    @F.pandas_udf(DoubleType())
-    def value_zscore(v: pd.Series) -> pd.Series:
-        std = v.std(ddof=0)
-        return (v - v.mean()) / (std if std else 1.0)
-
-    spark.udf.register("value_zscore", value_zscore)

@@ -129,17 +129,33 @@ def run_ad_module(
     the ranged scan instead of the 5 s DStream cadence.  The live
     paths (stateful running totals, feedback blacklist loop, sliding
     trend) stay in streaming/ad_stream.py; this runner is the
-    task_param-driven backfill/replay shape of the same tables."""
+    task_param-driven backfill/replay shape of the same tables.
+
+    The five tables come from one derivation tree, as in the
+    reference, and each of its three shared frames goes through a
+    lazy `ckpt`, so events are scanned once and each shuffle runs
+    once:
+    * `clicks` (ranged click events: day, ts, user_id, ad_id) — the
+      per-user count and ad_click_trend.  A scan, filter and project
+      (the session window is pruned), so its checkpoint launches no
+      job while the plan is built;
+    * `per_user` (clicks per day, user, ad; the DStream's
+      AdUserClickCount upsert, :326-357) — its own output table,
+      ad_blacklist (:485-588) and the city roll-up;
+    * `daily_city` (per_user ⋈ users, summed per day, area, city, ad;
+      :620-676) — ad_stat's running window and ad_province_top3's
+      second groupBy to province (:753-783)."""
     from .operators import ad_stats as ads
 
-    actions = _actions_in_range(spark, sf_dir, params)
-    users = _users(spark, sf_dir)
+    clicks = ckpt(ads.clicks(_actions_in_range(spark, sf_dir, params)))
+    per_user = ckpt(ads.ad_user_click_count(clicks))
+    daily_city = ckpt(ads.daily_city_clicks(per_user, _users(spark, sf_dir)))
     return {
-        "ad_user_click_count": ads.ad_user_click_count(actions),
-        "ad_blacklist": ads.ad_blacklist(actions),
-        "ad_stat": ads.ad_stat(actions, users),
-        "ad_province_top3": ads.ad_province_top3(actions, users),
-        "ad_click_trend": ads.ad_click_trend(actions),
+        "ad_user_click_count": per_user,
+        "ad_blacklist": ads.ad_blacklist(per_user),
+        "ad_stat": ads.ad_stat(daily_city),
+        "ad_province_top3": ads.ad_province_top3(daily_city),
+        "ad_click_trend": ads.ad_click_trend(clicks),
     }
 
 

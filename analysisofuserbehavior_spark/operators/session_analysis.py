@@ -161,13 +161,9 @@ _BUCKET_CONDS: dict[str, str] = {
 }
 
 
-def _bucket_cond(col: str, name: str) -> Column:
-    """Bucket predicate over column name `col` (see _BUCKET_CONDS)."""
-    return F.expr(_BUCKET_CONDS[name].format(c=col))
-
-
 def _bucket_count_expr(col: str, name: str) -> Column:
-    """between_count(_bucket_cond(...)) as one parsed aggregate —
+    """between_count over the `name` predicate of _BUCKET_CONDS as one
+    parsed aggregate —
     cast(sum(CASE WHEN cond THEN 1 ELSE 0 END) as bigint), the exact
     tree functions.between_count builds."""
     cond = _BUCKET_CONDS[name].format(c=col)

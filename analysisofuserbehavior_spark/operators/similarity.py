@@ -164,11 +164,6 @@ def norm(a: Column, dim: int | None = None) -> Column:
     return F.when(F.size(a) == dim, F.sqrt(e)).otherwise(_hof_norm(a))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    a, b = _to_double(a), _to_double(b)
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
 def _with_vec(
     df: DataFrame, id_alias: str, vec: str, n: str, dim: int | None = None
 ) -> DataFrame:

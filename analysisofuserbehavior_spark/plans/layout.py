@@ -2,52 +2,16 @@
 
 The reference's only layout decision is a Hive table scanned with an
 interpolated date predicate (util/SparkUtils.java:64-90).  At scale
-the layout IS the index:
-
-* `write_partitioned_by_day` — facts land partitioned by `day`, so
-  the date-range predicate every module starts with
-  (`WHERE date BETWEEN ...`, SURVEY.md §2.1) becomes partition
-  PRUNING: untouched days are never listed, let alone read.
-* `write_bucketed` — pre-shuffle a fact table into N buckets on its
-  join/agg key (session_id, user_id): later joins and groupBys on
-  that key elide their exchange entirely (verified in
-  tests/test_layout.py by plan inspection).
+the layout IS the index: facts land partitioned by `day`, so the
+date-range predicate every module starts with (`WHERE date BETWEEN
+...`, SURVEY.md §2.1) becomes partition PRUNING — untouched days are
+never listed, let alone read (tests/test_layout_udfs.py checks the
+PartitionFilters).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def write_partitioned_by_day(
-    df: DataFrame, path: str, ts_col: str = "ts", mode: str = "overwrite"
-) -> None:
-    (
-        df.withColumn("day", F.date_format(F.col(ts_col), "yyyy-MM-dd"))
-        .repartition("day")
-        .write.mode(mode)
-        .partitionBy("day")
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Bucketed table (external when `path` given — warehouse.dir is
-    a static conf and can't be pointed elsewhere at runtime)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        writer = writer.sortBy(sort_col)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
 
 
 def overwrite_day_partitions(

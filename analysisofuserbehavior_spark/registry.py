@@ -219,18 +219,30 @@ def q_area_top3_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ad_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Module 4's per-(day, user, ad) click counts, composed the way
+    modules.run_ad_module derives them (without its checkpoints)."""
+    from .operators import ad_stats as ads
+
+    return ads.ad_user_click_count(ads.clicks(_actions(spark, sf_dir)))
+
+
+def _ad_daily_city(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.ad_stats import daily_city_clicks
+
+    return daily_city_clicks(_ad_per_user(spark, sf_dir), _users(spark, sf_dir))
+
+
 @query("ad_user_click_count")
 def q_ad_user_click_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ad_stats import ad_user_click_count
-
-    return ad_user_click_count(_actions(spark, sf_dir))
+    return _ad_per_user(spark, sf_dir)
 
 
 @query("ad_blacklist")
 def q_ad_blacklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ad_stats import ad_blacklist
 
-    return ad_blacklist(_actions(spark, sf_dir))
+    return ad_blacklist(_ad_per_user(spark, sf_dir))
 
 
 @query("ad_blacklist_feedback")
@@ -289,21 +301,21 @@ def q_ad_blacklist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ad_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ad_stats import ad_stat
 
-    return ad_stat(_actions(spark, sf_dir), _users(spark, sf_dir))
+    return ad_stat(_ad_daily_city(spark, sf_dir))
 
 
 @query("ad_province_top3")
 def q_ad_province_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ad_stats import ad_province_top3
 
-    return ad_province_top3(_actions(spark, sf_dir), _users(spark, sf_dir))
+    return ad_province_top3(_ad_daily_city(spark, sf_dir))
 
 
 @query("ad_click_trend")
 def q_ad_click_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ad_stats import ad_click_trend
+    from .operators import ad_stats as ads
 
-    return ad_click_trend(_actions(spark, sf_dir))
+    return ads.ad_click_trend(ads.clicks(_actions(spark, sf_dir)))
 
 
 @query("tpch_q3")

@@ -8,16 +8,13 @@ from pyspark.sql import functions as F
 from analysisofuserbehavior_spark import plans
 from analysisofuserbehavior_spark.functions import udfs
 from analysisofuserbehavior_spark.operators import session_analysis as sa
-from analysisofuserbehavior_spark.plans.layout import (
-    write_bucketed,
-    write_partitioned_by_day,
-)
+from analysisofuserbehavior_spark.plans.layout import overwrite_day_partitions
 from analysisofuserbehavior_spark.sources import load_table
 
 
 def test_partitioned_layout_prunes_days(spark, sf_dir, tmp_path):
     out = os.path.join(str(tmp_path), "events_by_day")
-    write_partitioned_by_day(load_table(spark, sf_dir, "events"), out)
+    overwrite_day_partitions(load_table(spark, sf_dir, "events"), out)
     df = spark.read.parquet(out).where(F.col("day").between("2024-01-02", "2024-01-03"))
     plan = plans.executed_plan(df)
     assert "PartitionFilters" in plan
@@ -25,21 +22,6 @@ def test_partitioned_layout_prunes_days(spark, sf_dir, tmp_path):
     # date) — compare canonical strings
     days = {str(r["day"]) for r in df.select("day").distinct().collect()}
     assert days == {"2024-01-02", "2024-01-03"}
-
-
-def test_bucketed_join_elides_shuffle(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    write_bucketed(
-        ev, "ev_bucketed", "user_id", n_buckets=4,
-        path=os.path.join(str(tmp_path), "ev_bucketed"),
-    )
-    t = spark.table("ev_bucketed")
-    agg = t.groupBy("user_id").agg(F.sum("value"))
-    # aggregation on the bucket key needs NO exchange
-    assert plans.count_exchanges(agg) == 0
-    joined = t.alias("a").join(spark.table("ev_bucketed").alias("b"), "user_id")
-    assert plans.count_exchanges(joined) == 0
-    spark.sql("DROP TABLE ev_bucketed")
 
 
 def test_reference_udf_names_run_in_sql(spark):
@@ -63,19 +45,14 @@ def test_column_udf_equivalents(spark):
 
 
 def test_group_concat_distinct_true_sets(spark):
+    """GroupConcatDistinctUDAF parity lives in functions.csv_set_agg."""
+    from analysisofuserbehavior_spark.functions import csv_set_agg
+
     df = spark.createDataFrame([("g", "12"), ("g", "112"), ("g", "12")], "k string, v string")
-    out = df.groupBy("k").agg(udfs.group_concat_distinct("v").alias("s")).collect()[0]
+    out = df.groupBy("k").agg(csv_set_agg("v").alias("s")).collect()[0]
     # the reference's String.contains dedup would drop '12' because
     # it's a substring of '112' (GroupConcatDistinctUDAF.java:69-77)
     assert out["s"] == "112,12"
-
-
-def test_pandas_udf_registration(spark):
-    udfs.register_pandas_example(spark)
-    df = spark.createDataFrame([(1.0,), (2.0,), (3.0,)], "v double")
-    df.createOrReplaceTempView("zs")
-    vals = [r["z"] for r in spark.sql("SELECT value_zscore(v) AS z FROM zs").collect()]
-    assert abs(sum(vals)) < 1e-9
 
 
 def test_operators_run_against_catalog_tables(spark, sf_dir):

@@ -61,20 +61,3 @@ def test_register_views(spark):
     register_mock_tables(spark)
     n = spark.sql("SELECT count(*) FROM user_visit_action").collect()[0][0]
     assert n > 0
-
-
-def test_csv_id_explode_over_mock_actions(spark):
-    """§2.2 CSV-id explode: order_category_ids 'a,b' → two rows;
-    null action columns → no rows (the reference's 3-way explode,
-    UserVisitSessionAnalyzeSpark.java:1337-1372)."""
-    from analysisofuserbehavior_spark.functions import explode_csv_ids
-
-    acts = mock_user_visit_action(spark, users=30, sessions_per_user=4)
-    n_order_rows = acts.where(F.col("order_category_ids").isNotNull()).count()
-    exploded = acts.select(explode_csv_ids("order_category_ids", "category_id"))
-    # every order row carries exactly 2 CSV ids in the mock format
-    assert exploded.count() == 2 * n_order_rows
-    empties = spark.createDataFrame(
-        [(None,), ("",), ("5",), ("5,7",)], "order_category_ids string"
-    ).select(explode_csv_ids("order_category_ids", "id"))
-    assert [r["id"] for r in empties.collect()] == ["5", "5", "7"]

@@ -142,3 +142,90 @@ def test_run_task_session_outputs_match_uncheckpointed_plans(spark, sf_dir):
     for name in reversed(list(out)):
         got = sorted(map(tuple, out[name].collect()))
         assert got == sorted(map(tuple, plain[name].collect())), name
+
+
+AD_RANGES = (
+    TASK_JSON,
+    json.dumps({"startDate": ["2024-01-10"], "endDate": ["2024-01-12"]}),
+)
+
+
+def _ad_compositions(spark, sf_dir, task_json):
+    """Module 4's five tables composed from the ad_stats operators
+    over the task's ranged actions, with no shared frame checkpointed."""
+    from analysisofuserbehavior_spark import modules
+    from analysisofuserbehavior_spark.operators import ad_stats as ads
+    from analysisofuserbehavior_spark.params import TaskParams
+
+    params = TaskParams.from_task_json(task_json)
+    clicks = ads.clicks(modules._actions_in_range(spark, sf_dir, params))
+    per_user = ads.ad_user_click_count(clicks)
+    daily_city = ads.daily_city_clicks(per_user, modules._users(spark, sf_dir))
+    return daily_city, {
+        "ad_user_click_count": per_user,
+        "ad_blacklist": ads.ad_blacklist(per_user),
+        "ad_stat": ads.ad_stat(daily_city),
+        "ad_province_top3": ads.ad_province_top3(daily_city),
+        "ad_click_trend": ads.ad_click_trend(clicks),
+    }
+
+
+def test_run_ad_module_shares_one_click_scan(spark, sf_dir):
+    """Module 4's five tables read the checkpointed click frame and its
+    roll-ups, so none of them scans events itself; each equals the same
+    ad_stats operators composed over plain plans.  The ranges hold
+    per-(day, province) counts tied across the top-3 cut, so the ad_id
+    tie-break is exercised."""
+    from analysisofuserbehavior_spark import plans
+
+    straddling_ties = 0
+    for task_json in AD_RANGES:
+        out = run_task(spark, task_json, sf_dir, modules=("ad",))
+        daily_city, plain = _ad_compositions(spark, sf_dir, task_json)
+        assert list(out) == list(plain)
+        for name in reversed(list(out)):
+            assert "events.parquet" not in plans.formatted_plan(out[name]), name
+            got = sorted(map(tuple, out[name].collect()))
+            assert got == sorted(map(tuple, plain[name].collect())), name
+            assert got or task_json != TASK_JSON, name
+        # province-level counts with more ads at the cut's count than the
+        # top-3 kept: the tie-break decided which of them made the cut
+        province = {}
+        for r in daily_city.collect():
+            key = (r["day"], r["area"], r["ad_id"])
+            province[key] = province.get(key, 0) + r["click_count"]
+        top3 = out["ad_province_top3"].collect()
+        cut = {}
+        for r in top3:
+            k = (r["day"], r["province"])
+            cut[k] = min(cut.get(k, r["click_count"]), r["click_count"])
+        for (day, prov), c in cut.items():
+            tied = [
+                ad for (d, p, ad), n in province.items() if (d, p, n) == (day, prov, c)
+            ]
+            kept = [
+                r["ad_id"]
+                for r in top3
+                if (r["day"], r["province"], r["click_count"]) == (day, prov, c)
+            ]
+            if len(tied) > len(kept):
+                straddling_ties += 1
+                assert sorted(kept) == sorted(tied)[: len(kept)], (day, prov)
+    assert straddling_ties > 0
+
+
+def test_run_ad_module_empty_range(spark, sf_dir):
+    """A task range with no events gives five empty tables with the
+    same schemas as a non-empty run: the three checkpointed frames and
+    AQE's folding of empty relations hold on zero rows."""
+    empty = run_task(
+        spark,
+        json.dumps({"startDate": ["2030-01-01"], "endDate": ["2030-01-31"]}),
+        sf_dir,
+        modules=("ad",),
+    )
+    full = run_task(spark, TASK_JSON, sf_dir, modules=("ad",))
+    assert list(empty) == list(full)
+    for name, df in empty.items():
+        assert df.collect() == [], name
+        assert df.schema == full[name].schema, name

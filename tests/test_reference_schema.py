@@ -7,7 +7,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from analysisofuserbehavior_spark.functions import explode_csv_ids
 from analysisofuserbehavior_spark.operators import session_analysis as sa
 from analysisofuserbehavior_spark.operators.reference_schema import (
     actions_from_user_visit_action,
@@ -38,7 +37,7 @@ def test_order_pay_counts_via_csv_explode(spark):
     actions = actions_from_user_visit_action(uva)
     order_counts = (
         actions.where(F.col("event_type") == "order")
-        .select(explode_csv_ids("order_category_ids", "category_id"))
+        .select(F.explode(F.split("order_category_ids", ",")).alias("category_id"))
         .groupBy("category_id")
         .count()
     )

@@ -5,16 +5,6 @@ from pyspark.sql import functions as F
 from analysisofuserbehavior_spark.operators import similarity
 
 
-def test_cosine_expression(spark):
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0])],
-        "a array<float>, b array<float>",
-    )
-    out = [r["c"] for r in df.select(similarity.cosine(F.col("a"), F.col("b")).alias("c")).collect()]
-    assert abs(out[0] - 1.0) < 1e-12
-    assert abs(out[1]) < 1e-12
-
-
 def test_bruteforce_topk_shape_and_order(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = similarity.ann_bruteforce_topk(emb, n_queries=3, k=4).collect()

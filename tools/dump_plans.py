@@ -57,7 +57,7 @@ FLAGSHIPS = [
     ("dsir_select", "hashed-LM broadcast join-back + two-pass ntile; no global sort"),
     ("hybrid_rrf_topk", "broadcast query frames; WindowGroupLimit top-k; full-outer RRF fusion"),
     ("mixture_resample", "broadcast |langs| weight frame; row-local replication explode"),
-    ("run_task_ad_province_top3", "task-param ranged scan pushdown through the composed ad lifecycle"),
+    ("run_task_ad_province_top3", "province roll-up of the checkpointed per-(day, city, ad) counts; row_number top-3"),
     # round 12
     ("ann_lsh_topk", "broadcast query-band probe; map-only corpus touch, per-query windows"),
     ("embedding_covariance", "mapInPandas int64 Gram partials; d^2-row shuffle regardless of corpus"),
