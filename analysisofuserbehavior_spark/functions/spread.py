@@ -22,8 +22,6 @@ to their own width.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 # floor for `min_bytes=LIGHT_WORK` call sites (below it, LIGHT stage-1
@@ -33,8 +31,8 @@ from pyspark.sql import DataFrame
 # round at local job-scheduling latency.  Heavy-per-row call sites
 # (media codecs, MinHash aggregation) pass no floor: their stage-1
 # cost per byte is orders of magnitude higher and the spread pays for
-# itself at any input size.  Env-overridable, not core-count-derived.
-LIGHT_WORK = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(32 << 20)))
+# itself at any input size.  A constant, not core-count-derived.
+LIGHT_WORK = 32 << 20
 
 
 def spread_small_scan(

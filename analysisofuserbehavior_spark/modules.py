@@ -54,7 +54,8 @@ def _actions_in_range(spark: SparkSession, sf_dir: str, params: TaskParams) -> D
     return bm.actions(_events_in_range(spark, sf_dir, params))
 
 
-def _users(spark: SparkSession, sf_dir: str) -> DataFrame:
+def load_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The user dimension: customer ⋈ nation ⋈ region (`bm.user_info`)."""
     return bm.user_info(
         load_table(spark, sf_dir, "customer"),
         load_table(spark, sf_dir, "nation"),
@@ -80,7 +81,7 @@ def run_session_module(
     `sessions` has one consumer and stays a plain plan."""
     actions = ckpt(_actions_in_range(spark, sf_dir, params))
     sessions = sa.session_stats(actions)
-    filtered = ckpt(sa.filter_sessions(sessions, _users(spark, sf_dir), params))
+    filtered = ckpt(sa.filter_sessions(sessions, load_users(spark, sf_dir), params))
     chosen = ckpt(sa.session_random_extract(filtered, total=params.extract_count))
     top_cats = ckpt(sa.top10_categories(actions))
     return {
@@ -114,7 +115,7 @@ def run_area_module(
     products = bm.product_info(load_table(spark, sf_dir, "part"))
     return {
         "area_top3_product": area_top3_products(
-            actions, _users(spark, sf_dir), products
+            actions, load_users(spark, sf_dir), products
         )
     }
 
@@ -149,7 +150,7 @@ def run_ad_module(
 
     clicks = ckpt(ads.clicks(_actions_in_range(spark, sf_dir, params)))
     per_user = ckpt(ads.ad_user_click_count(clicks))
-    daily_city = ckpt(ads.daily_city_clicks(per_user, _users(spark, sf_dir)))
+    daily_city = ckpt(ads.daily_city_clicks(per_user, load_users(spark, sf_dir)))
     return {
         "ad_user_click_count": per_user,
         "ad_blacklist": ads.ad_blacklist(per_user),
@@ -190,7 +191,7 @@ def run_active_module(
     from .operators import user_active as ua
 
     events = load_table(spark, sf_dir, "events")
-    users = _users(spark, sf_dir)
+    users = load_users(spark, sf_dir)
     kw: dict = {}
     if params.start_date and params.end_date:
         kw = {"start": params.start_date, "end": params.end_date}

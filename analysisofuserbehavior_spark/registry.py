@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from .operators import behavior_model as bm
 from .operators import session_analysis as sa
 from .functions import qround
+from .modules import load_users
 from .params import TaskParams
 from .session import scratch_dir
 from .sources import load_table, local_frame
@@ -51,14 +52,6 @@ def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sa.session_stats(_actions(spark, sf_dir))
 
 
-def _users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bm.user_info(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "region"),
-    )
-
-
 # demo param set for the predicate engine; mirrored in
 # oracle.ORACLE['session_filtered_aggr_stat']
 DEMO_PARAMS = TaskParams(
@@ -88,7 +81,7 @@ def q_session_aggr_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("session_filtered_aggr_stat")
 def q_session_filtered_aggr_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = _sessions(spark, sf_dir)
-    filtered = sa.filter_sessions(sessions, _users(spark, sf_dir), DEMO_PARAMS)
+    filtered = sa.filter_sessions(sessions, load_users(spark, sf_dir), DEMO_PARAMS)
     return sa.session_aggr_stat(filtered)
 
 
@@ -215,7 +208,7 @@ def q_area_top3_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.area_products import area_top3_products
 
     return area_top3_products(
-        _actions(spark, sf_dir), _users(spark, sf_dir), _products(spark, sf_dir)
+        _actions(spark, sf_dir), load_users(spark, sf_dir), _products(spark, sf_dir)
     )
 
 
@@ -230,7 +223,7 @@ def _ad_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ad_daily_city(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ad_stats import daily_city_clicks
 
-    return daily_city_clicks(_ad_per_user(spark, sf_dir), _users(spark, sf_dir))
+    return daily_city_clicks(_ad_per_user(spark, sf_dir), load_users(spark, sf_dir))
 
 
 @query("ad_user_click_count")
@@ -259,6 +252,7 @@ def q_ad_blacklist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import datetime, timedelta
 
     from .functions import day_col, json_long
+    from .sources.upsert import _load_state
     from .streaming.ad_stream import BlacklistLoop
 
     ev = load_table(spark, sf_dir, "events")
@@ -279,7 +273,7 @@ def q_ad_blacklist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) as r:
         loop = BlacklistLoop(_os.path.join(r.work, "state"))
         loop.run(r.stream, r.ckpt)
-        _, last_epoch = loop.state_epoch(spark)
+        _, last_epoch = _load_state(spark, loop._STATE_SCHEMA, loop.table_dir)
         # the two-phase-replay property only binds when there were
         # clicks to replay; an empty log legitimately yields zero
         # micro-batch folds and an empty blacklist-feedback result
@@ -936,7 +930,7 @@ def q_top10_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     (UserActiveDegreeAnalyze.scala:53-67)."""
     from .operators import user_active as ua
 
-    return ua.top10_active_users(_events(spark, sf_dir), _users(spark, sf_dir))
+    return ua.top10_active_users(_events(spark, sf_dir), load_users(spark, sf_dir))
 
 
 @query("top10_purchase_users")
@@ -944,7 +938,7 @@ def q_top10_purchase_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Module 5 — top-10 users by purchase money (ref :72-79)."""
     from .operators import user_active as ua
 
-    return ua.top10_purchase_users(_events(spark, sf_dir), _users(spark, sf_dir))
+    return ua.top10_purchase_users(_events(spark, sf_dir), load_users(spark, sf_dir))
 
 
 @query("top10_visit_growth")
@@ -952,7 +946,7 @@ def q_top10_visit_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Module 5 — top-10 period-over-period click growth (ref :92-108)."""
     from .operators import user_active as ua
 
-    return ua.top10_visit_growth(_events(spark, sf_dir), _users(spark, sf_dir))
+    return ua.top10_visit_growth(_events(spark, sf_dir), load_users(spark, sf_dir))
 
 
 @query("top10_purchase_growth")
@@ -961,7 +955,7 @@ def q_top10_purchase_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ref :114-130)."""
     from .operators import user_active as ua
 
-    return ua.top10_purchase_growth(_events(spark, sf_dir), _users(spark, sf_dir))
+    return ua.top10_purchase_growth(_events(spark, sf_dir), load_users(spark, sf_dir))
 
 
 @query("top10_first_week_active")
@@ -970,7 +964,7 @@ def q_top10_first_week_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ref :135-146; signup := first-seen day)."""
     from .operators import user_active as ua
 
-    return ua.top10_first_week_active(_events(spark, sf_dir), _users(spark, sf_dir))
+    return ua.top10_first_week_active(_events(spark, sf_dir), load_users(spark, sf_dir))
 
 
 @query("streaming_ad_running_totals")
@@ -1076,7 +1070,7 @@ def q_session_filtered_aggr_stat2(spark: SparkSession, sf_dir: str) -> DataFrame
     """Predicate engine, second parameter shape: date window + city
     set + click-category CSV overlap (ValidUtils `in` semantics)."""
     sessions = _sessions(spark, sf_dir)
-    filtered = sa.filter_sessions(sessions, _users(spark, sf_dir), DEMO_PARAMS2)
+    filtered = sa.filter_sessions(sessions, load_users(spark, sf_dir), DEMO_PARAMS2)
     return sa.session_aggr_stat(filtered)
 
 
@@ -1324,7 +1318,7 @@ def q_k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     removal."""
     from .operators.pii import k_anonymity_report
 
-    return k_anonymity_report(_users(spark, sf_dir))
+    return k_anonymity_report(load_users(spark, sf_dir))
 
 
 @query("bm25_prf_topk")
@@ -1432,7 +1426,7 @@ def q_funnel_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max((F.col("event_type") == "click").cast("int")).alias("c"),
         F.max((F.col("event_type") == "purchase").cast("int")).alias("p"),
     )
-    dim = _users(spark, sf_dir).select(
+    dim = load_users(spark, sf_dir).select(
         "user_id", F.col("professional").alias("segment")
     )
     j = flags.join(F.broadcast(dim), "user_id")
@@ -5596,7 +5590,7 @@ def q_l_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/pii.py)."""
     from .operators.pii import l_diversity_report
 
-    return l_diversity_report(_users(spark, sf_dir))
+    return l_diversity_report(load_users(spark, sf_dir))
 
 
 @query("perplexity_filtered_corpus")

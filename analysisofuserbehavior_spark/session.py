@@ -27,10 +27,8 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # tmpfs is RAM: only route scratch there while it has real headroom,
 # or spills end up competing with the memory they're relieving
-# (round-11 ADVICE).  Threshold overridable for small hosts.
-_SHM_MIN_FREE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SHM_MIN_FREE", str(8 * 1024**3))
-)
+# (round-11 ADVICE).
+_SHM_MIN_FREE_BYTES = 8 * 1024**3
 
 _SCRATCH_DIRS: list[str] = []
 
@@ -84,7 +82,7 @@ def scratch_dir(prefix: str = "scratch_") -> str:
     makes, not a benchmark trick.  Because tmpfs is RAM-backed, every
     dir handed out is registered for an atexit sweep, and allocation
     falls back to the system tmp when /dev/shm headroom drops below
-    $SPARK_GRAFT_SHM_MIN_FREE (default 8 GiB).  Override the base
+    8 GiB (`_SHM_MIN_FREE_BYTES`).  Override the base
     with $SPARK_GRAFT_SCRATCH."""
     import tempfile
 

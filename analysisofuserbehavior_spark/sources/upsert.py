@@ -1,29 +1,41 @@
-"""Keyed upsert (MERGE) sinks for foreachBatch streams.
+"""Staged-state folds for foreachBatch streams, and the JDBC MERGE sink.
 
-The reference's most-used sink is select-then-upsert into MySQL:
+The reference keeps module 4's state in MySQL with row-at-a-time
+select-then-upsert DAOs run inside foreachPartition:
 `dao/impl/AdUserClickCountImpl.java:14-78` keeps a running per-key
-click count (UPDATE count = count + delta / INSERT), and
+click count (UPDATE count = count + delta / INSERT),
 `dao/impl/AdStatImpl.java:15-97` replaces the row for a key
-(insert-or-update; its UPDATE SQL is a latent reference bug).  Both
-run row-at-a-time SELECTs inside foreachPartition.
+(insert-or-update; its UPDATE SQL is a latent reference bug), and the
+blacklist round-trips through the same tables
+(`AdClickRealTimeStatSpark.java:234-588`).
 
-Rebuild: set-oriented MERGE semantics, twice.
+Rebuild: ONE durable protocol, `StagedStateFold`, and three merge
+steps on it.  Every fold keeps a compacted parquet state whose rows
+carry `applied_epoch`; per micro-batch it loads and recovers the
+state (`_load_state`), skips an epoch already applied, stages the
+merged state to `<dir>_next` and promotes it over `<dir>`
+(`_promote_state`), so at-least-once replays are idempotent and a
+crash at any point between the two writes converges on restart.
+The merge steps:
 
-- `ParquetUpsertSink` — a fully testable sink that MERGEs each
-  micro-batch into a compacted parquet table keyed by `key_cols`:
-  `merge="sum"` accumulates the value columns (AdUserClickCountImpl
-  semantics), `merge="replace"` overwrites them (AdStatImpl
-  semantics).  State rows carry `applied_epoch`, so at-least-once
-  foreachBatch replays are idempotent.  On a cluster the same sink
-  maps 1:1 onto `MERGE INTO` over Delta/Iceberg, which touches only
-  the files holding matched keys; the parquet twin rewrites the
+- `ParquetUpsertSink` — keyed MERGE: `merge="sum"` accumulates the
+  value columns (AdUserClickCountImpl semantics), `merge="replace"`
+  overwrites them (AdStatImpl semantics).  On a cluster the same
+  sink maps 1:1 onto `MERGE INTO` over Delta/Iceberg, which touches
+  only the files holding matched keys; the parquet twin rewrites the
   compacted table (fine for dimension-sized results like the
   reference's MySQL tables, which is exactly what these sinks feed).
-- `jdbc_upsert_foreach_batch` — the production JDBC path: stage the
-  micro-batch with a batched write, then issue one set-oriented
-  MERGE (generated by `build_merge_sql`, unit-tested).  No JDBC
-  driver jar ships in this container, so the statement runner is
-  injectable; the default runner uses the JVM's DriverManager.
+- `Scd2Sink` — the latest CDC row per key (`max_by`), folded into a
+  versioned history by `operators.scd.scd2_apply`.
+- `streaming.ad_stream.BlacklistLoop` — the batch anti-joined against
+  the blacklist derived from the loaded totals, counted per
+  (day, user, ad), and summed into the totals.
+
+`jdbc_upsert_foreach_batch` is the production JDBC path: stage the
+micro-batch with a batched write, then issue one set-oriented MERGE
+(generated by `build_merge_sql`, unit-tested).  The package ships no
+JDBC driver jar, so the statement runner is injectable; the default
+runner uses the JVM's DriverManager.
 """
 
 from __future__ import annotations
@@ -55,11 +67,12 @@ def _committed(spark: SparkSession, path: str) -> tuple[bool, bool]:
     return True, fs.exists(marker)
 
 
-# file count for staged state writes: the states these sinks manage
+# file count for staged state writes: the states these folds manage
 # are COMPACTED keyed totals (one row per key tuple), dimension-sized
 # by construction, so a handful of files is the right shape — 32
 # shuffle-partition files of a few KB each cost more in commit
-# protocol + footer reads than the data itself
+# protocol, footer reads and the driver-side promote than the data
+# itself (raise it for genuinely large dimensions)
 _STATE_FILES = 4
 
 
@@ -137,40 +150,26 @@ def _footer_max_epoch(path: str) -> int | None:
         return None
 
 
-def _load_state_epoch(
-    spark: SparkSession, schema: T.StructType | str, table_dir: str
-) -> tuple[DataFrame, int | None]:
-    """`_load_state` that also returns max(applied_epoch) of the
-    returned state (None = empty/no epochs), so per-batch sinks don't
-    re-aggregate the epoch they just resolved during recovery
-    arbitration — one fewer Spark job per micro-batch."""
-    df, epoch = _load_state_impl(spark, schema, table_dir)
-    return df, (None if epoch is None or epoch < 0 else epoch)
-
-
 def _load_state(
     spark: SparkSession, schema: T.StructType | str, table_dir: str
-) -> DataFrame:
-    """Crash-safe state read for the staged-overwrite sinks.
+) -> tuple[DataFrame, int | None]:
+    """Crash-safe state read for the staged-state folds: (state,
+    max(applied_epoch) of that state, None when it holds no epoch).
 
     Distinguishes 'no table yet' (→ empty state) from a FAILED read
     (half-written overwrite, corrupt files): only a directory that is
     genuinely absent initializes empty; anything else must resolve to
     a committed copy or the sink raises instead of silently wiping
     history.  The write protocol is stage-then-finalize (write
-    `<dir>_next`, then overwrite `<dir>` from it), so a crash between
-    the two leaves `<dir>` uncommitted but `<dir>_next` committed —
-    recover from whichever committed dir carries the higher
-    applied_epoch (equal after a clean finalize).  Recovery COMPLETES
-    the interrupted finalize (rewrites `<dir>` from `<dir>_next`)
-    before returning, so the caller's later overwrite of `<dir>_next`
-    never clobbers the very files its state scan is reading."""
-    return _load_state_impl(spark, schema, table_dir)[0]
-
-
-def _load_state_impl(
-    spark: SparkSession, schema: T.StructType | str, table_dir: str
-) -> tuple[DataFrame, int | None]:
+    `<dir>_next`, then promote it over `<dir>`), so a crash between
+    the two leaves `<dir>` stale or uncommitted but `<dir>_next`
+    committed — recover from whichever committed dir carries the
+    higher applied_epoch (equal after a clean finalize).  Recovery
+    COMPLETES the interrupted finalize before returning, so the
+    caller's later overwrite of `<dir>_next` never clobbers the very
+    files its state scan is reading.  The epoch comes from this
+    arbitration (parquet footers on local schemes), so a fold pays
+    no second aggregation job for it."""
     epochs: dict[str, int] = {}
     uncommitted: list[str] = []
     next_dir = table_dir + "_next"
@@ -201,7 +200,10 @@ def _load_state_impl(
             resolved = epochs[next_dir]
         else:
             resolved = epochs[table_dir]
-        return spark.read.schema(schema).parquet(table_dir), resolved
+        return (
+            spark.read.schema(schema).parquet(table_dir),
+            None if resolved < 0 else resolved,
+        )
     if table_dir in uncommitted:
         # a dir with NO files at all (deployment tooling mkdir -p'd
         # the path) has no history to lose — treat as first batch;
@@ -224,14 +226,66 @@ def _load_state_impl(
     return local_frame(spark, [], schema), None
 
 
-class ParquetUpsertSink:
+class StagedStateFold:
+    """The durable protocol every foreachBatch state fold shares (see
+    the module docstring).  A subclass sets `table_dir` and
+    `_PLAN_TAG` and supplies only its state schema,
+    `_state_schema(batch)`, and its merge step, `_merge(state,
+    batch)` → the merged state without `applied_epoch`.  Use an
+    instance as `stream.writeStream.foreachBatch(fold)`.
+    """
+
+    table_dir: str
+    _PLAN_TAG: str
+    # fault injection: when set to an epoch id, the fold raises ONCE
+    # after staging that epoch's merge to `<dir>_next` but BEFORE
+    # finalizing `<dir>` — the exact window the stage-then-finalize
+    # recovery protocol exists for.  The gated crash-recovery replays
+    # (registry `streaming_upsert_crash_recovery` and
+    # `streaming_scd2_crash_recovery`) oracle-check recovery with it,
+    # the way real storage engines expose crash points for fault
+    # tests.  None (default) = never fires.
+    fail_after_stage_epoch: int | None = None
+
+    def _state_schema(self, batch_df: DataFrame) -> T.StructType | str:
+        raise NotImplementedError
+
+    def _merge(self, state: DataFrame, batch_df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
+        state, applied = _load_state(
+            spark, self._state_schema(batch_df), self.table_dir
+        )
+        if applied is not None and epoch_id <= applied:
+            return  # at-least-once replay of an already-merged epoch
+        merged = self._merge(state, batch_df).withColumn(
+            "applied_epoch", F.lit(epoch_id).cast("long")
+        )
+        from ..plans import audit as _audit
+
+        _audit.observe_micro_batch_frame(self._PLAN_TAG, merged)
+        merged.coalesce(_STATE_FILES).write.mode("overwrite").parquet(
+            self.table_dir + "_next"
+        )
+        if epoch_id == self.fail_after_stage_epoch:
+            self.fail_after_stage_epoch = None  # fire once
+            raise RuntimeError(
+                f"injected crash: epoch {epoch_id} staged but not finalized"
+            )
+        _promote_state(spark, self.table_dir)
+
+
+class ParquetUpsertSink(StagedStateFold):
     """MERGE each micro-batch into a keyed parquet table.
 
     The batch handed to `__call__` must be key-unique (one row per
     `key_cols` tuple) — the natural shape of an aggregated
     foreachBatch result; duplicates are collapsed defensively.
-    Use as `stream.writeStream.foreachBatch(sink)`.
     """
+
+    _PLAN_TAG = "upsert_sink_merge"
 
     def __init__(
         self,
@@ -246,35 +300,17 @@ class ParquetUpsertSink:
         self.key_cols = list(key_cols)
         self.value_cols = list(value_cols)
         self.merge = merge
-        self._schema: T.StructType | None = None
-        # fault injection: when set to an epoch id, the sink raises
-        # ONCE after staging that epoch's merge to `<dir>_next` but
-        # BEFORE finalizing `<dir>` — the exact window the
-        # stage-then-finalize recovery protocol exists for.  Used by
-        # the gated crash-recovery replay (registry
-        # `streaming_upsert_crash_recovery`) to oracle-check recovery,
-        # the way real storage engines expose crash points for fault
-        # tests.  None (default) = never fires.
-        self.fail_after_stage_epoch: int | None = None
 
     def _state_schema(self, batch_df: DataFrame) -> T.StructType:
         cols = self.key_cols + self.value_cols
         fields = [batch_df.schema[c] for c in cols]
         return T.StructType(fields + [T.StructField("applied_epoch", T.LongType())])
 
-    def _state(self, spark: SparkSession, schema: T.StructType) -> DataFrame:
-        return _load_state(spark, schema, self.table_dir)
-
     def current(self, spark: SparkSession) -> DataFrame:
         """The merged table (without the epoch bookkeeping column)."""
         return spark.read.parquet(self.table_dir).drop("applied_epoch")
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        schema = self._state_schema(batch_df)
-        state, applied = _load_state_epoch(spark, schema, self.table_dir)
-        if applied is not None and epoch_id <= applied:
-            return  # at-least-once replay of an already-merged epoch
+    def _merge(self, state: DataFrame, batch_df: DataFrame) -> DataFrame:
         cols = self.key_cols + self.value_cols
         delta = batch_df.select(*cols).dropDuplicates(self.key_cols)
         old = state.select(*cols)
@@ -288,27 +324,7 @@ class ParquetUpsertSink:
             merged = delta.unionByName(
                 old.join(delta.select(*self.key_cols), self.key_cols, "left_anti")
             )
-        merged = merged.select(*cols).withColumn(
-            "applied_epoch", F.lit(epoch_id).cast("long")
-        )
-        from ..plans import audit as _audit
-
-        _audit.observe_micro_batch_frame("upsert_sink_merge", merged)
-        # the state is compacted keyed totals (dimension-sized):
-        # writing it as shuffle-partition-many tiny files makes every
-        # later state read and the driver-side promote pay O(files);
-        # coalesce to a handful (raise for genuinely large dimensions)
-        merged.coalesce(_STATE_FILES).write.mode("overwrite").parquet(
-            self.table_dir + "_next"
-        )
-        if self.fail_after_stage_epoch is not None and (
-            epoch_id == self.fail_after_stage_epoch
-        ):
-            self.fail_after_stage_epoch = None  # fire once
-            raise RuntimeError(
-                f"injected crash: epoch {epoch_id} staged but not finalized"
-            )
-        _promote_state(spark, self.table_dir)
+        return merged.select(*cols)
 
 
 def build_merge_sql(
@@ -390,7 +406,7 @@ def jdbc_upsert_foreach_batch(
     return sink
 
 
-class Scd2Sink:
+class Scd2Sink(StagedStateFold):
     """Maintain an SCD2 dimension-history table from a CDC update
     stream — the streaming twin of `operators.scd.scd2_apply`.
 
@@ -398,15 +414,15 @@ class Scd2Sink:
     folds it into the versioned table with ONE full-outer join
     (closed versions, re-opened versions, inserts — see scd.py), so
     per-batch cost is O(batch + open rows), never a rescan of closed
-    history beyond the union-back.  `applied_epoch` bookkeeping makes
-    at-least-once foreachBatch replays idempotent, same contract as
-    `ParquetUpsertSink`.  Batches with several updates for one key
-    keep the max-`eff` row (`max_by`) — give ties distinct `eff`
-    values upstream or the winner is engine-arbitrary.  `eff` may be
-    an ISO string, DATE or TIMESTAMP; the validity columns take its
-    exact type (scd2_apply casts its open-version null marker to the
-    eff type, so the state schema and the merged frame always
-    agree)."""
+    history beyond the union-back.  Batches with several updates for
+    one key keep the max-`eff` row (`max_by`) — give ties distinct
+    `eff` values upstream or the winner is engine-arbitrary.  `eff`
+    may be an ISO string, DATE or TIMESTAMP; the validity columns
+    take its exact type (scd2_apply casts its open-version null
+    marker to the eff type, so the state schema and the merged frame
+    always agree)."""
+
+    _PLAN_TAG = "scd2_sink_merge"
 
     def __init__(
         self,
@@ -419,15 +435,6 @@ class Scd2Sink:
         self.key = key
         self.tracked = list(tracked)
         self.eff_col = eff_col
-        # fault injection, same contract as ParquetUpsertSink: raise
-        # ONCE after staging this epoch's fold to `<dir>_next` but
-        # before finalizing `<dir>` — the stage-then-finalize recovery
-        # window.  Powers the gated streaming_scd2_crash_recovery
-        # replay.  None (default) = never fires.
-        self.fail_after_stage_epoch: int | None = None
-
-    def _cols(self) -> list[str]:
-        return [self.key, *self.tracked, "valid_from", "valid_to"]
 
     def _state_schema(self, batch_df: DataFrame) -> T.StructType:
         fields = [batch_df.schema[c] for c in [self.key, *self.tracked]]
@@ -448,14 +455,9 @@ class Scd2Sink:
     def history(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.table_dir).drop("applied_epoch")
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def _merge(self, state: DataFrame, batch_df: DataFrame) -> DataFrame:
         from ..operators.scd import scd2_apply
 
-        spark = batch_df.sparkSession
-        schema = self._state_schema(batch_df)
-        state, applied = _load_state_epoch(spark, schema, self.table_dir)
-        if applied is not None and epoch_id <= applied:
-            return
         latest = (
             batch_df.groupBy(self.key)
             .agg(
@@ -466,24 +468,10 @@ class Scd2Sink:
                 ],
             )
         )
-        merged = scd2_apply(
+        return scd2_apply(
             state.drop("applied_epoch"),
             latest,
             key=self.key,
             tracked=tuple(self.tracked),
             eff_col=self.eff_col,
-        ).withColumn("applied_epoch", F.lit(epoch_id).cast("long"))
-        from ..plans import audit as _audit
-
-        _audit.observe_micro_batch_frame("scd2_sink_merge", merged)
-        merged.coalesce(_STATE_FILES).write.mode("overwrite").parquet(
-            self.table_dir + "_next"
         )
-        if self.fail_after_stage_epoch is not None and (
-            epoch_id == self.fail_after_stage_epoch
-        ):
-            self.fail_after_stage_epoch = None  # fire once
-            raise RuntimeError(
-                f"injected crash: epoch {epoch_id} staged but not finalized"
-            )
-        _promote_state(spark, self.table_dir)

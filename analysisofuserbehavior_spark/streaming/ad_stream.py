@@ -43,6 +43,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..functions import day_col, json_long
 from ..functions.ckpt import ckpt
+from ..sources.upsert import StagedStateFold, _load_state
 
 # Kafka JSON wire contract: `ts` travels as epoch-nanos long (the
 # producer-side encoding; converted to a timestamp on parse).
@@ -374,7 +375,7 @@ def province_top3_per_batch(
     )
 
 
-class BlacklistLoop:
+class BlacklistLoop(StagedStateFold):
     """The dynamic-blacklist feedback loop (ref :234-588) on
     foreachBatch: batch N's aggregated counts fold into a COMPACTED
     keyed state table (one row per (day, user_id, ad_id)); users
@@ -392,99 +393,68 @@ class BlacklistLoop:
       re-aggregates once.  (The previous design appended raw
       per-batch counts and re-aggregated the whole append-only dir
       every batch — O(history) on a long-lived stream.)
-    - foreachBatch is at-least-once; replays must not double-count.
-      Every state row carries `applied_epoch` = the last epoch folded
-      in, written atomically WITH the totals; a replayed epoch
-      (epoch_id <= applied_epoch) is skipped.  The blacklist is
-      DERIVED from the totals on read, so there is no second state
-      dir that could diverge from the counts under a mid-commit crash.
-    - The two-step overwrite (_next, then swap) stands in for a
+    - The durable protocol is `sources.upsert.StagedStateFold`'s:
+      every state row carries `applied_epoch`, written atomically
+      WITH the totals, so a replayed epoch is skipped, and a crash
+      between staging and promote recovers on the next load
+      (`sources.upsert._load_state`).  The blacklist is DERIVED from
+      the totals on read, so there is no second state dir that could
+      diverge from the counts under a mid-commit crash.
+    - The two-step overwrite (stage, then promote) stands in for a
       transactional MERGE; a production sink would MERGE into
       Delta/Iceberg, touching only files for the batch's days.
     - SINGLE-WRITER contract (same as every foreachBatch sink
       without a table-format lock service): one live query owns a
-      state dir at a time.  Crash-and-RESTART of that writer is safe
-      (staged finalize + epoch replay guard, recovery in
-      sources/upsert.py::_load_state); two OVERLAPPING queries are
-      not — a killed query's zombie task commits can land in the dir
-      after a successor recovered it.  Delta/Iceberg close that last
-      gap with optimistic-concurrency commits.
+      state dir at a time.  Crash-and-RESTART of that writer is safe;
+      two OVERLAPPING queries are not — a killed query's zombie task
+      commits can land in the dir after a successor recovered it.
+      Delta/Iceberg close that last gap with optimistic-concurrency
+      commits.
     """
 
+    _PLAN_TAG = "blacklist_loop_totals"
     _STATE_SCHEMA = (
         "day string, user_id long, ad_id long, "
         "click_count long, applied_epoch long"
     )
 
     def __init__(self, state_dir: str, threshold: int = 2):
-        self.totals_dir = os.path.join(state_dir, "totals")
+        self.table_dir = os.path.join(state_dir, "totals")
         self.threshold = threshold
 
-    def _state(self, spark: SparkSession) -> DataFrame:
-        # crash-safe shared loader (sources/upsert.py): recovers from
-        # the committed `_next` staging copy after a mid-finalize
-        # crash and refuses to silently reinitialize over a corrupt
-        # main dir — losing this state forgets every blacklisted user
-        # and double-counts replayed epochs
-        from ..sources.upsert import _load_state
+    def _state_schema(self, batch_df: DataFrame) -> str:
+        return self._STATE_SCHEMA
 
-        return _load_state(spark, self._STATE_SCHEMA, self.totals_dir)
-
-    def state_epoch(self, spark: SparkSession) -> tuple[DataFrame, int | None]:
-        """(state frame, max applied_epoch) — the epoch comes from the
-        crash-arbitration metadata read (parquet footers on local
-        schemes), not a second Spark aggregation job."""
-        from ..sources.upsert import _load_state_epoch
-
-        return _load_state_epoch(spark, self._STATE_SCHEMA, self.totals_dir)
+    def _blacklist(self, totals: DataFrame) -> DataFrame:
+        return (
+            totals.where(F.col("click_count") >= self.threshold)
+            .select("user_id")
+            .distinct()
+        )
 
     def current_totals(self, spark: SparkSession) -> DataFrame:
-        return self._state(spark).select("day", "user_id", "ad_id", "click_count")
+        state, _ = _load_state(spark, self._STATE_SCHEMA, self.table_dir)
+        return state.select("day", "user_id", "ad_id", "click_count")
 
     def current_blacklist(self, spark: SparkSession) -> DataFrame:
-        return (
-            self._state(spark)
-            .where(F.col("click_count") >= self.threshold)
-            .select("user_id")
-            .distinct()
-        )
+        return self._blacklist(self.current_totals(spark))
 
-    def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        state, applied = self.state_epoch(spark)
-        if applied is not None and epoch_id <= applied:
-            return  # at-least-once replay of an already-folded epoch
-        blacklist = (
-            state.where(F.col("click_count") >= self.threshold)
-            .select("user_id")
-            .distinct()
-        )
-        clean = batch.where(F.col("event_type") == "click").join(
-            F.broadcast(blacklist), "user_id", "left_anti"
+    def _merge(self, state: DataFrame, batch_df: DataFrame) -> DataFrame:
+        clean = batch_df.where(F.col("event_type") == "click").join(
+            F.broadcast(self._blacklist(state)), "user_id", "left_anti"
         )
         delta = clean.groupBy("day", "user_id", "ad_id").agg(
             F.count(F.lit(1)).alias("click_count")
         )
-        totals_next = (
+        return (
             state.select("day", "user_id", "ad_id", "click_count")
             .unionByName(delta)
             .groupBy("day", "user_id", "ad_id")
             .agg(F.sum("click_count").alias("click_count"))
-            .withColumn("applied_epoch", F.lit(epoch_id).cast("long"))
         )
-        from ..plans import audit as _audit
 
-        _audit.observe_micro_batch_frame("blacklist_loop_totals", totals_next)
-        # compacted dimension-sized state: few files (not 32 tiny
-        # shuffle-partition files), then a driver-side copy+rename
-        # promote instead of a second Spark job — see
-        # sources/upsert.py::_promote_state for the crash contract
-        from ..sources.upsert import _STATE_FILES, _promote_state
-
-        totals_next.coalesce(_STATE_FILES).write.mode("overwrite").parquet(
-            self.totals_dir + "_next"
-        )
-        _promote_state(spark, self.totals_dir)
+    # `run` resolves this attribute per call, so a caller may wrap it
+    process_batch = StagedStateFold.__call__
 
     def run(self, stream: DataFrame, checkpoint_dir: str) -> None:
         """Fold `stream` to completion through `run_bounded`.  The
@@ -516,15 +486,10 @@ def run_ad_module(
     (§1.3)."""
     import os as _os
 
-    from ..operators import behavior_model as bm
-    from ..sources import load_table
+    from ..modules import load_users
     from .stateful import final_totals, running_click_totals
 
-    users = bm.user_info(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "region"),
-    )
+    users = load_users(spark, sf_dir)
     path = f"{sf_dir}/events.parquet"
     tag = sf_dir.strip("/").split("/")[-1].replace(".", "_")
 

@@ -127,7 +127,7 @@ def test_run_task_session_outputs_match_uncheckpointed_plans(spark, sf_dir):
     params = TaskParams.from_task_json(TASK_JSON)
     actions = modules._actions_in_range(spark, sf_dir, params)
     sessions = sa.session_stats(actions)
-    filtered = sa.filter_sessions(sessions, modules._users(spark, sf_dir), params)
+    filtered = sa.filter_sessions(sessions, modules.load_users(spark, sf_dir), params)
     chosen = sa.session_random_extract(filtered, total=params.extract_count)
     top_cats = sa.top10_categories(actions)
     plain = {
@@ -160,7 +160,7 @@ def _ad_compositions(spark, sf_dir, task_json):
     params = TaskParams.from_task_json(task_json)
     clicks = ads.clicks(modules._actions_in_range(spark, sf_dir, params))
     per_user = ads.ad_user_click_count(clicks)
-    daily_city = ads.daily_city_clicks(per_user, modules._users(spark, sf_dir))
+    daily_city = ads.daily_city_clicks(per_user, modules.load_users(spark, sf_dir))
     return daily_city, {
         "ad_user_click_count": per_user,
         "ad_blacklist": ads.ad_blacklist(per_user),

@@ -6,9 +6,9 @@ too; an identical task resubmission compiles no code; and the package
 keeps ONE entry point each for lineage truncation (functions/ckpt.py),
 temporary conf overrides (session.scoped_conf), the bounded-stream
 lifecycle — start, checkpoint, width and await
-(streaming.ad_stream.run_bounded) — and small driver-side frames
-(sources.local_frame); and every public definition has a caller
-outside the tests."""
+(streaming.ad_stream.run_bounded) — small driver-side frames
+(sources.local_frame) and the staged-state fold (sources/upsert.py);
+and every public definition has a caller outside the tests."""
 
 from __future__ import annotations
 
@@ -238,6 +238,7 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
             "streaming/stateful.py::funnel_levels_stream",
         ),
         (r"\.parallelize\(", ("",), "sources/loaders.py::local_frame"),
+        (r"[\"']_next[\"']|_promote_state\(", ("",), "sources/upsert.py"),
     ],
     ids=[
         "lineage_truncation",
@@ -246,6 +247,7 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
         "bounded_stream_start",
         "stateful_python_state",
         "python_rdd_frame",
+        "staged_state_fold",
     ],
 )
 def test_one_entry_point_per_mechanism(pattern, scope, owner):
@@ -259,7 +261,10 @@ def test_one_entry_point_per_mechanism(pattern, scope, owner):
     funnel's sequential fold; every other stateful stream stays in
     the JVM, with no Python worker per key per batch.  Driver-side
     rows become frames through sources.local_frame, never through a
-    Python RDD whose every scan starts a Python worker."""
+    Python RDD whose every scan starts a Python worker.  Durable
+    state folds stage `<dir>_next` and promote it only inside
+    sources/upsert.py (StagedStateFold and its loader), so every fold
+    shares the epoch guard, the recovery and the crash hook."""
     owner_path, owner_lines = _owned_lines(owner)
     offenders = [
         f"{rel}:{n}: {line.strip()}"

@@ -97,7 +97,7 @@ def test_blacklist_feedback_loop_across_batches(spark, tmp_path):
     # compacted state: one row per (day, user_id, ad_id), regardless
     # of how many batches contributed — per-batch work is O(keys),
     # not O(stream history)
-    state = spark.read.parquet(loop.totals_dir)
+    state = spark.read.parquet(loop.table_dir)
     assert state.count() == state.select("day", "user_id", "ad_id").distinct().count()
 
 
@@ -121,6 +121,58 @@ def test_blacklist_replay_is_idempotent(spark, tmp_path):
     loop.process_batch(batch, epoch_id=1)  # genuinely new epoch counts
     assert loop.current_totals(spark).collect()[0]["click_count"] == 2
     assert {r["user_id"] for r in loop.current_blacklist(spark).collect()} == {7}
+
+
+def test_blacklist_crash_after_stage_recovers_on_replay(spark, tmp_path):
+    """The blacklist fold shares the staged-state protocol's crash
+    hook: epoch 1 raises AFTER its totals are committed to `_next` but
+    BEFORE the promote, and the at-least-once replay of epoch 1 must
+    leave the same totals and blacklist as an uninterrupted run."""
+    import pytest
+
+    def batch(rows):
+        return (
+            spark.createDataFrame(rows, SCHEMA)
+            .withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
+            .withColumn("ad_id", F.get_json_object("props", "$.k").cast("long") % 10)
+        )
+
+    t = datetime(2024, 1, 1, 10, 0)
+    b0 = batch(
+        [
+            (1, t, 1, "click", 0.0, '{"k": 1}'),
+            (2, t, 1, "click", 0.0, '{"k": 1}'),
+            (3, t, 2, "click", 0.0, '{"k": 1}'),
+        ]
+    )
+    b1 = batch(
+        [
+            (4, t, 1, "click", 0.0, '{"k": 1}'),  # user 1 already blacklisted
+            (5, t, 2, "click", 0.0, '{"k": 1}'),
+            (6, t, 3, "click", 0.0, '{"k": 2}'),
+        ]
+    )
+
+    def snapshot(loop):
+        return (
+            sorted(tuple(r) for r in loop.current_totals(spark).collect()),
+            sorted(r["user_id"] for r in loop.current_blacklist(spark).collect()),
+        )
+
+    clean = BlacklistLoop(os.path.join(str(tmp_path), "clean"), threshold=2)
+    clean.process_batch(b0, 0)
+    clean.process_batch(b1, 1)
+
+    loop = BlacklistLoop(os.path.join(str(tmp_path), "crash"), threshold=2)
+    loop.process_batch(b0, 0)
+    loop.fail_after_stage_epoch = 1
+    with pytest.raises(RuntimeError, match="injected crash"):
+        loop.process_batch(b1, 1)
+    assert os.path.exists(os.path.join(loop.table_dir + "_next", "_SUCCESS"))
+    assert loop.fail_after_stage_epoch is None  # fires once
+    loop.process_batch(b1, 1)  # the replayed epoch after the restart
+    assert snapshot(loop) == snapshot(clean)
+    assert snapshot(clean)[1] == [1, 2]
 
 
 def test_province_top3_per_batch_sql(spark, sf_dir, tmp_path):

@@ -297,7 +297,7 @@ def test_load_state_tolerates_pre_created_empty_dir(spark, tmp_path):
     d = str(tmp_path / "pre_created")
     os.makedirs(d)
     schema = T.StructType().add("k", T.LongType()).add("applied_epoch", T.LongType())
-    assert _load_state(spark, schema, d).count() == 0
+    assert _load_state(spark, schema, d)[0].count() == 0
 
 
 def test_first_batch_state_is_jvm_only_with_declared_schema(spark, tmp_path):
@@ -325,7 +325,7 @@ def test_first_batch_state_is_jvm_only_with_declared_schema(spark, tmp_path):
         ]
     )
     for declared, want in ((ddl, T.DataType.fromDDL(ddl)), (struct, struct)):
-        state = _load_state(spark, declared, absent)
+        state, _ = _load_state(spark, declared, absent)
         assert "ExistingRDD" not in executed_plan(state)
         assert state.schema == want
         assert state.count() == 0
