@@ -3,8 +3,8 @@
 `ckpt` is the package's ONLY lineage-truncation call — every shared
 frame and every loop round (pagerank, BFS, label propagation,
 k-means, the CC fixpoint, BPE) goes through it, so the
-SPARK_GRAFT_PAIR_CKPT lifecycle knob covers all of them.  `loop_scope`
-is the one loop-width policy the shuffle-bound loops share.
+SPARK_GRAFT_PAIR_CKPT lifecycle knob covers all of them; loop rounds
+reach it through functions/iterate.py, home of `loop_scope`.
 
 One load-bearing Spark fact drives this module: plan-level exchange
 reuse does NOT deduplicate RE-DERIVED DataFrame branches — only
@@ -19,12 +19,8 @@ until truncated).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
-from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..session import scoped_conf
+from pyspark.sql import DataFrame
 
 
 def ckpt(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -78,30 +74,3 @@ def ckpt(df: DataFrame, eager: bool = False) -> DataFrame:
         )
     return df.localCheckpoint(eager=eager)
 
-
-@contextmanager
-def loop_scope(spark: SparkSession, n_rows: int) -> Iterator[int]:
-    """Scope shuffle width and AQE for an iterative loop over an
-    `n_rows`-row working frame; yields the loop's partition count.
-
-    Width is one partition per ~64k rows, capped at the session's
-    width: at the session's core-count width a few-thousand-row frame
-    pays rounds x shuffles x cores near-empty tasks of pure
-    scheduling overhead (the round-8 profile: ~8 s of a 14 s CC
-    query), while a 10^8-row frame at cluster scale still gets wide
-    shuffles.  AQE is OFF for the body: adaptive re-planning runs
-    every shuffle as its own stage-job, so each round pays extra
-    driver round-trips for a frame whose width is already right-sized
-    (profiled 125 jobs / 12.3 s wall on embedding_dedup_clusters_lsh
-    at sf0.1).  Both confs come back on exit (`scoped_conf`); the
-    surrounding query keeps AQE for everything outside the loop."""
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(1, min(session_parts, 1 + n_rows // 65_536))
-    with scoped_conf(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": loop_parts,
-            "spark.sql.adaptive.enabled": "false",
-        },
-    ):
-        yield loop_parts

@@ -13,9 +13,9 @@ re-expressed for Spark:
      with a total-order tie-break (count DESC, left ASC, right ASC);
   3. apply the winning merge to every word with a single literal
      string `replace` over a SENTINEL-WRAPPED symbol string (below) —
-     a pure map stage — then truncate lineage (functions/ckpt.py) so
-     iteration i+1 reads materialized blocks instead of replaying all
-     prior rewrites.
+     a pure map stage — then truncate lineage (the loop driver,
+     functions/iterate.py) so iteration i+1 reads materialized blocks
+     instead of replaying all prior rewrites.
 
 Sentinel representation: a word's symbol sequence [s1, s2, ...] is
 stored as the string "\\x1f s1 \\x1f \\x1f s2 \\x1f ..." (each symbol
@@ -51,7 +51,8 @@ from pyspark.sql.types import (
 )
 
 from ..functions import qround
-from ..functions.ckpt import ckpt, loop_scope
+from ..functions.ckpt import ckpt
+from ..functions.iterate import iterate
 from ..sources import local_frame
 
 SENTINEL = "\x1f"
@@ -133,38 +134,31 @@ def bpe_learn_merges(
     `min_count` prunes the Zipf tail from the vocab working set (see
     _word_vocab)."""
     words = ckpt(_word_vocab(docs, min_count))
-    # Loop-scoped shuffle sizing (functions/ckpt.py::loop_scope): each
-    # iteration is one pair-count shuffle over the |vocab|-row frame
-    # plus a 1-row argmax — at the session's width with AQE on, every
-    # iteration paid ~4 driver job rounds of pure latency for frames
-    # AQE has nothing to adapt on.  The count is ~free — it also
-    # forces the lazy checkpoint ONCE, outside the timed iterations.
-    n_words = words.count()
     merges: list[tuple] = []
-    with loop_scope(spark, n_words):
-        for rank in range(1, num_merges + 1):
-            top = (
-                _pair_counts(words)
-                .orderBy(
-                    F.desc("pair_count"), F.asc("left_sym"), F.asc("right_sym")
-                )
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break
-            l, r, pc = top[0]["left_sym"], top[0]["right_sym"], top[0]["pair_count"]
-            merges.append((rank, l, r, l + r, pc))
-            words = ckpt(
-                words.select(
-                    F.replace(
-                        F.col("ws"),
-                        F.lit(f"{SENTINEL}{l}{SENTINEL}{SENTINEL}{r}{SENTINEL}"),
-                        F.lit(f"{SENTINEL}{l}{r}{SENTINEL}"),
-                    ).alias("ws"),
-                    "cnt",
-                )
-            )
+
+    def merge_round(words: DataFrame, rank: int) -> DataFrame | None:
+        top = (
+            _pair_counts(words)
+            .orderBy(F.desc("pair_count"), F.asc("left_sym"), F.asc("right_sym"))
+            .limit(1)
+            .collect()
+        )
+        if not top:
+            return None
+        l, r, pc = top[0]["left_sym"], top[0]["right_sym"], top[0]["pair_count"]
+        merges.append((rank, l, r, l + r, pc))
+        return words.select(
+            F.replace(
+                F.col("ws"),
+                F.lit(f"{SENTINEL}{l}{SENTINEL}{SENTINEL}{r}{SENTINEL}"),
+                F.lit(f"{SENTINEL}{l}{r}{SENTINEL}"),
+            ).alias("ws"),
+            "cnt",
+        )
+
+    # sized to the |vocab|-row frame; the count also forces the lazy
+    # checkpoint once, outside the rounds
+    iterate(words, merge_round, num_merges, n_rows=words.count())
     return local_frame(spark, merges, MERGE_SCHEMA)
 
 

@@ -653,15 +653,15 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 16) -> DataFrame:
     labels — a silently-unconverged result would let near-dup chains
     straddle a leakage-safe train/eval split downstream.
 
-    Lineage truncation goes through `functions.ckpt.ckpt`, so on a
+    The rounds run through `functions/iterate.py::iterate`, so on a
     long multi-round run over a real cluster
     SPARK_GRAFT_PAIR_CKPT=reliable (with a session checkpoint dir)
     moves the round checkpoints to durable storage — a lost executor
     mid-loop then no longer kills the job; results are identical
     (equality pytest-pinned)."""
-    from ..functions.ckpt import ckpt, loop_scope
+    from ..functions.ckpt import ckpt
+    from ..functions.iterate import iterate
 
-    spark = pairs.sparkSession
     # truncate the caller's pair pipeline BEFORE the symmetrization
     # union: its two branches (forward + flipped) are re-derived
     # subtrees, so without this the entire candidate-generation +
@@ -678,48 +678,26 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 16) -> DataFrame:
         .distinct()
         .withColumn("label", F.col("doc_id"))
     )
-    # lineage MUST be truncated every round: without a checkpoint the
-    # plan nests one level per iteration and analysis time explodes
-    # exponentially (a 12-round run never finished planning)
     sym = ckpt(sym, eager=True)
     labels = ckpt(labels, eager=True)
-    # Size the loop to the LABEL frame, not the session default
-    # (functions/ckpt.py::loop_scope); the count is free — the eager
-    # checkpoint above already materialized `labels`.
-    n_nodes = labels.count()
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with loop_scope(spark, n_nodes) as loop_parts:
-        if loop_parts < session_parts:
-            sym = ckpt(sym.repartition(loop_parts, "doc_b"), eager=True)
-            labels = ckpt(labels.repartition(loop_parts, "doc_id"), eager=True)
-        fixpoint = _cc_fixpoint_loop(sym, labels, max_iterations)
-    if fixpoint is None:
-        raise ClusterConvergenceError(
-            f"dedup_clusters did not reach the connected-components "
-            f"fixpoint within max_iterations={max_iterations}; labels "
-            f"would be wrong for components deeper than the budget — "
-            f"raise max_iterations (log2(diameter) rounds suffice)."
-        )
-    return fixpoint.select("doc_id", F.col("label").alias("cluster_id"))
+    session_parts = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
+    def co_partition(width: int) -> DataFrame:
+        # narrower than the session: pre-partition both join sides once
+        nonlocal sym
+        if width >= session_parts:
+            return labels
+        sym = ckpt(sym.repartition(width, "doc_b"), eager=True)
+        return ckpt(labels.repartition(width, "doc_id"), eager=True)
 
-def _cc_fixpoint_loop(
-    sym: DataFrame, labels: DataFrame, max_iterations: int
-) -> DataFrame | None:
-    """Min-label + pointer-jump rounds until no label changes;
-    returns the converged label frame, or None if the iteration
-    budget ran out first."""
-    from ..functions.ckpt import ckpt
-
-    for _ in range(max_iterations):
+    def cc_round(labels: DataFrame, _: int) -> DataFrame:
         neighbor_min = (
             sym.join(labels, sym.doc_b == labels.doc_id)
             .groupBy(F.col("doc_a").alias("doc_id"))
             .agg(F.min("label").alias("n_label"))
         )
-        # carry the round's starting label as `prev` so the
-        # convergence check below is a filter on the checkpointed
-        # frame, not a per-round self-join against the old labels
+        # carry the round's starting label as `prev`, so the
+        # convergence check is a filter on the checkpointed frame
         stepped = labels.join(neighbor_min, "doc_id", "left").select(
             "doc_id",
             F.col("label").alias("prev"),
@@ -742,36 +720,30 @@ def _cc_fixpoint_loop(
         parent = stepped.select(
             F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
         )
-        new_labels = (
-            stepped.join(parent, stepped.label == parent.p_id, "left")
-            .select(
-                "doc_id",
-                "prev",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
-                ).alias("label"),
-            )
+        return stepped.join(parent, stepped.label == parent.p_id, "left").select(
+            "doc_id",
+            "prev",
+            F.least(
+                F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
+            ).alias("label"),
         )
-        # LAZY round checkpoint + full count: the convergence count is
-        # the round's only action, so a lazy checkpoint materializes
-        # under it — ONE job per round instead of two (the eager
-        # materialization job + a count job; profiled on
-        # embedding_dedup_clusters_lsh: 24 loop jobs -> 12, and each
-        # round is pure job-floor at gate scale).  Full count, NOT
-        # limit(1).count(): the limit form plans a CollectLimit whose
-        # take-style execution probes 1 partition then escalates 4x at
-        # a job per probe — extra job rounds exactly when changed rows
-        # are rare (the convergence tail).  The lazy-ckpt broadcast
-        # race (functions/ckpt.py) does not apply: the count and the
-        # next round consume the frame strictly sequentially.
-        new_labels = ckpt(new_labels, eager=False)
-        changed = (
-            new_labels.where(F.col("label") != F.col("prev")).count()
+
+    # sized to the LABEL frame; `labels` is already materialized
+    fixpoint, converged = iterate(
+        co_partition,
+        cc_round,
+        max_iterations,
+        n_rows=labels.count(),
+        changed=lambda _: F.col("label") != F.col("prev"),
+    )
+    if not converged:
+        raise ClusterConvergenceError(
+            f"dedup_clusters did not reach the connected-components "
+            f"fixpoint within max_iterations={max_iterations}; labels "
+            f"would be wrong for components deeper than the budget — "
+            f"raise max_iterations (log2(diameter) rounds suffice)."
         )
-        labels = new_labels.drop("prev")
-        if changed == 0:
-            return labels
-    return None
+    return fixpoint.select("doc_id", F.col("label").alias("cluster_id"))
 
 
 def incremental_exact_dedup(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:

@@ -4,11 +4,10 @@ PageRank on the page-transition graph (edges = adjacent-page pairs
 from operators/page_flow.py, weights = transition counts).  The
 loop body is pure DataFrame algebra — join rank onto edges, weighted
 contribution sum, re-anchor on the node frame — so each iteration is
-one shuffle on `dst` plus a broadcast of the (tiny) rank-carrying
-node frame when AQE sizes it under the threshold; `ckpt`
-(functions/ckpt.py) truncates lineage every round exactly as
-operators/dedup.py::dedup_clusters does, so every loop here honors
-the SPARK_GRAFT_PAIR_CKPT local|reliable lifecycle knob.
+one shuffle on `dst` plus a broadcast of the (tiny) rank frame.
+Every loop here writes only its round; `functions/iterate.py::iterate`
+scopes, sizes and truncates it (`ckpt`), so every loop honors the
+SPARK_GRAFT_PAIR_CKPT local|reliable lifecycle knob.
 
 Simplified-PageRank contract (mirrored expression-for-expression by
 the unrolled-CTE oracle): dangling-node mass is NOT redistributed —
@@ -23,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import qround
 from ..functions.ckpt import ckpt
+from ..functions.iterate import iterate
 
 
 def pagerank(
@@ -55,35 +55,31 @@ def pagerank(
         .distinct()
         .transform(ckpt, eager=True)
     )
-    n_nodes = nodes.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
-        "node", (F.lit(1.0) / F.col("_n")).alias("rank")
-    )
-    # (1 - damping) in DECIMAL then one rounding to double — matches how
-    # the oracle's SQL literal `(1.0 - 0.85)` evaluates (decimal-exact
-    # 0.15 → nearest double), where Python's float subtraction
-    # 1.0 - 0.85 lands one ULP higher and the per-iteration constant
-    # would differ from the oracle's.
+    # 1/N and (1 - damping)/N as literals (IEEE division is the same
+    # in Python and the JVM); (1 - damping) in DECIMAL then one rounding
+    # to double — how the oracle's SQL literal `(1.0 - 0.85)` evaluates,
+    # where Python's float 1.0 - 0.85 lands one ULP higher.
     from decimal import Decimal
 
-    base = F.lit(float(Decimal(1) - Decimal(repr(damping)))) / F.col("_n")
-    for _ in range(iters):
+    n_nodes = nodes.count()
+    n = float(max(n_nodes, 1))
+    base = float(Decimal(1) - Decimal(repr(damping))) / n
+
+    def rank_round(ranks: DataFrame, _: int) -> DataFrame:
         contrib = (
             trans.join(ranks, trans["_s"] == ranks["node"])
             .groupBy("_t")
             .agg(F.sum(F.col("rank") * F.col("_p")).alias("_c"))
         )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["_t"], "left")
-            .crossJoin(F.broadcast(n_nodes))
-            .select(
-                "node",
-                (base + F.lit(damping) * F.coalesce(F.col("_c"), F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-            .transform(ckpt)
+        return nodes.join(contrib, nodes["node"] == contrib["_t"], "left").select(
+            "node",
+            (F.lit(base) + F.lit(damping) * F.coalesce(F.col("_c"), F.lit(0.0))).alias(
+                "rank"
+            ),
         )
+
+    start = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+    ranks, _ = iterate(start, rank_round, iters, n_rows=n_nodes)
     return ranks.select("node", qround(F.col("rank"), 6).alias("rank")).orderBy("node")
 
 
@@ -119,47 +115,40 @@ def bfs_depths(
     hops).
 
     Scale design — frontier expansion, the standard distributed BFS:
-    each round joins ONLY the current frontier (nodes first reached
-    last round) against the edge list, then anti-joins the visited
-    set; a node is therefore expanded exactly once, total work is
-    O(|E|) across all rounds, and no per-path state ever exists (the
-    recursive-CTE oracle enumerates paths and relies on per-step
+    the loop state is one `visited` frame with `depth`.  Round d joins
+    ONLY its frontier (`depth == d-1`) against the edge list and
+    merges what it reaches into `visited` at its minimum depth, so a
+    node is expanded exactly once and no per-path state ever exists
+    (the recursive-CTE oracle enumerates paths and relies on per-step
     dedup — fine for DuckDB on test SFs, but the path-free frontier
-    form is what survives a cyclic 100 TB graph).  `ckpt` pins each
-    frontier so iteration plans don't re-derive the upstream scan
-    (same trade as pagerank/dedup_clusters).  The loop exits early on
-    an empty frontier — `max_depth` bounds rounds, it doesn't pad
-    output."""
+    form is what survives a cyclic 100 TB graph).  The loop stops at
+    the first round that reaches no node (`depth == d` counts zero) —
+    `max_depth` bounds rounds, it doesn't pad output."""
     e = ckpt(
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).distinct(),
         eager=True,
     )
-    visited = ckpt(
+
+    def expand(visited: DataFrame, d: int) -> DataFrame:
+        frontier = visited.where(F.col("depth") == d - 1)
+        reached = frontier.join(e, frontier["node"] == e["_s"]).select(
+            F.col("_t").alias("node"), F.lit(d).cast("bigint").alias("depth")
+        )
+        return (
+            visited.unionByName(reached)
+            .groupBy("node")
+            .agg(F.min("depth").alias("depth"))
+        )
+
+    # the source is often derived from the edges' own upstream scan:
+    # pin it, since round 1 reads it twice
+    start = ckpt(
         source.select("node").withColumn("depth", F.lit(0).cast("bigint")),
         eager=True,
     )
-    frontier = visited
-    # one job per round (round 13, same protocol as the CC fixpoint):
-    # the frontier checkpoint is LAZY and the emptiness check a full
-    # count, so materialization and the loop decision share one job —
-    # previously each round paid three (eager frontier ckpt + an
-    # isEmpty take-probe + an eager visited ckpt).  The visited union
-    # is also lazy: it materializes under the NEXT round's count (or
-    # the final orderBy), strictly sequentially, so the lazy-ckpt
-    # parallel-broadcast race (functions/ckpt.py) does not apply.
-    for d in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["_s"])
-            .select(F.col("_t").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("depth", F.lit(d).cast("bigint"))
-            .transform(ckpt)
-        )
-        if nxt.count() == 0:
-            break
-        visited = ckpt(visited.unionByName(nxt))
-        frontier = nxt
+    visited, _ = iterate(
+        start, expand, max_depth, n_rows=e.count(), changed=lambda d: F.col("depth") == d
+    )
     return visited.orderBy("node")
 
 
@@ -273,16 +262,18 @@ def label_propagation(
         .transform(ckpt, eager=True)
     )
     w_top = Window.partitionBy("_u").orderBy(F.desc("_lw"), F.asc("label"))
-    for _ in range(rounds):
+
+    def relabel(labels: DataFrame, _: int) -> DataFrame:
         neigh = (
             both.join(labels, both["_v"] == labels["node"])
             .groupBy("_u", "label")
             .agg(F.sum("_w").alias("_lw"))
         )
-        labels = (
+        return (
             neigh.withColumn("_rn", F.row_number().over(w_top))
             .where(F.col("_rn") == 1)
             .select(F.col("_u").alias("node"), "label")
-            .transform(ckpt)
         )
+
+    labels, _ = iterate(labels, relabel, rounds, n_rows=labels.count())
     return labels.select("node", F.col("label").alias("community")).orderBy("node")

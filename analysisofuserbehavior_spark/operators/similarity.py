@@ -294,8 +294,9 @@ def kmeans_centroids(
     is a posexplode + avg keyed by (cluster, position) — one shuffle
     of |corpus|·dim scalars per round, which at 100 TB you would run
     on a sample (centroid quality needs only a representative
-    fraction, not the full corpus).  `ckpt` truncates the iterative
-    lineage each round.
+    fraction, not the full corpus).  The final centroids feed
+    ann_ivf_topk's parallel broadcast joins, so they are materialized
+    eagerly (the lazy-ckpt race in functions/ckpt.py).
 
     Returns (cluster_id, c_vec, c_norm).  Centroids are float means,
     so cross-engine SQL replay is NOT bit-stable (summation order);
@@ -303,6 +304,7 @@ def kmeans_centroids(
     instead of a hash oracle — the default first-k seeding stays the
     oracle-replayable path."""
     from ..functions.ckpt import ckpt
+    from ..functions.iterate import iterate
 
     v = _with_vec(embeddings, "vec_id", "v", "nv")
     cents = v.where(F.col("vec_id") < k).select(
@@ -311,7 +313,8 @@ def kmeans_centroids(
         F.col("nv").alias("c_norm"),
     )
     w_assign = Window.partitionBy("vec_id").orderBy(*_sim_order("c_sim", "cluster_id"))
-    for _ in range(iters):
+
+    def lloyd_round(cents: DataFrame, _: int) -> DataFrame:
         assigned = (
             v.join(F.broadcast(cents))
             .withColumn("c_sim", _paired_sim("v", "nv", "c_vec", "c_norm"))
@@ -319,7 +322,7 @@ def kmeans_centroids(
             .where(F.col("rn") == 1)
             .select("cluster_id", "v")
         )
-        cents = (
+        return (
             assigned.select("cluster_id", F.posexplode("v").alias("pos", "val"))
             .groupBy("cluster_id", "pos")
             .agg(F.avg("val").alias("val"))
@@ -330,9 +333,10 @@ def kmeans_centroids(
                 F.transform("pv", lambda s: s["val"]).alias("c_vec"),
             )
             .withColumn("c_norm", norm(F.col("c_vec")))
-            .transform(ckpt, eager=True)
         )
-    return cents
+
+    cents, _ = iterate(cents, lloyd_round, iters, n_rows=v.count())
+    return ckpt(cents, eager=True)
 
 
 def ann_ivf_topk(

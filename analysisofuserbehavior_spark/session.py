@@ -31,6 +31,7 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 _SHM_MIN_FREE_BYTES = 8 * 1024**3
 
 _SCRATCH_DIRS: list[str] = []
+_CKPT_CHECKSUM = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
 
 def _shm_usable() -> bool:
@@ -219,12 +220,9 @@ def get_spark(
         # engine's bounded replay runs use EPHEMERAL tmpfs checkpoints
         # that die with the job, so the integrity sidecars protect
         # nothing here; deployments with durable checkpoints on flaky
-        # storage re-enable via SPARK_GRAFT_CKPT_CHECKSUM=true (a
+        # storage re-enable them through `extra_conf` (a
         # durability/medium decision, not a core-count tune).
-        .config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false"),
-        )
+        .config(_CKPT_CHECKSUM, "false")
         # driver testdata parquet carries TIMESTAMP(NANOS) which Spark's
         # vectorized reader rejects; read as long nanos and convert in
         # the loader (sources/loaders.py) — DuckDB truncates the same way.
@@ -241,11 +239,8 @@ def get_spark(
         # Purely a client-boundary knob (guide §4: minimize JVM↔Python
         # chatter): plans, results and execution are bit-identical —
         # only error messages lose the "user code line" pointer.
-        # Debug sessions re-enable via SPARK_GRAFT_DF_DEBUG=true.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
-        )
+        # Debug sessions re-enable it through `extra_conf`.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -296,14 +291,9 @@ def streaming_checkpoint_location(spark: SparkSession, path: str) -> str:
     LOUDLY at start instead: with checksums off, the path must live
     under a medium whose durability contract is "dies with the job"
     (a registered scratch dir, tmpfs, or the system tmp).  Durable
-    checkpoints re-enable checksums (SPARK_GRAFT_CKPT_CHECKSUM=true
-    before session creation, or per-session conf) and then any path
-    passes."""
-    enabled = str(
-        spark.conf.get(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled", "true"
-        )
-    ).lower()
+    checkpoints re-enable checksums (get_spark's `extra_conf`, or
+    per-session conf) and then any path passes."""
+    enabled = str(spark.conf.get(_CKPT_CHECKSUM, "true")).lower()
     if enabled == "true":
         return path
     import tempfile
@@ -319,9 +309,8 @@ def streaming_checkpoint_location(spark: SparkSession, path: str) -> str:
             f"streaming checkpoint {path!r} (scheme {url.scheme!r}, "
             f"authority {url.netloc!r}) is not a local path, but this "
             "session runs with checkpoint-file checksums DISABLED — only "
-            "local ephemeral scratch may skip them.  Set "
-            "SPARK_GRAFT_CKPT_CHECKSUM=true (before session creation) "
-            "for durable checkpoints."
+            "local ephemeral scratch may skip them.  For durable checkpoints "
+            f"set {_CKPT_CHECKSUM}=true through get_spark(extra_conf=...)."
         )
     norm = os.path.abspath(local)
     bases = [*_SCRATCH_DIRS, "/dev/shm", tempfile.gettempdir()]
@@ -337,9 +326,8 @@ def streaming_checkpoint_location(spark: SparkSession, path: str) -> str:
         f"streaming checkpoint {path!r} is not under an ephemeral "
         "scratch base but this session runs with checkpoint-file "
         "checksums DISABLED — a durable checkpoint would silently "
-        "lose corruption detection.  Set SPARK_GRAFT_CKPT_CHECKSUM="
-        "true (before session creation) for durable checkpoints, or "
-        "checkpoint under session.scratch_dir()."
+        f"lose corruption detection.  Set {_CKPT_CHECKSUM}=true through "
+        "get_spark(extra_conf=...), or checkpoint under session.scratch_dir()."
     )
 
 

@@ -7,8 +7,9 @@ keeps ONE entry point each for lineage truncation (functions/ckpt.py),
 temporary conf overrides (session.scoped_conf), the bounded-stream
 lifecycle — start, checkpoint, width and await
 (streaming.ad_stream.run_bounded) — small driver-side frames
-(sources.local_frame) and the staged-state fold (sources/upsert.py);
-and every public definition has a caller outside the tests."""
+(sources.local_frame), the staged-state fold (sources/upsert.py) and
+the iterative-loop driver (functions/iterate.py); and every public
+definition has a caller outside the tests."""
 
 from __future__ import annotations
 
@@ -103,27 +104,20 @@ def test_checkpoint_file_checksums_default_off_and_env_overridable(spark):
     """Round-12 optimization: Spark 4.1's checkpoint-file checksums
     make every state-store delta close() await an async checksum
     future (thread-dump evidence in session.py) — off by default for
-    this engine's ephemeral tmpfs checkpoints, re-enabled for durable
-    deployments via SPARK_GRAFT_CKPT_CHECKSUM."""
+    this engine's ephemeral tmpfs checkpoints; durable deployments
+    re-enable them through get_spark(extra_conf=...)."""
     key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     assert spark.conf.get(key) == "false"
-    # the env override is read at session build time
-    from analysisofuserbehavior_spark import session as S
-    import os
-
-    assert os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false") == "false"
 
 
 def test_dataframe_debugging_default_off_and_env_overridable(spark):
     """Round-12 optimization: PySpark 4's per-API-call call-site
     capture costs 2-3 py4j round trips per DataFrame/Column call
     (evidence in session.py) — off by default; debug sessions
-    re-enable via SPARK_GRAFT_DF_DEBUG=true.  Only error-message
-    enrichment is affected; plans and results are identical."""
+    re-enable it through get_spark(extra_conf=...).  Only
+    error-message enrichment is affected; plans and results are
+    identical."""
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
-    import os
-
-    assert os.environ.get("SPARK_GRAFT_DF_DEBUG", "false") == "false"
 
 
 def test_identical_task_resubmission_compiles_no_code(spark, sf_dir):
@@ -239,6 +233,7 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
         ),
         (r"\.parallelize\(", ("",), "sources/loaders.py::local_frame"),
         (r"[\"']_next[\"']|_promote_state\(", ("",), "sources/upsert.py"),
+        (r"loop_scope\(", ("",), "functions/iterate.py"),
     ],
     ids=[
         "lineage_truncation",
@@ -248,6 +243,7 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
         "stateful_python_state",
         "python_rdd_frame",
         "staged_state_fold",
+        "iterative_loop",
     ],
 )
 def test_one_entry_point_per_mechanism(pattern, scope, owner):
@@ -264,7 +260,11 @@ def test_one_entry_point_per_mechanism(pattern, scope, owner):
     Python RDD whose every scan starts a Python worker.  Durable
     state folds stage `<dir>_next` and promote it only inside
     sources/upsert.py (StagedStateFold and its loader), so every fold
-    shares the epoch guard, the recovery and the crash hook."""
+    shares the epoch guard, the recovery and the crash hook.  Every
+    iterative loop runs through functions.iterate.iterate, the only
+    place that enters the loop-width scope, so every loop shares one
+    width and AQE policy, the per-round truncation and the
+    convergence check."""
     owner_path, owner_lines = _owned_lines(owner)
     offenders = [
         f"{rel}:{n}: {line.strip()}"
