@@ -51,8 +51,10 @@ def actions(events: DataFrame) -> DataFrame:
     )
 
 
-def user_info(customer: DataFrame, nation: DataFrame, region: DataFrame) -> DataFrame:
-    """user_id, age, professional, city, area, sex (user_info ⋈ city_info)."""
+def user_dim(customer: DataFrame, nation: DataFrame, region: DataFrame) -> DataFrame:
+    """user_id, professional, city_id, city, area: the join half of
+    `user_info` (customer ⋈ city_info).  `modules.load_users` memoizes
+    this frame; only joined columns belong here (see `user_attrs`)."""
     nat = (
         nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .select(
@@ -66,14 +68,36 @@ def user_info(customer: DataFrame, nation: DataFrame, region: DataFrame) -> Data
         customer.join(F.broadcast(nat), customer.c_nationkey == nat.nationkey)
         .select(
             F.col("c_custkey").alias("user_id"),
-            (F.col("c_custkey") % 60).alias("age"),
             F.col("c_mktsegment").alias("professional"),
             F.col("city_id"),
             F.col("city"),
             F.col("area"),
-            F.when(F.col("c_custkey") % 2 == 0, "male").otherwise("female").alias("sex"),
         )
     )
+
+
+def user_attrs(dim: DataFrame) -> DataFrame:
+    """The row-local half of `user_info`: `age` and `sex` as
+    expressions over `user_id`, on top of a `user_dim` frame.  Kept
+    as expressions, not stored columns, so a task's age/sex predicate
+    stays a predicate on `user_id` that Catalyst can infer across the
+    user join onto the events side."""
+    uid = F.col("user_id")
+    return dim.select(
+        uid,
+        (uid % 60).alias("age"),
+        "professional",
+        "city_id",
+        "city",
+        "area",
+        F.when(uid % 2 == 0, "male").otherwise("female").alias("sex"),
+    )
+
+
+def user_info(customer: DataFrame, nation: DataFrame, region: DataFrame) -> DataFrame:
+    """user_id, age, professional, city_id, city, area, sex
+    (user_info ⋈ city_info)."""
+    return user_attrs(user_dim(customer, nation, region))
 
 
 def product_info(part: DataFrame) -> DataFrame:

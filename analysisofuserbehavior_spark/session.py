@@ -338,10 +338,17 @@ def release_query_resources(spark: SparkSession) -> None:
     lazy localCheckpoint blocks are RDD-level MEMORY_AND_DISK blocks
     that the ContextCleaner reclaims only after Python drops the
     DataFrame refs, so a forced collection here is what actually
-    frees executor storage.  Centralized (round-6 ADVICE) so every
-    runner shares the one correct lifecycle instead of each knowing
-    the localCheckpoint subtlety."""
+    frees executor storage.  The memoized user dimension
+    (`modules.load_users`) is one such ref: dropping it here gives
+    every runner's next entry a cold derivation, which is what a
+    per-entry measurement wants; a driver that serves tasks keeps
+    the memo by not calling this between them.  Centralized (round-6
+    ADVICE) so every runner shares the one correct lifecycle instead
+    of each knowing the localCheckpoint subtlety."""
     import gc
 
+    from .modules import _USER_DIMS
+
+    _USER_DIMS.clear()
     spark.catalog.clearCache()
     gc.collect()

@@ -28,8 +28,8 @@ The merge steps:
 - `Scd2Sink` — the latest CDC row per key (`max_by`), folded into a
   versioned history by `operators.scd.scd2_apply`.
 - `streaming.ad_stream.BlacklistLoop` — the batch anti-joined against
-  the blacklist derived from the loaded totals, counted per
-  (day, user, ad), and summed into the totals.
+  the blacklist derived from the loaded totals, and its click rows
+  summed into the totals per (day, user, ad) in one aggregate.
 
 `jdbc_upsert_foreach_batch` is the production JDBC path: stage the
 micro-batch with a batched write, then issue one set-oriented MERGE

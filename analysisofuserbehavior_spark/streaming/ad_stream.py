@@ -327,8 +327,11 @@ def province_top3_per_batch(
     java:739-845: per-batch RDD→DF→registerTempTable→window SQL;
     its `WHERE rank>=3` bug (:840) fixed to `<=3`).  foreachBatch
     receives a BATCH DataFrame, so the full SQL surface (window
-    functions included) applies; results land partitioned by epoch
-    for idempotent replay.
+    functions included) applies.  Each epoch overwrites its own
+    `out_dir/epoch=<id>` partition, so a batch replayed after a crash
+    between the sink write and the commit-log entry replaces its
+    first write instead of adding to it; reading `out_dir` yields
+    the `epoch` column by partition discovery.
 
     The user dimension is a SNAPSHOT taken at query start: it is
     materialized once (`ckpt(..., eager=True)`) before the stream
@@ -363,9 +366,8 @@ def province_top3_per_batch(
         )
         from ..plans import audit as _audit
 
-        out = top3.withColumn("epoch", F.lit(epoch_id))
-        _audit.observe_micro_batch_frame("province_top3_batch", out)
-        out.write.mode("append").parquet(out_dir)
+        _audit.observe_micro_batch_frame("province_top3_batch", top3)
+        top3.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
 
     run_bounded(
         stream.writeStream.foreachBatch(run_batch),
@@ -389,8 +391,8 @@ class BlacklistLoop(StagedStateFold):
 
     - Per-batch work is O(distinct keys + batch), NOT O(stream
       history): the state dir always holds the compacted totals, so
-      each batch reads |keys| rows, unions the batch delta, and
-      re-aggregates once.  (The previous design appended raw
+      each batch reads |keys| rows, unions the batch's clean click
+      rows, and aggregates once.  (The previous design appended raw
       per-batch counts and re-aggregated the whole append-only dir
       every batch — O(history) on a long-lived stream.)
     - The durable protocol is `sources.upsert.StagedStateFold`'s:
@@ -425,31 +427,34 @@ class BlacklistLoop(StagedStateFold):
     def _state_schema(self, batch_df: DataFrame) -> str:
         return self._STATE_SCHEMA
 
-    def _blacklist(self, totals: DataFrame) -> DataFrame:
-        return (
-            totals.where(F.col("click_count") >= self.threshold)
-            .select("user_id")
-            .distinct()
-        )
+    def _blacklisted(self, totals: DataFrame) -> DataFrame:
+        """user_id of every totals row at or over the threshold, one
+        row per such (day, user, ad) key."""
+        return totals.where(F.col("click_count") >= self.threshold).select("user_id")
 
     def current_totals(self, spark: SparkSession) -> DataFrame:
         state, _ = _load_state(spark, self._STATE_SCHEMA, self.table_dir)
         return state.select("day", "user_id", "ad_id", "click_count")
 
     def current_blacklist(self, spark: SparkSession) -> DataFrame:
-        return self._blacklist(self.current_totals(spark))
+        return self._blacklisted(self.current_totals(spark)).distinct()
 
     def _merge(self, state: DataFrame, batch_df: DataFrame) -> DataFrame:
-        clean = batch_df.where(F.col("event_type") == "click").join(
-            F.broadcast(self._blacklist(state)), "user_id", "left_anti"
-        )
-        delta = clean.groupBy("day", "user_id", "ad_id").agg(
-            F.count(F.lit(1)).alias("click_count")
+        """One aggregate per fold: the batch's clean click rows, each a
+        BIGINT `click_count` of 1, are summed into the state in the
+        same groupBy that re-compacts it (exact integer sums, so the
+        totals equal counting the delta first).  The anti-join needs
+        no `distinct`: duplicate blacklist keys drop the same rows."""
+        keys = ("day", "user_id", "ad_id")
+        clean = (
+            batch_df.where(F.col("event_type") == "click")
+            .join(F.broadcast(self._blacklisted(state)), "user_id", "left_anti")
+            .select(*keys, F.lit(1).cast("long").alias("click_count"))
         )
         return (
-            state.select("day", "user_id", "ad_id", "click_count")
-            .unionByName(delta)
-            .groupBy("day", "user_id", "ad_id")
+            state.select(*keys, "click_count")
+            .unionByName(clean)
+            .groupBy(*keys)
             .agg(F.sum("click_count").alias("click_count"))
         )
 

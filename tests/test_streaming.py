@@ -213,6 +213,39 @@ def test_province_top3_per_batch_sql(spark, sf_dir, tmp_path):
         assert not re.search(r"FileScan[^\n]*(customer|nation|region)", plan), plan
 
 
+def test_province_top3_per_batch_replay_overwrites_its_epoch(spark, sf_dir, tmp_path):
+    """A batch replayed after a crash between its sink write and its
+    commit-log entry rewrites its own epoch instead of adding to it:
+    with the checkpoint's last commit deleted, a restart re-runs that
+    batch and the output equals the uninterrupted run's."""
+    from analysisofuserbehavior_spark.modules import load_users
+    from analysisofuserbehavior_spark.sources import load_table
+    from analysisofuserbehavior_spark.streaming.ad_stream import province_top3_per_batch
+
+    events = load_table(spark, sf_dir, "events")
+    src = str(tmp_path / "src")
+    for i in range(3):
+        events.where(F.col("event_id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
+    users = load_users(spark, sf_dir)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def run():
+        province_top3_per_batch(
+            read_event_stream(spark, src, max_files_per_trigger=1), users, out, ckpt
+        )
+        return sorted(map(tuple, spark.read.parquet(out).collect()))
+
+    clean = run()
+    assert {r[-1] for r in clean} == {0, 1, 2}
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    assert run() == clean
+    assert os.path.exists(os.path.join(commits, str(last)))  # the batch re-ran
+
+
 def test_watermark_drops_late_events(spark, tmp_path):
     """An event arriving in a later batch with event-time older than
     the watermark horizon must NOT update its (closed) window in

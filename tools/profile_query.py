@@ -5,7 +5,10 @@ completed stage from the status REST API: stage id, name, task count,
 executor run time, shuffle bytes, input bytes — the data the optimization guide (§1, §7) says to collect
 before touching a plan.  Beside the job and stage lists it prints the
 exact number of whole-stage codegen compiles the last run paid
-(CodegenMetrics' compile count; 0 when every class was cached).
+(CodegenMetrics' compile count; 0 when every class was cached), and
+how many jobs the last run launched while the query function built
+its plan (eager inner actions, and the shuffles a lazy `ckpt` runs
+under AQE at construction) versus while the noop sink ran.
 
 Usage:
     python tools/profile_query.py <query> [--runs 2]
@@ -54,21 +57,37 @@ def main() -> None:
 
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
+    sc = spark.sparkContext
+
+    def phase(group: str | None) -> None:
+        """Tag the jobs that follow with `group` (None: untagged)."""
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        sc.setJobDescription(group and f"{args.query}: {group}")
+
     times = []
     mark = -1
     jmark = -1
     cmark = 0
     for i in range(args.runs):
-        if i == args.runs - 1:
+        last = i == args.runs - 1
+        if last:
             mark = max((s["stageId"] for s in stages()), default=-1)
             jmark = max((j["jobId"] for j in jobs()), default=-1)
             cmark = compiles.getCount()
         t0 = time.perf_counter()
-        QUERIES[args.query](spark, args.sf).write.format("noop").mode("overwrite").save()
+        phase("build" if last else None)
+        df = QUERIES[args.query](spark, args.sf)
+        phase("sink" if last else None)
+        df.write.format("noop").mode("overwrite").save()
+        phase(None)
         times.append(round(time.perf_counter() - t0, 3))
+        del df
         release_query_resources(spark)
     print(f"runs: {times}")
     print(f"codegen compiles in last run: {compiles.getCount() - cmark}")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job groups are listener-fed
+    build, sink = (len(sc.statusTracker().getJobIdsForGroup(g)) for g in ("build", "sink"))
+    print(f"jobs in last run: {build} while building the plan, {sink} in the noop sink")
 
     js = [j for j in jobs() if j["jobId"] > jmark]
     print(f"\n== {len(js)} jobs in last run ==")
