@@ -22,6 +22,11 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ..session import input_bytes, input_width, label_checkpoint, scoped_conf
+
+_AQE = "spark.sql.adaptive.enabled"
+_PARTS = "spark.sql.shuffle.partitions"
+
 
 def ckpt(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialize `df` exactly once for all downstream branches.
@@ -58,19 +63,45 @@ def ckpt(df: DataFrame, eager: bool = False) -> DataFrame:
       distributed write+read; right for 1000-executor runs.  Raises
       with a clear message if no checkpoint dir is set.
     Both strategies truncate lineage to a LogicalRDD, so every plan
-    property above holds identically."""
+    property above holds identically.
+
+    Width: under AQE a checkpoint is not lazy for shuffles — planning
+    the adaptive query runs every exchange below it at construction,
+    one job each, and an eager one adds its own.  So when the plan's
+    input fills fewer partitions than the session width
+    (`session.input_width`), the checkpoint is planned statically at
+    that width: AQE off and shuffle.partitions narrowed for the build
+    (`scoped_conf`).  A lazy checkpoint then runs no job at
+    construction and an eager one exactly one (plus one per broadcast
+    below it).  An unknown input, a wide one, or a session with AQE
+    already off (a `loop_scope` round) keeps the session's confs.
+    The result is labelled with its input bytes, so later plans over
+    it are sized by its origin."""
     mode = os.environ.get("SPARK_GRAFT_PAIR_CKPT", "local")
+    spark = df.sparkSession
     if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().checkpointDir().isEmpty():
+        if spark.sparkContext._jsc.sc().checkpointDir().isEmpty():
             raise ValueError(
                 "SPARK_GRAFT_PAIR_CKPT=reliable requires "
                 "spark.sparkContext.setCheckpointDir(...) to be set first"
             )
-        return df.checkpoint(eager=eager)
-    if mode != "local":
+    elif mode != "local":
         raise ValueError(
             f"SPARK_GRAFT_PAIR_CKPT must be 'local' or 'reliable', got {mode!r}"
         )
-    return df.localCheckpoint(eager=eager)
+    origin, static = None, {}
+    if spark.conf.get(_AQE).lower() == "true":
+        origin = input_bytes(df)
+        width = input_width(spark, origin)
+        if width is not None and width < int(spark.conf.get(_PARTS)):
+            static = {_AQE: "false", _PARTS: width}
+    with scoped_conf(spark, static):
+        out = (
+            df.checkpoint(eager=eager)
+            if mode == "reliable"
+            else df.localCheckpoint(eager=eager)
+        )
+    if origin is not None:
+        label_checkpoint(out, origin)
+    return out
 

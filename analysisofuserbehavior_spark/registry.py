@@ -2372,8 +2372,8 @@ def q_streaming_late_event_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n",
                 )
             )
-            # each run's width is min(8, session width), the same for
-            # both: the first run's is what the checkpoint pins
+            # each run derives its own width from the files present
+            # (run_bounded); the first run's is what the checkpoint pins
             run_bounded(
                 agg.writeStream.outputMode("append")
                 .format("parquet")
@@ -4152,8 +4152,9 @@ def q_streaming_funnel_within_window(spark: SparkSession, sf_dir: str) -> DataFr
         "sfunnel_q_",
     ) as r:
         # state_partitions=None: keep the SESSION width.  The default
-        # cap of 8 is right for dimension-sized state (its per-store
-        # open/commit overhead dominates); the funnel's state is
+        # width (min of 8, the session width and the input width) is
+        # right for dimension-sized state (its per-store open/commit
+        # overhead dominates); the funnel's state is
         # USER-sized (~|users| keys) and each key pays ~0.5 ms of
         # python-boundary transport (per-key state JSON + pandas
         # slicing, measured via the stage profile: 18.4 s exec / 3.4 s

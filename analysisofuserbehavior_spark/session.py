@@ -18,10 +18,11 @@ set here once:
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -275,6 +276,122 @@ def scoped_conf(
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, value)
+
+
+# `ckpt` names each checkpointed RDD after its origin plan's input
+# bytes: the LogicalRDD's own stats are the optimizer's estimate of
+# the origin (a join estimated as the product of its sides reported
+# ~813 GB for the ~0.3 MB user dimension).
+_CKPT_ORIGIN = re.compile(r"ckpt of (\d+) input bytes")
+
+
+def label_checkpoint(df: DataFrame, n_bytes: int) -> None:
+    """Record on `df` — a frame `ckpt` just returned — the input bytes
+    of the plan it truncated, so `input_bytes` sizes later plans over
+    its blocks by their origin."""
+    df._jdf.queryExecution().analyzed().rdd().setName(  # noqa: SLF001
+        f"ckpt of {n_bytes} input bytes"
+    )
+
+
+def _local_file_bytes(path: str, glob_filter: str | None) -> int | None:
+    """Summed sizes of the files a file source reads under the local
+    `path` (a file, a directory or a glob), skipping the names Spark's
+    file index hides; None for a non-local or missing path (a stream
+    that starts before its source exists has no size to go by)."""
+    import glob
+    from fnmatch import fnmatchcase
+    from urllib.parse import urlparse
+
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+
+    def visible(name: str) -> bool:
+        return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+    roots = glob.glob(url.path if url.scheme else path)
+    if not roots:
+        return None
+    total = 0
+    for root in roots:
+        walk = (
+            [(os.path.dirname(root), [], [os.path.basename(root)])]
+            if os.path.isfile(root)
+            else os.walk(root)
+        )
+        for d, dirs, files in walk:
+            dirs[:] = [s for s in dirs if visible(s)]
+            total += sum(
+                os.path.getsize(os.path.join(d, f))
+                for f in files
+                if visible(f) and (glob_filter is None or fnmatchcase(f, glob_filter))
+            )
+    return total
+
+
+def _leaf_bytes(leaf) -> int | None:
+    """Bytes a base relation reads: a file scan's files, a local
+    relation's rows, a file-source stream's files, a checkpoint's
+    origin; None for any other leaf."""
+    kind = leaf.nodeName()
+    if kind == "LogicalRelation":
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() == "HadoopFsRelation":
+            return int(rel.location().sizeInBytes())
+    elif kind == "LocalRelation":
+        return int(str(leaf.stats().sizeInBytes()))
+    elif kind == "LogicalRDD":
+        label = _CKPT_ORIGIN.fullmatch(leaf.rdd().name() or "")
+        if label:
+            return int(label.group(1))
+    elif kind == "StreamingRelation":
+        options = leaf.dataSource().options()
+        path = options.get("path")
+        if path.isDefined():
+            glob_filter = options.get("pathGlobFilter")
+            return _local_file_bytes(
+                path.get(), glob_filter.get() if glob_filter.isDefined() else None
+            )
+    return None
+
+
+def input_bytes(df: DataFrame) -> int | None:
+    """Summed bytes of the base relations `df`'s plan reads (see
+    `_leaf_bytes`), or None when any leaf is unknown — a generated
+    range, a non-file stream, an RDD — or a subquery hides leaves."""
+    plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+    patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    if plan.containsPattern(patterns.PLAN_EXPRESSION()):
+        return None
+    total = 0
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        n = _leaf_bytes(leaves.next())
+        if n is None:
+            return None
+        total += n
+    return total
+
+
+def input_width(spark: SparkSession, n_bytes: int | None) -> int | None:
+    """The width a scope reading `n_bytes` needs: one partition per
+    Spark's advisory partition size (AQE's own coalescing target),
+    capped at the session's shuffle.partitions; None when the input
+    is unknown (`input_bytes` returned None), which leaves the scope
+    as it is.
+
+    Below the job floor a partition costs a task per stage and a
+    state store per stateful operator whatever it holds, so a
+    few-MB input at core-count width pays for empty partitions.
+    `ckpt` and `run_bounded` narrow to this width; neither widens."""
+    if n_bytes is None:
+        return None
+    unit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return min(session, max(1, -(-n_bytes // unit)))
 
 
 def streaming_checkpoint_location(spark: SparkSession, path: str) -> str:

@@ -44,8 +44,12 @@ def test_jvm_tmpdir_is_per_process_and_sweep_registered(tmp_path, monkeypatch):
 
 def test_stream_run_restores_unset_shuffle_partitions(spark, tmp_path):
     """run_to_completion's state width is min(state_partitions,
-    session width) — the state operators' progress reports it — and
-    the session's width comes back afterwards."""
+    session width, input width) — the state operators' progress
+    reports it — and the session's width comes back afterwards.  The
+    input width is one partition per advisory partition size of the
+    files the stream reads: a tiny source fills one, and the same
+    source under an advisory size of a third of its bytes fills
+    three."""
     import time
 
     from pyspark.sql import functions as F
@@ -78,16 +82,23 @@ def test_stream_run_restores_unset_shuffle_partitions(spark, tmp_path):
     spark.range(10).select(
         F.col("id").alias("user_id"), F.lit(1).alias("n")
     ).write.parquet(src)
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    n_bytes = S.input_bytes(spark.readStream.schema("user_id long, n int").parquet(src))
     widths = Widths()
     spark.streams.addListener(widths)
     try:
-        for session_parts, want in ((4, 4), (16, 8)):
+        for session_parts, unit, want in (
+            (4, None, 1),
+            (16, None, 1),
+            (16, -(-n_bytes // 3), 3),
+            (2, -(-n_bytes // 3), 2),
+        ):
             stream = (
                 spark.readStream.schema("user_id long, n int").parquet(src)
                 .groupBy("user_id").agg(F.sum("n").alias("total"))
             )
-            name = f"t_restore_parts_{session_parts}"
-            with S.scoped_conf(spark, {key: session_parts}):
+            name = f"t_restore_parts_{session_parts}_{unit}"
+            with S.scoped_conf(spark, {key: session_parts, advisory: unit}):
                 out = run_to_completion(stream, name, state_partitions=8)
                 assert out.count() == 10
                 assert spark.conf.get(key) == str(session_parts)
@@ -234,6 +245,7 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
         (r"\.parallelize\(", ("",), "sources/loaders.py::local_frame"),
         (r"[\"']_next[\"']|_promote_state\(", ("",), "sources/upsert.py"),
         (r"loop_scope\(", ("",), "functions/iterate.py"),
+        (r"advisoryPartitionSizeInBytes", ("",), "session.py::input_width"),
     ],
     ids=[
         "lineage_truncation",
@@ -244,6 +256,7 @@ def _owned_lines(owner: str) -> tuple[str, range | None]:
         "python_rdd_frame",
         "staged_state_fold",
         "iterative_loop",
+        "input_width",
     ],
 )
 def test_one_entry_point_per_mechanism(pattern, scope, owner):
@@ -264,7 +277,9 @@ def test_one_entry_point_per_mechanism(pattern, scope, owner):
     iterative loop runs through functions.iterate.iterate, the only
     place that enters the loop-width scope, so every loop shares one
     width and AQE policy, the per-round truncation and the
-    convergence check."""
+    convergence check.  Only session.input_width turns input bytes
+    into a width (Spark's advisory partition size is its one unit), so
+    checkpoints and bounded streams share one sizing policy."""
     owner_path, owner_lines = _owned_lines(owner)
     offenders = [
         f"{rel}:{n}: {line.strip()}"
